@@ -268,7 +268,8 @@ def _decode_pval(pval, ptype):
 def _partition_array(pval, ptype, n_rows):
     """Arrow column re-attaching a log-resident partition value, decoded
     from its hive directory encoding and cast per the recorded DDL type
-    (the same round-trip read_snapshot_partitioned performs)."""
+    (the same round-trip txnlog.read_snapshot performs for a
+    partitioned table)."""
     import pyarrow as pa
 
     arrow_t = _partition_arrow_type(ptype)

@@ -43,6 +43,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 
@@ -511,50 +512,108 @@ def snapshot_files(path: str, version: int | None = None) -> list[str]:
     return sorted(os.path.join(_data_dir(path), f) for f in live)
 
 
-def read_snapshot(spark, path: str, version: int | None = None) -> DataFrame:
-    """DataFrame over the snapshot's file list (empty snapshot → error;
-    create the table with a first commit before reading).
-
-    Reads with mergeSchema so commits carrying EVOLVED schemas (columns
-    added over the table's lifetime) union into one superset schema with
-    NULL backfill — the read-side half of schema evolution; cost is one
-    footer read per live file, which the snapshot already enumerates.
-
-    Files carrying a deletion vector (txn_delete_dv) are read MERGE-ON-
-    READ: their DV'd row positions are anti-joined out via the parquet
-    ``_metadata.row_index`` column. Tables without DVs (the common case)
-    take the plain scan — byte-identical plan to before DVs existed."""
+def _check_horizon(path: str, version: int | None) -> None:
+    """Every snapshot read refuses a version below the vacuum horizon UP
+    FRONT — its files may be gone, and a mid-scan missing-file error
+    would not say why."""
     if version is not None and version < vacuum_horizon(path):
         raise ValueError(
             f"version {version} of {path} was vacuumed (horizon "
             f"{vacuum_horizon(path)})"
         )
-    v_max = current_version(path) if version is None else version
-    live, ptype, props = _fold_log3(path, v_max)
-    if ptype is not None:
-        # Partitioned table: the partition VALUE lives in the log, not
-        # the files — a raw scan would silently DROP the column. Delegate
-        # to the re-attaching read (the column name rides as a property;
-        # legacy partitioned tables without it must use the explicit
-        # form, loudly).
-        pcol = props.get("partition.column")
-        if pcol is None:
-            raise ValueError(
-                f"{path} is partitioned but the log predates the "
-                "partition.column property — use read_snapshot_partitioned"
-                "(spark, path, partition_col) explicitly"
-            )
-        return read_snapshot_partitioned(spark, path, pcol, version)
-    files = sorted(os.path.join(_data_dir(path), f) for f in live)
+
+
+def read_snapshot(
+    spark, path: str, version: int | None = None, where: dict | None = None
+) -> DataFrame:
+    """DataFrame over the snapshot at ``version`` (default: latest); an
+    empty snapshot is an error (create the table with a first commit).
+
+    Reads with mergeSchema so commits carrying EVOLVED schemas (columns
+    added over the table's lifetime) union into one superset schema with
+    NULL backfill — the read-side half of schema evolution. Files
+    carrying a deletion vector (txn_delete_dv) are read MERGE-ON-READ
+    (_read_files_dv). A partitioned table (``partition.column``
+    property) gets its log-resident partition column re-attached.
+    Columns come back under the logical names AS OF this version.
+
+    ``where`` maps a LOGICAL column to an inclusive ``(lo, hi)`` range or
+    a list of values (SQL IN; on the partition column None selects the
+    NULL partition) and prunes FILES, never rows — the caller still
+    applies the exact row predicate. The snapshot's own metadata decides
+    how to prune (see _candidates): partition values, recorded zone
+    maps, bloom sidecars, and files the log records as zero-row. When
+    nothing survives, the result is empty with the logical schema.
+    Candidates are planned on the driver over the folded log — or, when
+    the newest checkpoint at or below the version is MULTI-PART,
+    distributed over its parquet parts (scan_candidates_df), so planning
+    a selective read of a 10⁶-file table never folds the live set on the
+    driver. ``where=None`` reads every live file."""
+    _check_horizon(path, version)
+    v = current_version(path) if version is None else version
+    man = None
+    if where is not None:
+        ckpt_v = _latest_checkpoint_at_or_below(path, v)
+        man = _checkpoint_manifest(path, ckpt_v) if ckpt_v >= 0 else None
+    if man is not None and man.get("n_live", 0) > CHECKPOINT_ROWS_PER_PART:
+        _, ptype, props = _fold_props_only(path, v)
+        files = {
+            r["n"]: {
+                "p": json.loads(r["p"]) if r["p"] is not None else None,
+                "dv": json.loads(r["dv"]) if r["dv"] else None,
+            }
+            for r in scan_candidates_df(spark, path, where, v)
+            .select("n", "p", "dv")
+            .collect()
+        }
+    else:
+        files, ptype, props = _fold_log3(path, v)
+        if where is not None:
+            files = {n: files[n] for n in _candidates(path, files, props, where)}
     if not files:
-        raise ValueError(f"no data at version {version!r} of {path}")
-    # column mapping: files carry PHYSICAL names; project to the logical
-    # schema AS OF this version (props fold version-by-version, so time
-    # travel shows each snapshot under the schema it had)
-    return _apply_colmap(
-        _read_files_dv(spark, path, files, snapshot_dvs(path, v_max), props),
-        props,
-    )
+        if where is None:
+            raise ValueError(f"no data at version {version!r} of {path}")
+        return read_snapshot(spark, path, v).limit(0)
+    return _scan_snapshot(spark, path, files, ptype, props)
+
+
+def _scan_snapshot(spark, path: str, files: dict, ptype, props: dict) -> DataFrame:
+    """The one snapshot scan builder. ``files`` maps live file name →
+    fold state (``p`` partition value, ``dv`` deletion-vector ref).
+    Unpartitioned files read as ONE DV-aware scan. A partitioned table
+    reads one scan per partition value with the typed value re-attached
+    (the value lives in the LOG, not the file), unioned by name with
+    NULL-fill for columns a group lacks (a later partition's append may
+    have evolved the schema). Then the physical → logical projection."""
+    from functools import reduce
+
+    data = _data_dir(path)
+    dvmap = {n: d["dv"] for n, d in files.items() if d.get("dv")}
+    if ptype is None:
+        scan = _read_files_dv(
+            spark, path, sorted(os.path.join(data, n) for n in files), dvmap,
+            props,
+        )
+        return _apply_colmap(scan, props)
+    pcol = props.get("partition.column")
+    if pcol is None:
+        raise ValueError(
+            f"{path} is partitioned but the log predates the "
+            "partition.column property — record it with "
+            'txn_set_property(path, "partition.column", col)'
+        )
+    groups: dict = {}
+    for n, d in files.items():
+        groups.setdefault(d["p"], []).append(os.path.join(data, n))
+    parts = [
+        _read_files_dv(spark, path, sorted(fs), dvmap, props).withColumn(
+            pcol, _partition_lit(p, ptype)
+        )
+        for p, fs in sorted(groups.items(), key=lambda kv: (kv[0] is None, kv[0] or ""))
+    ]
+    out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    out = out.select(*[c for c in out.columns if c != pcol], pcol)
+    return _apply_colmap(out, props, keep=(pcol,))
 
 
 class SchemaEnforcementViolation(ValueError):
@@ -1232,54 +1291,6 @@ def _partition_lit(encoded, ptype):
     return col.cast(ptype) if ptype else col
 
 
-def read_snapshot_partitioned(
-    spark, path: str, partition_col: str, version: int | None = None,
-    partition_values=None,
-) -> DataFrame:
-    """Snapshot read re-attaching the partition column; optionally pruned
-    to ``partition_values`` — the file-level partition pruning that makes
-    a selective upsert read O(touched partitions), driven entirely by the
-    LOG (no directory listing, no footer reads).
-
-    ``partition_values`` are PYTHON values (ints, dates, strings, None);
-    they are encoded with the same hive escaping Spark used when the
-    directories were written before comparing against the log, and the
-    re-attached literal is cast back to the partition column's original
-    type (recorded in the log at write time) — a date/int partition round
-    trips as date/int, and NULL partitions round trip as NULL."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
-    v_max = current_version(path) if version is None else version
-    folded, ptype = _fold_log(path, v_max)
-    live = {n: d["p"] for n, d in folded.items()}
-    if partition_values is not None:
-        wanted = {_encode_partition_value(v) for v in partition_values}
-        live = {n: p for n, p in live.items() if p in wanted}
-    if not live:
-        raise ValueError(f"no data for snapshot read of {path}")
-    by_value: dict[str, list[str]] = {}
-    for n, p in live.items():
-        by_value.setdefault(p, []).append(os.path.join(_data_dir(path), n))
-
-    def _lit(encoded):
-        return _partition_lit(encoded, ptype)
-
-    dvmap = snapshot_dvs(path, v_max)  # merge-on-read per value group
-    props_v = table_props(path, v_max)
-    parts = [
-        _read_files_dv(spark, path, sorted(files), dvmap, props_v).withColumn(
-            partition_col, _lit(value)
-        )
-        for value, files in sorted(by_value.items(), key=lambda kv: (kv[0] is None, kv[0]))
-    ]
-    out = reduce(lambda a, b: a.unionByName(b), parts)
-    # physical → logical projection (partition column is log-resident and
-    # already logical — it passes through)
-    return _apply_colmap(out, props_v, keep=(partition_col,))
-
-
 def txn_upsert_partitioned(
     spark, source: DataFrame, path: str, keys, partition_col: str,
     max_retries: int = 3,
@@ -1305,8 +1316,8 @@ def txn_upsert_partitioned(
         live = snapshot_partitions(path, base_v)
         old_touched = [n for n, p in live.items() if p in touched]
         if old_touched:
-            target_slice = read_snapshot_partitioned(
-                spark, path, partition_col, base_v, partition_values=touched_values
+            target_slice = read_snapshot(
+                spark, path, base_v, where={partition_col: touched_values}
             )
             merged = upsert(target_slice, source, keys)
         else:
@@ -1635,7 +1646,7 @@ def _change_delta(
     new_files = [os.path.join(_data_dir(path), n) for n in added_names]
 
     prune = None
-    if touched_keys is not None:
+    if touched_keys is not None and touched_keys[0]:
         key_cols, keys_df = touched_keys
         # Broadcast gate (guide §3.1): the prune only pays when the semi
         # joins are MAP-SIDE — a source key set past the broadcast bound
@@ -1660,9 +1671,11 @@ def _change_delta(
             )
 
             def prune(side):  # noqa: F811
+                # bound to tk's own columns: a bare F.col("__tk_0") is
+                # ambiguous when the table carries a column of that name
                 cond = None
                 for i, k in enumerate(pkeys):
-                    c = side[k].eqNullSafe(F.col(f"__tk_{i}"))
+                    c = side[k].eqNullSafe(tk[f"__tk_{i}"])
                     cond = c if cond is None else (cond & c)
                 return side.join(tk, cond, "left_semi")
 
@@ -1845,6 +1858,7 @@ def read_snapshot_rowids(spark, path: str, version: int | None = None) -> DataFr
     Unpartitioned tables; requires every live file to carry a base."""
     from pyspark.sql import functions as F
 
+    _check_horizon(path, version)
     v_max = current_version(path) if version is None else version
     live, ptype, props = _fold_log3(path, v_max)
     if ptype is not None:
@@ -2533,199 +2547,189 @@ def snapshot_profile(path: str, cols, version: int | None = None) -> dict:
     }
 
 
-def read_snapshot_skipping(
-    spark, path: str, col: str, lo, hi, version: int | None = None
-) -> DataFrame:
-    """Snapshot read pruned by the log's zone maps: files whose [min, max]
-    for ``col`` cannot intersect [lo, hi] are never opened (files without
-    stats are conservatively kept). The row-level predicate must still be
-    applied by the caller — zone maps prune files, not rows."""
-    if version is not None and version < vacuum_horizon(path):
-        raise ValueError(f"version {version} of {path} was vacuumed")
-    props = table_props(path, version)
-    col = _phys_col(props, col)  # zone specs speak logical; stats physical
-    stats = snapshot_stats(path, version)
-    keep = []
-    for name, st in sorted(stats.items()):
-        rng = st.get(col)
-        if rng is None or not (rng[1] < lo or rng[0] > hi):
-            keep.append(os.path.join(_data_dir(path), name))
-    if not keep:
-        return read_snapshot(spark, path, version).limit(0)
-    return _apply_colmap(
-        _read_files_dv(spark, path, keep, snapshot_dvs(path, version), props),
-        props,
-    )
+# Candidate planning. A ``where`` spec is IMPLIED by the caller's row
+# predicate, so a file may be pruned only when its log metadata REFUTES
+# the spec; metadata that is missing or not comparable keeps the file.
+# The driver planner (_candidates) and the distributed one
+# (scan_candidates_df) compare a recorded stat in the type of the
+# spec's values — exact bigint for ints, double for numbers, raw string
+# for strings, no zone pruning otherwise — and a stat that does not
+# parse as that type keeps the file, so both return the same names.
+_INT_TEXT = re.compile(r"\s*[+-]?\d+\s*")
 
 
-def read_snapshot_skipping_multi(
-    spark, path: str, bounds: dict, version: int | None = None
-) -> DataFrame:
-    """Multi-column zone-map pruning: keep only files whose recorded
-    [min, max] intersects EVERY ``bounds[col] = (lo, hi)`` — the read
-    that makes a z-ordered layout (txn_zorder) pay off, since each file
-    covers a small rectangle of the clustered space and a conjunctive
-    range predicate prunes on all clustered columns at once. Missing
-    stats keep the file (cannot prune); the caller still applies the
-    exact row predicate."""
-    if version is not None and version < vacuum_horizon(path):
-        raise ValueError(f"version {version} of {path} was vacuumed")
-    props = table_props(path, version)
-    bounds = {_phys_col(props, c): b for c, b in bounds.items()}
-    stats = snapshot_stats(path, version)
-    keep = []
-    for name, st in sorted(stats.items()):
-        if st.get("__rows__") == 0:
-            continue
-        ok = True
-        for col, (lo, hi) in bounds.items():
-            rng = st.get(col)
-            if rng is not None and (rng[1] < lo or rng[0] > hi):
-                ok = False
-                break
-        if ok:
-            keep.append(os.path.join(_data_dir(path), name))
-    if not keep:
-        return read_snapshot(spark, path, version).limit(0)
-    return _apply_colmap(
-        _read_files_dv(spark, path, keep, snapshot_dvs(path, version), props),
-        props,
-    )
+def _spec_kind(values) -> str | None:
+    if all(isinstance(v, int) and not isinstance(v, bool) for v in values):
+        return "bigint"
+    if all(isinstance(v, (int, float)) and not isinstance(v, bool) for v in values):
+        return "double"
+    if all(isinstance(v, str) for v in values):
+        return "string"
+    return None
+
+
+def _as_kind(x, kind: str):
+    """A recorded stat in the spec's comparison type, or None when it does
+    not parse — the driver twin of the planner frame's ``try_cast`` over
+    ``get_json_object`` text."""
+    if x is None:
+        return None
+    if kind == "string":
+        return x if isinstance(x, str) else json.dumps(x)
+    if isinstance(x, bool):
+        return None
+    if kind == "bigint":
+        if isinstance(x, int):
+            return x
+        return int(x) if isinstance(x, str) and _INT_TEXT.fullmatch(x) else None
+    if isinstance(x, (int, float)):
+        return float(x)
+    try:
+        return float(x) if "_" not in x else None
+    except ValueError:
+        return None
+
+
+def _spec_values(spec) -> list:
+    """A list spec's values that can match a row: SQL IN never matches
+    NULL, so None drops (the partition column keeps it — None names the
+    NULL partition there)."""
+    return [v for v in spec if v is not None]
+
+
+def _file_test(path: str, props: dict, col: str, spec):
+    """``(name, fold state) -> may match`` for one ``where`` entry."""
+    import bisect
+
+    if col == props.get("partition.column"):
+        if isinstance(spec, tuple):
+            return lambda n, d: True  # ranges do not prune partition values
+        wanted = {_encode_partition_value(v) for v in spec}
+        return lambda n, d: d["p"] in wanted
+    phys = _phys_col(props, col)  # specs speak logical; stats physical
+    values = list(spec) if isinstance(spec, tuple) else _spec_values(spec)
+    kind = _spec_kind(values)
+    if kind is not None and not isinstance(spec, tuple):
+        values = sorted(values)  # zone test bisects
+
+    def zone_ok(st) -> bool:
+        rng = st.get(phys)
+        mn, mx = (
+            (_as_kind(rng[0], kind), _as_kind(rng[1], kind))
+            if rng is not None and kind is not None
+            else (None, None)
+        )
+        if mn is None or mx is None:
+            return True
+        if isinstance(spec, tuple):
+            return mx >= values[0] and mn <= values[1]
+        i = bisect.bisect_left(values, mn)
+        return i < len(values) and values[i] <= mx
+
+    if isinstance(spec, tuple):
+        return lambda n, d: zone_ok(d["stats"])
+
+    def test(n, d) -> bool:
+        if not zone_ok(d["stats"]):
+            return False
+        meta = (d["stats"].get("__bloom__") or {}).get(phys)
+        return meta is None or (
+            bool(values)
+            and _bloom_might_contain(_bloom_sidecar(path, n, phys), meta, values)
+        )
+
+    return test
+
+
+def _candidates(path: str, live: dict, props: dict, where: dict) -> list[str]:
+    """THE driver-side candidate planner: sorted live file names that may
+    hold a row matching ``where`` (read_snapshot's spec). Files the log
+    records as zero-row drop; a file is pruned when its partition value
+    misses a value list on the ``partition.column``, its zone map misses
+    a range or every listed value, or its bloom sidecar refutes every
+    listed value. Sound only if ``where`` is IMPLIED by the caller's
+    predicate. The DML paths plan their candidates here too, so reads
+    and rewrites prune identically."""
+    tests = [_file_test(path, props, c, spec) for c, spec in where.items()]
+    return [
+        n
+        for n in sorted(live)
+        if live[n]["stats"].get("__rows__") != 0
+        and all(t(n, live[n]) for t in tests)
+    ]
 
 
 def scan_candidates_df(
-    spark,
-    path: str,
-    bounds: dict | None = None,
-    partition_values=None,
-    version: int | None = None,
+    spark, path: str, where: dict | None = None, version: int | None = None
 ):
-    """PRUNED SCAN PLANNING over the checkpoint frames (the r9 verdict's
-    10⁶-file planning ceiling): the candidate-file computation of
-    read_snapshot_skipping_multi / read_snapshot_partitioned pushed into
-    ``snapshot_state_df`` — zone-map range predicates and partition-value
-    filters evaluate DISTRIBUTED over the multi-part checkpoint's parquet
-    parts, so planning a selective read never folds the live set on the
-    driver. Returns the surviving state rows (``n, p, stats, dv, rid``).
-    Conservative exactly like the driver-side forms: a file without
-    usable stats (or whose stats don't parse as the bound's type) is
-    KEPT; files recorded with zero rows drop; bounds speak LOGICAL
-    column names (zone stats are keyed physical)."""
+    """DISTRIBUTED candidate planning over the checkpoint frames: the
+    ``where`` semantics of _candidates evaluated over
+    ``snapshot_state_df`` — the multi-part checkpoint's parquet parts —
+    so planning a selective read never folds the live set on the driver
+    (read_snapshot takes this planner by itself on multi-part
+    checkpoints). Returns the surviving state rows (``n, p, stats, dv,
+    rid``). Bloom sidecars are probed by a Python UDF on the executors."""
     from pyspark.sql import functions as F
 
-    if version is not None and version < vacuum_horizon(path):
-        raise ValueError(f"version {version} of {path} was vacuumed")
+    _check_horizon(path, version)
     v = current_version(path) if version is None else version
     # metadata-only fold: table_props would fold the LIVE SET on the
     # driver — the exact O(live) planning cost this path exists to avoid
     _, _, props = _fold_props_only(path, v)
-    state = snapshot_state_df(spark, path, v)
     rows0 = F.get_json_object("stats", "$.__rows__")
     cond = rows0.isNull() | (rows0.cast("bigint") != 0)
-    for col, (lo, hi) in (bounds or {}).items():
-        phys = _phys_col(props, col)
-        # Compare in a type matched to the BOUND's Python type, so the
-        # cast can never round a recorded stat across the bound: exact
-        # bigint for int bounds, double for float, raw string otherwise —
-        # the same outcomes as the driver-side python comparisons. A
-        # stat that fails the cast comes back NULL and the file is kept.
-        t = (
-            "bigint"
-            if isinstance(lo, int)
-            and isinstance(hi, int)
-            and not isinstance(lo, bool)
-            else "double"
-            if isinstance(lo, (int, float))
-            else "string"
+    for col, spec in (where or {}).items():
+        cond = cond & _spec_cond(path, props, col, spec)
+    return snapshot_state_df(spark, path, v).filter(cond)
+
+
+def _spec_cond(path: str, props: dict, col: str, spec):
+    """One ``where`` entry as a filter over the planner frame (the twin
+    of _file_test)."""
+    from pyspark.sql import functions as F
+
+    if col == props.get("partition.column"):
+        if isinstance(spec, tuple):
+            return F.lit(True)
+        return F.col("p").isin(
+            [json.dumps(_encode_partition_value(v)) for v in spec]
         )
-        mn = F.get_json_object("stats", f"$.{phys}[0]")
-        mx = F.get_json_object("stats", f"$.{phys}[1]")
-        if t != "string":
-            # try_cast, not cast: under ANSI mode a stat that doesn't
-            # parse as the bound's type must become NULL (file kept),
-            # not throw mid-planning
-            mn, mx = mn.try_cast(t), mx.try_cast(t)
-        cond = cond & (
-            mn.isNull()
-            | mx.isNull()
-            | ((mx >= F.lit(lo)) & (mn <= F.lit(hi)))
+    phys = _phys_col(props, col)
+    values = list(spec) if isinstance(spec, tuple) else _spec_values(spec)
+    kind = _spec_kind(values)
+    mn = F.get_json_object("stats", f"$.{phys}[0]")
+    mx = F.get_json_object("stats", f"$.{phys}[1]")
+    if kind in ("bigint", "double"):
+        # try_cast, not cast: under ANSI mode a stat that doesn't parse
+        # as the spec's type must become NULL (file kept), not throw
+        mn, mx = mn.try_cast(kind), mx.try_cast(kind)
+    if kind is None:
+        zone = F.lit(True)
+    elif isinstance(spec, tuple):
+        lo, hi = F.lit(values[0]), F.lit(values[1])
+        zone = mn.isNull() | mx.isNull() | ((mx >= lo) & (mn <= hi))
+    elif values:
+        hits = F.exists(
+            F.array(*[F.lit(x) for x in values]), lambda x: (mx >= x) & (mn <= x)
         )
-    if partition_values is not None:
-        wanted = [
-            json.dumps(_encode_partition_value(pv)) for pv in partition_values
-        ]
-        cond = cond & F.col("p").isin(wanted)
-    return state.filter(cond)
+        zone = mn.isNull() | mx.isNull() | hits
+    else:
+        zone = mn.isNull() | mx.isNull()
+    if isinstance(spec, tuple):
+        return zone
 
+    def might_contain(n, meta):
+        return meta is None or (
+            bool(values)
+            and _bloom_might_contain(
+                _bloom_sidecar(path, n, phys), json.loads(meta), values
+            )
+        )
 
-def read_snapshot_pruned(
-    spark,
-    path: str,
-    bounds: dict | None = None,
-    partition_col: str | None = None,
-    partition_values=None,
-    version: int | None = None,
-    candidates=None,
-) -> DataFrame:
-    """The SCALE form of the pruned reads: candidates are planned with
-    ``scan_candidates_df`` (distributed over the checkpoint parts) and
-    only the SURVIVORS are materialized on the driver to build the scan
-    — planning memory is O(candidates), not O(live). At 10⁶–10⁷ live
-    files this is the read path Delta serves with its file-index scans;
-    ``read_snapshot`` / ``read_snapshot_skipping_multi`` remain the
-    driver-fold convenience forms (documented ceiling ~10⁵ files).
-    Results match read_snapshot_skipping_multi (unpartitioned, same
-    bounds) and read_snapshot_partitioned (partitioned, same values) —
-    pinned by tests; the caller still applies the exact row predicate.
-
-    ``candidates`` lets a caller that already ran the distributed
-    planning pass (``scan_candidates_df(...).select("n", "p", "dv")``
-    collected rows, SAME bounds/partition_values/version) hand the
-    survivors over instead of paying a second checkpoint-part scan —
-    plan once, read once."""
-    from functools import reduce
-
-    v = current_version(path) if version is None else version
-    _, ptype, props = _fold_props_only(path, v)
-    cand = (
-        candidates
-        if candidates is not None
-        else scan_candidates_df(spark, path, bounds, partition_values, version)
-        .select("n", "p", "dv")
-        .collect()
+    bloom = F.udf(might_contain, "boolean")(
+        F.col("n"), F.get_json_object("stats", f"$.__bloom__.{phys}")
     )
-    if not cand:
-        return read_snapshot(spark, path, version).limit(0)
-    dvmap = {r["n"]: json.loads(r["dv"]) for r in cand if r["dv"]}
-    if ptype is None:
-        files = [os.path.join(_data_dir(path), r["n"]) for r in cand]
-        return _apply_colmap(
-            _read_files_dv(spark, path, files, dvmap, props), props
-        )
-    if partition_col is None:
-        raise ValueError(
-            f"{path} is partitioned (type {ptype}): read_snapshot_pruned "
-            "needs partition_col to re-attach the partition column"
-        )
-    by_value: dict = {}
-    for r in cand:
-        enc = json.loads(r["p"]) if r["p"] else None
-        by_value.setdefault(enc, []).append(r["n"])
-    parts = []
-    for enc in sorted(by_value, key=lambda e: (e is None, e or "")):
-        names = by_value[enc]
-        sub = _read_files_dv(
-            spark,
-            path,
-            [os.path.join(_data_dir(path), n) for n in names],
-            {n: dvmap[n] for n in names if n in dvmap},
-            props,
-        )
-        parts.append(sub.withColumn(partition_col, _partition_lit(enc, ptype)))
-    out = reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-    )
-    return _apply_colmap(out, props, keep=(partition_col,))
+    return zone & bloom
 
 
 def txn_clone(src: str, dst: str, version: int | None = None) -> int:
@@ -2903,47 +2907,6 @@ def txn_append_bloom(
             _validate_unique(spark, path, added_names, base_v)
             continue
     raise TxnConflict(f"gave up after {max_retries} retries appending to {path}")
-
-
-def bloom_candidate_files(
-    path: str, col: str, values, version: int | None = None
-) -> list[str]:
-    """Live files that MIGHT contain any of ``values`` in ``col``: files
-    without a bloom for the column are kept conservatively; no false
-    negatives by construction. ``col`` is logical; sidecars/log metadata
-    key the physical name."""
-    values = list(values)
-    col = _phys_col(table_props(path, version), col)
-    stats = snapshot_stats(path, version)
-    keep = []
-    for name, st in sorted(stats.items()):
-        meta = (st.get("__bloom__") or {}).get(col)
-        if meta is None:
-            keep.append(name)  # no bloom for this file: cannot prune
-        elif values and _bloom_might_contain(
-            _bloom_sidecar(path, name, col), meta, values
-        ):
-            keep.append(name)
-        # bloom present and (no values, or all values refuted): pruned
-    return [os.path.join(_data_dir(path), n) for n in keep]
-
-
-def read_snapshot_bloom(
-    spark, path: str, col: str, values, version: int | None = None
-) -> DataFrame:
-    """Snapshot read pruned to the bloom candidates (the point-lookup
-    sibling of read_snapshot_skipping). The caller still applies the
-    exact row predicate — blooms prune files, not rows."""
-    keep = bloom_candidate_files(path, col, values, version)
-    if not keep:
-        return read_snapshot(spark, path, version).limit(0)
-    return _apply_colmap(
-        _read_files_dv(
-            spark, path, keep, snapshot_dvs(path, version),
-            table_props(path, version),
-        ),
-        table_props(path, version),
-    )
 
 
 def txn_convert_parquet_dir(src_dir: str, path: str, stats_cols=()) -> int:
@@ -3371,7 +3334,7 @@ def txn_delete_dv(
 
     ``zone=(col, lo, hi)`` / ``bloom=(col, values)`` describe the
     predicate's key constraint and route the scan through the SAME
-    zone-map/bloom candidate pruning as the CoW twins (_cow_candidates):
+    candidate planner as the reads and the CoW twins (_candidates):
     a one-band delete then opens O(band) files instead of paying a
     footer read on every live file — at 100 TB that is the difference
     between a point DML and a table scan. Specs must be IMPLIED by the
@@ -3388,10 +3351,7 @@ def txn_delete_dv(
         if base_v < 0:
             raise ValueError(f"no data to delete at {path}")
         live, ptype, props = _fold_log3(path, base_v)
-        # zone/bloom specs speak logical names; log stats are physical
-        zone_p = (_phys_col(props, zone[0]), zone[1], zone[2]) if zone else None
-        bloom_p = (_phys_col(props, bloom[0]), bloom[1]) if bloom else None
-        cand = _cow_candidates(live, path, zone_p, bloom_p)
+        cand = _candidates(path, live, props, _zone_bloom_where(zone, bloom))
         if not cand:
             return base_v  # log proves no file can match
         live = {n: live[n] for n in cand}
@@ -3428,7 +3388,9 @@ def txn_delete_dv(
                 )
             from functools import reduce
 
-            src = reduce(lambda a, b: a.unionByName(b), groups)
+            src = reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True), groups
+            )
             src = _apply_colmap(src, props, keep=("__f", "__p", pcol))
             hits = src.filter(F.coalesce(source_pred, F.lit(False))).select(
                 "__f", "__p"
@@ -3498,41 +3460,14 @@ def txn_delete_dv(
 # --------------------------------------- pruned copy-on-write DML (CoW)
 
 
-def _cow_candidates(
-    live: dict[str, dict],
-    path: str,
-    zone: tuple | None,
-    bloom: tuple | None,
-) -> list[str]:
-    """Live file names that MAY contain rows matching a predicate whose
-    key constraint is described by ``zone=(col, lo, hi)`` and/or
-    ``bloom=(col, values)``. Files lacking the metadata are kept
-    conservatively — pruning is sound only if the spec is IMPLIED by the
-    caller's predicate (a pruned file must contain no matching row)."""
-    # a file the log PROVES empty (__rows__ == 0 from footer stats) can
-    # contain no matching row — never a candidate, whatever the spec
-    names = sorted(n for n in live if live[n]["stats"].get("__rows__") != 0)
-    if zone is not None:
-        col, lo, hi = zone
-        kept = []
-        for n in names:
-            rng = live[n]["stats"].get(col)
-            if rng is None or not (rng[1] < lo or rng[0] > hi):
-                kept.append(n)
-        names = kept
-    if bloom is not None:
-        col, values = bloom
-        values = list(values)
-        kept = []
-        for n in names:
-            meta = (live[n]["stats"].get("__bloom__") or {}).get(col)
-            if meta is None or (
-                values
-                and _bloom_might_contain(_bloom_sidecar(path, n, col), meta, values)
-            ):
-                kept.append(n)
-        names = kept
-    return names
+def _zone_bloom_where(zone: tuple | None, bloom: tuple | None) -> dict:
+    """The DML ``zone=(col, lo, hi)`` / ``bloom=(col, values)`` specs as a
+    ``where`` for _candidates (a value list prunes by zone map AND bloom,
+    so it takes the column when both specs name it)."""
+    where = {zone[0]: (zone[1], zone[2])} if zone else {}
+    if bloom:
+        where[bloom[0]] = list(bloom[1])
+    return where
 
 
 def _stage_with_meta(
@@ -3591,7 +3526,7 @@ def txn_delete_cow(
     a table rewrite — the difference between txn_delete and this form.
 
     ``zone``/``bloom`` describe the predicate's key constraint and MUST
-    be implied by it (see _cow_candidates); candidate files with
+    be implied by it (see _candidates); candidate files with
     deletion vectors are materialized by the rewrite (their DVs retire
     with the removed files). NULL-predicate rows are kept, as in
     txn_delete."""
@@ -3608,19 +3543,11 @@ def txn_delete_cow(
                 "rewritten files would lose their partition values; use "
                 "the partitioned rewrite forms instead"
             )
-        zone_p = (_phys_col(props, zone[0]), zone[1], zone[2]) if zone else None
-        bloom_p = (_phys_col(props, bloom[0]), bloom[1]) if bloom else None
-        cand = _cow_candidates(live, path, zone_p, bloom_p)
+        cand = _candidates(path, live, props, _zone_bloom_where(zone, bloom))
         if not cand:
             return base_v
-        dvmap = {n: live[n]["dv"] for n in cand if live[n].get("dv")}
-        slice_df = _apply_colmap(
-            _read_files_dv(
-                spark, path,
-                [os.path.join(_data_dir(path), n) for n in cand], dvmap,
-                props,
-            ),
-            props,
+        slice_df = _scan_snapshot(
+            spark, path, {n: live[n] for n in cand}, None, props
         )
         kept = slice_df.filter(~F.coalesce(source_pred, F.lit(False)))
         added = _stage_with_meta(spark, kept, path, stats_cols, bloom_col)
@@ -3637,7 +3564,6 @@ def txn_merge_cow(
     path: str,
     keys,
     prune_key: str | None = None,
-    use_bloom: bool = False,
     stats_cols=(),
     bloom_col: str | None = None,
     max_retries: int = 3,
@@ -3650,27 +3576,19 @@ def txn_merge_cow(
     can't hide an "insert" key.
 
     The source's distinct ``prune_key`` values (default: the single merge
-    key) are collected to drive per-file candidacy — the point-update
-    workload this form exists for has a small source by definition; a
-    source too large to collect keys from belongs with txn_upsert's
-    whole-snapshot rewrite anyway."""
-    import bisect
-
+    key) are collected to drive per-file candidacy — a value-list
+    ``where`` for _candidates, pruned by zone maps and by bloom sidecars
+    where the table's files carry them. The point-update workload this
+    form exists for has a small source by definition; a source too large
+    to collect keys from belongs with txn_upsert's whole-snapshot
+    rewrite anyway."""
     from dbimport_spark.operators.merge import upsert
 
     keys = list(keys)
     pk = prune_key or (keys[0] if len(keys) == 1 else None)
     if pk is None:
         raise ValueError("txn_merge_cow: pass prune_key for composite merge keys")
-    key_vals = sorted(
-        r[0] for r in source.select(pk).distinct().collect() if r[0] is not None
-    )
-
-    def _range_hits_any(rng) -> bool:
-        lo, hi = rng
-        i = bisect.bisect_left(key_vals, lo)
-        return i < len(key_vals) and key_vals[i] <= hi
-
+    where = {pk: [r[0] for r in source.select(pk).distinct().collect()]}
     for _ in range(max_retries):
         base_v = current_version(path)
         if base_v < 0:
@@ -3681,27 +3599,10 @@ def txn_merge_cow(
                 "txn_merge_cow: partitioned tables are not supported — "
                 "use txn_upsert_partitioned (partition-pruned rewrite)"
             )
-        pk_phys = _phys_col(props, pk)  # log stats are physical-keyed
-        cand = []
-        for n in sorted(live):
-            if live[n]["stats"].get("__rows__") == 0:
-                continue  # log-proven empty part: no row to update
-            rng = live[n]["stats"].get(pk_phys)
-            if rng is None or _range_hits_any(rng):
-                cand.append(n)
-        if use_bloom and cand:
-            cand = _cow_candidates(
-                {n: live[n] for n in cand}, path, None, (pk_phys, key_vals)
-            )
+        cand = _candidates(path, live, props, where)
         if cand:
-            dvmap = {n: live[n]["dv"] for n in cand if live[n].get("dv")}
-            target_slice = _apply_colmap(
-                _read_files_dv(
-                    spark, path,
-                    [os.path.join(_data_dir(path), n) for n in cand], dvmap,
-                    props,
-                ),
-                props,
+            target_slice = _scan_snapshot(
+                spark, path, {n: live[n] for n in cand}, None, props
             )
         else:
             target_slice = read_snapshot(spark, path, base_v).limit(0)
@@ -4173,27 +4074,17 @@ def _validate_unique(spark, path: str, staged, base_v: int) -> None:
             # to drive bloom pruning (point ingest); bulk appends prune
             # by zone range alone and clash-check with a distributed
             # semi-join — no O(batch) driver collect on the hot path.
-            col_phys = _phys_col(props, col)
             if top["__n"] <= _UNIQUE_BLOOM_KEYS_MAX:
-                keys = [r[0] for r in kdf.select(col).collect()]
-                zone = (col_phys, min(keys), max(keys))
-                bloom = (col_phys, keys)
+                where = {col: [r[0] for r in kdf.select(col).collect()]}
                 probe = F.broadcast(kdf.select(col))
             else:
-                zone = (col_phys, top["__mn"], top["__mxk"])
-                bloom = None
+                where = {col: (top["__mn"], top["__mxk"])}
                 probe = kdf.select(col)
-            cand = _cow_candidates(live, path, zone, bloom)
+            cand = _candidates(path, live, props, where)
             if not cand:
                 continue  # log proves no live file can hold these keys
-            ldf = _apply_colmap(
-                _read_files_dv(
-                    spark, path,
-                    [os.path.join(_data_dir(path), n) for n in cand],
-                    {n: live[n]["dv"] for n in cand if live[n].get("dv")},
-                    props,
-                ),
-                props,
+            ldf = _scan_snapshot(
+                spark, path, {n: live[n] for n in cand}, None, props
             )
             clash = (
                 ldf.select(col).join(probe, col, "left_semi").limit(1).count()
@@ -4753,8 +4644,7 @@ def txn_compact_partitioned(
 
 def txn_merge_dv(
     spark, source: DataFrame, path: str, keys,
-    prune_key: str | None = None, use_bloom: bool = False,
-    max_retries: int = 3,
+    prune_key: str | None = None, max_retries: int = 3,
 ) -> int:
     """MERGE-ON-READ UPSERT via deletion vectors — the third merge
     strategy beside txn_upsert (whole-snapshot rewrite) and txn_merge_cow
@@ -4769,12 +4659,12 @@ def txn_merge_dv(
     compaction materializes.
 
     ``prune_key`` (default: the single merge key) routes the position
-    scan through the log's zone-map — and, with ``use_bloom``, bloom —
-    candidacy (_cow_candidates), like txn_merge_cow: only files that MAY
-    contain a source key are opened for the key scan. Non-candidates
-    provably contain no matched row, so pruning cannot change the
-    result; a point-update batch then reads O(band) footers, not every
-    live file. Files without the metadata are kept conservatively.
+    scan through the log's zone-map and bloom candidacy (_candidates),
+    like txn_merge_cow: only files that MAY contain a source key are
+    opened for the key scan. Non-candidates provably contain no matched
+    row, so pruning cannot change the result; a point-update batch then
+    reads O(band) footers, not every live file. Files without the
+    metadata are kept conservatively.
 
     Unpartitioned tables only (like the other DV writers' staging)."""
     import pandas as pd
@@ -4782,11 +4672,8 @@ def txn_merge_dv(
 
     keys = list(keys)
     pk = prune_key or (keys[0] if len(keys) == 1 else None)
-    key_vals = (
-        sorted(
-            r[0] for r in source.select(pk).distinct().collect()
-            if r[0] is not None
-        )
+    where = (
+        {pk: [r[0] for r in source.select(pk).distinct().collect()]}
         if pk is not None
         else None
     )
@@ -4800,27 +4687,8 @@ def txn_merge_dv(
                 "txn_merge_dv: partitioned tables are not supported — use "
                 "txn_upsert_partitioned"
             )
-        if key_vals is not None:
-            import bisect
-
-            pk_phys = _phys_col(props, pk)  # log stats are physical-keyed
-
-            def _rng_hits(rng):  # any source key inside [lo, hi]?
-                i = bisect.bisect_left(key_vals, rng[0])
-                return i < len(key_vals) and key_vals[i] <= rng[1]
-
-            cand = []
-            for n in sorted(live):
-                if live[n]["stats"].get("__rows__") == 0:
-                    continue  # log-proven empty: no row to match
-                rng = live[n]["stats"].get(pk_phys)
-                if rng is None or _rng_hits(rng):
-                    cand.append(n)
-            if use_bloom and cand:
-                cand = _cow_candidates(
-                    {n: live[n] for n in cand}, path, None, (pk_phys, key_vals)
-                )
-            live = {n: live[n] for n in cand}
+        if where is not None:
+            live = {n: live[n] for n in _candidates(path, live, props, where)}
         old_dvs = {n: d["dv"]["d"] for n, d in live.items() if d.get("dv")}
         files = sorted(os.path.join(_data_dir(path), n) for n in live)
         # key-column-pruned scan: only the keys + row position leave the
@@ -4951,13 +4819,13 @@ def txn_merge_into(
 
 def txn_merge_into_cow(
     spark, source: DataFrame, path: str, keys, clauses,
-    prune_key: str | None = None, use_bloom: bool = False,
+    prune_key: str | None = None,
     stats_cols=(), bloom_col: str | None = None, max_retries: int = 3,
     app_id: str | None = None, batch_id: int | None = None,
 ) -> int:
     """PRUNED clause MERGE — txn_merge_into's scale path: only files
-    that MAY contain a source key (zone-map / optional bloom candidacy,
-    exactly txn_merge_cow's pruning) are read and rewritten; the clause
+    that MAY contain a source key (zone-map / bloom candidacy, exactly
+    txn_merge_cow's pruning) are read and rewritten; the clause
     lattice applies to that slice and non-candidates keep their
     identity. Sound because every clause kind here needs a SOURCE match:
     by-source clauses (not_matched_by_source_*) inspect rows with NO
@@ -4967,8 +4835,6 @@ def txn_merge_into_cow(
 
     ``app_id``/``batch_id`` give the same exactly-once redelivery
     watermark as txn_merge_into."""
-    import bisect
-
     from dbimport_spark.operators.merge import merge_into
 
     for c in clauses:
@@ -4984,14 +4850,7 @@ def txn_merge_into_cow(
     pk = prune_key or (keys[0] if len(keys) == 1 else None)
     if pk is None:
         raise ValueError("txn_merge_into_cow: pass prune_key for composite keys")
-    key_vals = sorted(
-        r[0] for r in source.select(pk).distinct().collect() if r[0] is not None
-    )
-
-    def _rng_hits(rng):
-        i = bisect.bisect_left(key_vals, rng[0])
-        return i < len(key_vals) and key_vals[i] <= rng[1]
-
+    where = {pk: [r[0] for r in source.select(pk).distinct().collect()]}
     for _ in range(max_retries):
         if app_id is not None and batch_id <= last_committed_batch(path, app_id):
             return current_version(path)  # redelivered batch: done
@@ -5003,27 +4862,10 @@ def txn_merge_into_cow(
             raise ValueError(
                 "txn_merge_into_cow: partitioned tables are not supported"
             )
-        pk_phys = _phys_col(props, pk)
-        cand = []
-        for n in sorted(live):
-            if live[n]["stats"].get("__rows__") == 0:
-                continue
-            rng = live[n]["stats"].get(pk_phys)
-            if rng is None or _rng_hits(rng):
-                cand.append(n)
-        if use_bloom and cand:
-            cand = _cow_candidates(
-                {n: live[n] for n in cand}, path, None, (pk_phys, key_vals)
-            )
+        cand = _candidates(path, live, props, where)
         if cand:
-            dvmap = {n: live[n]["dv"] for n in cand if live[n].get("dv")}
-            target_slice = _apply_colmap(
-                _read_files_dv(
-                    spark, path,
-                    [os.path.join(_data_dir(path), n) for n in cand], dvmap,
-                    props,
-                ),
-                props,
+            target_slice = _scan_snapshot(
+                spark, path, {n: live[n] for n in cand}, None, props
             )
         else:
             target_slice = read_snapshot(spark, path, base_v).limit(0)

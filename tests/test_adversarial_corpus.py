@@ -15,6 +15,9 @@ import os
 import pytest
 
 # Query subset: documents-driven, deterministic, ASCII-contract.
+pytestmark = pytest.mark.slow  # oracle sweep twin (tools/check_oracle.py covers it)
+
+
 QUERIES = [
     "text_token_count",
     "text_lang_id",

@@ -19,6 +19,9 @@ from dbimport_spark.functions.textdedup import (
 )
 
 
+pytestmark = pytest.mark.slow  # high-dup corpus A/B, minutes
+
+
 def _high_dup_corpus(spark, n_base=220, dup_every=2):
     """(doc_id, text) with a near-dup twin for every ``dup_every``-th base
     doc → duplicate fraction 1/(dup_every+1) of captures per twin pair;

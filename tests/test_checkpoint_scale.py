@@ -15,6 +15,9 @@ import pytest
 from dbimport_spark import txnlog
 
 
+pytestmark = pytest.mark.slow  # multipart checkpoint scale probe
+
+
 def _synth_table(tmp_path, name, n_live, parts=8, suffix_commits=5):
     """A table whose log holds ``n_live`` live files: 8 bulk appends,
     a multi-part checkpoint, then a small suffix (adds + removes)."""

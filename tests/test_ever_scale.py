@@ -21,6 +21,9 @@ from dbimport_spark import txnlog
 from tools.probe_churn import _commit_retry, _touch_batch, run as churn_run
 
 
+pytestmark = pytest.mark.slow  # _ever shard churn probe
+
+
 @pytest.fixture
 def table(tmp_path):
     t = str(tmp_path / "tbl")

@@ -25,6 +25,9 @@ import pytest
 
 from dbimport_spark.plans.warc_queries import _memoized_export
 
+pytestmark = pytest.mark.slow  # multiprocess race schedules
+
+
 N_FILES = 4
 PAYLOAD = b"deterministic shard bytes\n" * 64
 

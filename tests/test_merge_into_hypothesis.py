@@ -15,6 +15,9 @@ from hypothesis import strategies as st
 from dbimport_spark.operators.merge import merge_into
 
 # condition pool per branch: (sql over t/s aliases, python evaluator)
+pytestmark = pytest.mark.slow  # hypothesis clause-lattice fuzzing
+
+
 MATCHED_CONDS = [
     (None, lambda t, s: True),
     ("t.val < 0", lambda t, s: t["val"] is not None and t["val"] < 0),

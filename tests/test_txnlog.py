@@ -184,7 +184,7 @@ def test_vacuum_racing_reader_and_staged_writer(spark, table):
     with pytest.raises(ValueError, match="vacuum"):
         txnlog.read_snapshot(spark, table, 0)
     with pytest.raises(ValueError, match="vacuum"):
-        txnlog.read_snapshot_skipping(spark, table, "k", 0, 10, version=0)
+        txnlog.read_snapshot(spark, table, 0, where={"k": (0, 10)})
     with pytest.raises(ValueError, match="vacuum"):
         txnlog.txn_clone(table, table + "_c", version=0)
     # the staged orphan commits fine afterwards
@@ -215,7 +215,7 @@ def test_zone_map_null_only_and_statless_files(spark, table):
     # range read: NULL-only file kept (conservative), caller's row filter
     # then drops the NULL rows — result correct
     got = (
-        txnlog.read_snapshot_skipping(spark, table, "k", 5, 5)
+        txnlog.read_snapshot(spark, table, where={"k": (5, 5)})
         .filter(F.col("k").between(5, 5))
         .collect()
     )
@@ -224,7 +224,7 @@ def test_zone_map_null_only_and_statless_files(spark, table):
     # conservative keep (a skipping reader that dropped statless files
     # would lose these rows)
     nulls = (
-        txnlog.read_snapshot_skipping(spark, table, "k", -(10**9), 10**9)
+        txnlog.read_snapshot(spark, table, where={"k": (-(10**9), 10**9)})
         .filter(F.col("k").isNull())
         .collect()
     )
@@ -265,7 +265,7 @@ def test_partitioned_upsert_carries_untouched_files(spark, table):
     }
     now = {
         r["k"]: (r["p"], r["v"])
-        for r in txnlog.read_snapshot_partitioned(spark, table, "p").collect()
+        for r in txnlog.read_snapshot(spark, table).collect()
     }
     assert now == {
         1: ("A", "a1"),
@@ -277,7 +277,7 @@ def test_partitioned_upsert_carries_untouched_files(spark, table):
     # time travel to the pre-merge version still works
     v0 = {
         r["k"]: r["v"]
-        for r in txnlog.read_snapshot_partitioned(spark, table, "p", 0).collect()
+        for r in txnlog.read_snapshot(spark, table, 0).collect()
     }
     assert v0 == {1: "a1", 2: "a2", 3: "b1", 4: "c1"}
 
@@ -286,14 +286,90 @@ def test_partitioned_read_prunes_to_requested_values(spark, table):
     txnlog.txn_append_partitioned(
         spark, _pdf(spark, [(1, "A", "a"), (2, "B", "b")]), table, "p"
     )
-    only_b = txnlog.read_snapshot_partitioned(
-        spark, table, "p", partition_values=["B"]
-    )
+    only_b = txnlog.read_snapshot(spark, table, where={"p": ["B"]})
     assert [r["k"] for r in only_b.collect()] == [2]
     # the pruned plan reads exactly the B files
     live = txnlog.snapshot_partitions(table)
     n_b_files = sum(1 for p in live.values() if p == "B")
     assert len(only_b.inputFiles()) == n_b_files
+
+
+def test_partitioned_read_null_fills_evolved_partition(spark, table):
+    """A later partition's append added a column: the plain read and the
+    DV delete's position scan union the per-partition scans by name and
+    NULL-fill the older groups."""
+    txnlog.txn_append_partitioned(
+        spark, _pdf(spark, [(1, "A", "a"), (3, "A", "c")]), table, "p"
+    )
+    wide = spark.createDataFrame(
+        [(2, "B", "b", 7)], "k long, p string, v string, extra long"
+    )
+    txnlog.txn_append_partitioned(spark, wide, table, "p")
+    out = txnlog.read_snapshot(spark, table)
+    assert out.columns[-1] == "p"
+    assert {r.k: (r.p, r.v, r.extra) for r in out.collect()} == {
+        1: ("A", "a", None),
+        2: ("B", "b", 7),
+        3: ("A", "c", None),
+    }
+    txnlog.txn_delete_dv(spark, F.col("k") == 3, table)
+    assert sorted(r.k for r in txnlog.read_snapshot(spark, table).collect()) == [
+        1, 2,
+    ]
+
+
+def test_absent_partition_value_reads_empty_with_schema(spark, table):
+    txnlog.txn_append_partitioned(
+        spark, _pdf(spark, [(1, "A", "a"), (2, "B", "b")]), table, "p"
+    )
+    out = txnlog.read_snapshot(spark, table, where={"p": ["absent"]})
+    assert out.count() == 0
+    assert out.columns == ["k", "v", "p"]
+
+
+def test_every_read_refuses_vacuumed_versions(spark, table):
+    """Pruned reads and the row-id read check the vacuum horizon up front
+    instead of failing mid-scan on a deleted file."""
+    part, bloom, rids = table + "_part", table + "_bloom", table + "_rids"
+    txnlog.txn_append_partitioned(
+        spark, _pdf(spark, [(1, "A", "a"), (2, "B", "b")]), part, "p"
+    )
+    txnlog.txn_upsert_partitioned(
+        spark, _pdf(spark, [(1, "A", "a2")]), part, ["k"], "p"
+    )
+    txnlog.txn_append_bloom(spark, _df(spark, [(5, "x"), (6, "y")]), bloom, "k")
+    txnlog.txn_upsert(spark, _df(spark, [(5, "X")]), bloom, ["k"])
+    txnlog.txn_enable_row_ids(rids)
+    txnlog.txn_append(spark, _df(spark, [(1, "a")]), rids)
+    txnlog.txn_upsert(spark, _df(spark, [(1, "b")]), rids, ["k"])
+    for t in (part, bloom, rids):
+        assert txnlog.vacuum(t, retain_versions=1)
+    with pytest.raises(ValueError, match="vacuumed"):
+        txnlog.read_snapshot(spark, part, 0, where={"p": ["A"]})
+    with pytest.raises(ValueError, match="vacuumed"):
+        txnlog.read_snapshot(spark, bloom, 0, where={"k": [5]})
+    with pytest.raises(ValueError, match="vacuumed"):
+        txnlog.read_snapshot_rowids(spark, rids, 1)
+
+
+def test_cdf_prune_with_tk_named_column(spark, table):
+    """The change-data diff's key prune binds its join keys to the key
+    frame, so a table column named like them is not ambiguous (the
+    failure used to be swallowed and no change files were written)."""
+    schema = "k long, __tk_0 string"
+    txnlog.txn_append(
+        spark, spark.createDataFrame([(1, "a"), (2, "b")], schema), table
+    )
+    txnlog.txn_set_property(table, "cdf.enabled", "true")
+    v = txnlog.txn_upsert(
+        spark, spark.createDataFrame([(2, "B"), (3, "c")], schema), table, ["k"]
+    )
+    out = os.path.join(table, "_change_data", f"v{v:08d}")
+    got = sorted(
+        (r.k, r["__tk_0"], r._change_type)
+        for r in spark.read.parquet(out).collect()
+    )
+    assert got == [(2, "B", "insert"), (2, "b", "delete"), (3, "c", "insert")]
 
 
 def test_partitioned_upsert_into_new_partition(spark, table):
@@ -304,7 +380,7 @@ def test_partitioned_upsert_into_new_partition(spark, table):
     )
     now = {
         r["k"]: r["p"]
-        for r in txnlog.read_snapshot_partitioned(spark, table, "p").collect()
+        for r in txnlog.read_snapshot(spark, table).collect()
     }
     assert now == {1: "A", 9: "Z"}
 
@@ -339,7 +415,7 @@ def test_zone_map_file_skipping(spark, tmp_path):
     txnlog.txn_append_stats(spark, df, table, stats_cols=["k"])
     live = txnlog.snapshot_stats(table)
     assert len(live) == 4 and all("k" in st for st in live.values())
-    pruned = txnlog.read_snapshot_skipping(spark, table, "k", 100, 120)
+    pruned = txnlog.read_snapshot(spark, table, where={"k": (100, 120)})
     # the pruned plan opens exactly the files whose range intersects
     expected = {
         n for n, st in live.items() if not (st["k"][1] < 100 or st["k"][0] > 120)
@@ -357,7 +433,7 @@ def test_zone_map_empty_intersection(spark, tmp_path):
     table = str(tmp_path / "ztbl2")
     df = spark.createDataFrame([(i, "x") for i in range(50)], "k long, v string")
     txnlog.txn_append_stats(spark, df, table, stats_cols=["k"])
-    none = txnlog.read_snapshot_skipping(spark, table, "k", 10_000, 20_000)
+    none = txnlog.read_snapshot(spark, table, where={"k": (10_000, 20_000)})
     assert none.count() == 0
 
 
@@ -390,7 +466,7 @@ def test_partitioned_int_type_roundtrips(spark, table):
         [(1, 5, "a"), (2, 7, "b")], "k long, p int, v string"
     )
     txnlog.txn_append_partitioned(spark, df, table, "p")
-    back = txnlog.read_snapshot_partitioned(spark, table, "p")
+    back = txnlog.read_snapshot(spark, table)
     # the re-attached partition column has its ORIGINAL type, not string
     assert dict(back.dtypes)["p"] == "int"
     assert {r["p"] for r in back.collect()} == {5, 7}
@@ -404,7 +480,7 @@ def test_partitioned_int_type_roundtrips(spark, table):
     )
     now = {
         r["k"]: r["v"]
-        for r in txnlog.read_snapshot_partitioned(spark, table, "p").collect()
+        for r in txnlog.read_snapshot(spark, table).collect()
     }
     assert now == {1: "A", 2: "b"}
 
@@ -415,13 +491,11 @@ def test_partitioned_date_type_roundtrips(spark, table):
     d = datetime.date(2024, 3, 1)
     df = spark.createDataFrame([(1, d, "a")], "k long, p date, v string")
     txnlog.txn_append_partitioned(spark, df, table, "p")
-    back = txnlog.read_snapshot_partitioned(spark, table, "p")
+    back = txnlog.read_snapshot(spark, table)
     assert dict(back.dtypes)["p"] == "date"
     assert back.collect()[0]["p"] == d
     # pruning by the python date value works (encoded like Spark's dir)
-    pruned = txnlog.read_snapshot_partitioned(
-        spark, table, "p", partition_values=[d]
-    )
+    pruned = txnlog.read_snapshot(spark, table, where={"p": [d]})
     assert pruned.count() == 1
 
 
@@ -436,13 +510,11 @@ def test_partitioned_hive_escaped_and_null_values(spark, table):
     assert txnlog._HIVE_NULL in live
     back = {
         r["k"]: r["p"]
-        for r in txnlog.read_snapshot_partitioned(spark, table, "p").collect()
+        for r in txnlog.read_snapshot(spark, table).collect()
     }
     assert back == {1: "a:b c", 2: None, 3: "plain"}
     # pruned read takes the RAW python value; escaping happens inside
-    esc = txnlog.read_snapshot_partitioned(
-        spark, table, "p", partition_values=["a:b c"]
-    )
+    esc = txnlog.read_snapshot(spark, table, where={"p": ["a:b c"]})
     assert [r["k"] for r in esc.collect()] == [1]
     # upsert into the escaped partition replaces only its files
     txnlog.txn_upsert_partitioned(
@@ -454,7 +526,7 @@ def test_partitioned_hive_escaped_and_null_values(spark, table):
     )
     now = {
         r["k"]: r["v"]
-        for r in txnlog.read_snapshot_partitioned(spark, table, "p").collect()
+        for r in txnlog.read_snapshot(spark, table).collect()
     }
     assert now == {1: "X", 2: "y", 3: "z"}
 
@@ -823,9 +895,7 @@ def test_clone_partitioned_carries_pruning_metadata(spark, tmp_path):
     )
     txnlog.txn_append_partitioned(spark, df, src, "region")
     txnlog.txn_clone(src, dst)
-    out = txnlog.read_snapshot_partitioned(
-        spark, dst, "region", partition_values=["eu"]
-    )
+    out = txnlog.read_snapshot(spark, dst, where={"region": ["eu"]})
     assert {r["k"] for r in out.collect()} == {1, 3}
 
 
@@ -857,6 +927,14 @@ def test_schema_evolution_is_metadata_only(spark, table):
     assert rows == {1: ("a", None), 2: ("b", None), 3: ("c", 30)}
 
 
+def _planned(spark, table, where):
+    """Names of the live files the read planner keeps for ``where``."""
+    return [
+        r.n
+        for r in txnlog.scan_candidates_df(spark, table, where).select("n").collect()
+    ]
+
+
 class TestBloomSkipping:
     def _build(self, spark, table, n=2000, commits=4):
         from pyspark.sql import functions as F
@@ -877,8 +955,8 @@ class TestBloomSkipping:
         assert len(all_files) > n_files_total
         # every present key must keep its owning file (no false negative):
         # key 5 lives in the commit where 5 % commits == 1
-        cand = txnlog.bloom_candidate_files(table, "k", [5])
-        rows = txnlog.read_snapshot_bloom(spark, table, "k", [5]).filter(
+        cand = _planned(spark, table, {"k": [5]})
+        rows = txnlog.read_snapshot(spark, table, where={"k": [5]}).filter(
             "k = 5"
         )
         assert rows.count() == 1
@@ -889,15 +967,15 @@ class TestBloomSkipping:
 
     def test_absent_key_prunes_everything_or_nearly(self, spark, table):
         self._build(spark, table)
-        cand = txnlog.bloom_candidate_files(table, "k", [10_000_000])
+        cand = _planned(spark, table, {"k": [10_000_000]})
         # fpp 1% per file: expected ~0 of the files survive
         assert len(cand) <= 1
-        got = txnlog.read_snapshot_bloom(spark, table, "k", [10_000_000])
+        got = txnlog.read_snapshot(spark, table, where={"k": [10_000_000]})
         assert got.filter("k = 10000000").count() == 0
 
     def test_empty_keyset_yields_empty_candidates(self, spark, table):
         self._build(spark, table)
-        assert txnlog.bloom_candidate_files(table, "k", []) == []
+        assert _planned(spark, table, {"k": []}) == []
 
     def test_files_without_blooms_kept_conservatively(self, spark, table):
         from pyspark.sql import functions as F
@@ -907,8 +985,8 @@ class TestBloomSkipping:
             (F.col("id") + 100000).alias("k"), F.lit(0).cast("bigint").alias("v")
         )
         txnlog.txn_append(spark, plain, table)  # no bloom on this commit
-        cand = txnlog.bloom_candidate_files(table, "k", [100003])
-        got = txnlog.read_snapshot_bloom(spark, table, "k", [100003]).filter(
+        cand = _planned(spark, table, {"k": [100003]})
+        got = txnlog.read_snapshot(spark, table, where={"k": [100003]}).filter(
             "k = 100003"
         )
         assert got.count() == 1  # bloom-less file was kept and scanned
@@ -921,10 +999,12 @@ class TestBloomSkipping:
         for sc in glob.glob(os.path.join(table, "data", "*.bloom.k")):
             os.remove(sc)
         # all sidecars gone: every file kept, lookups still correct
-        cand = txnlog.bloom_candidate_files(table, "k", [5])
+        cand = _planned(spark, table, {"k": [5]})
         assert len(cand) == len(txnlog.snapshot_files(table))
         assert (
-            txnlog.read_snapshot_bloom(spark, table, "k", [5]).filter("k = 5").count()
+            txnlog.read_snapshot(spark, table, where={"k": [5]})
+            .filter("k = 5")
+            .count()
             == 1
         )
 
@@ -1097,14 +1177,14 @@ class TestDeletionVectors:
         txnlog.txn_append_stats(spark, df.filter("k < 50"), table, ["k"])
         txnlog.txn_append_stats(spark, df.filter("k >= 50"), table, ["k"])
         txnlog.txn_delete_dv(spark, F.col("k").isin(7, 80), table)
-        got = txnlog.read_snapshot_skipping(spark, table, "k", 0, 49)
+        got = txnlog.read_snapshot(spark, table, where={"k": (0, 49)})
         assert got.filter("k = 7").count() == 0
         assert got.filter("k = 8").count() == 1
 
         btable = table + "_bloom"
         txnlog.txn_append_bloom(spark, df, btable, "k")
         txnlog.txn_delete_dv(spark, F.col("k") == 7, btable)
-        got = txnlog.read_snapshot_bloom(spark, btable, "k", [7, 8])
+        got = txnlog.read_snapshot(spark, btable, where={"k": [7, 8]})
         assert got.filter("k = 7").count() == 0
         assert got.filter("k = 8").count() == 1
 
@@ -1181,9 +1261,7 @@ class TestDeletionVectors:
         assert snap.count() == 7  # k in {0, 2, 4} deleted
         assert snap.filter("p = 'x' AND k < 5").count() == 0
         # pruned partitioned read applies the vectors too
-        pr = txnlog.read_snapshot_partitioned(
-            spark, table, "p", partition_values=["x"]
-        )
+        pr = txnlog.read_snapshot(spark, table, where={"p": ["x"]})
         assert {r["k"] for r in pr.collect()} == {6, 8}
 
     def test_whole_rewrite_forms_refuse_partitioned_tables(self, spark, table):
@@ -1232,7 +1310,7 @@ class TestCopyOnWriteDML:
             for n, st in txnlog.snapshot_stats(table).items()
             # files intersecting the pruned band; log-proven-empty parts
             # are never candidates, stat-less ones conservatively are —
-            # mirroring _cow_candidates
+            # mirroring txnlog._candidates
             if st.get("__rows__") != 0 and (st.get("k") is None or st["k"][0] <= 24)
         }
         txnlog.txn_delete_cow(
@@ -1326,7 +1404,7 @@ class TestCopyOnWriteDML:
         src = spark.createDataFrame([(0, "U"), (500, "N")], "k long, v string")
         before = _inodes(table)
         txnlog.txn_merge_cow(
-            spark, src, table, ["k"], use_bloom=True, bloom_col="k"
+            spark, src, table, ["k"], bloom_col="k"
         )
         after = _inodes(table)
         # at most the files whose bloom admits key 0 were rewritten; at
@@ -1679,9 +1757,7 @@ def test_partitioned_compaction_is_per_partition(spark, table):
     snap = txnlog.read_snapshot(spark, table)
     assert snap.count() == 29 and snap.filter("k = 2").count() == 0
     # partition pruning still works on the rewritten files
-    pr = txnlog.read_snapshot_partitioned(
-        spark, table, "p", partition_values=["hot"]
-    )
+    pr = txnlog.read_snapshot(spark, table, where={"p": ["hot"]})
     assert pr.count() == 19
     # unpartitioned tables transparently take the plain compactor
     t2 = table + "_plain"
@@ -1790,7 +1866,7 @@ def test_restore_partitioned_table(spark, table):
     txnlog.txn_restore(table, 0)                               # v2
     snap = txnlog.read_snapshot(spark, table)
     assert sorted((r["k"], r["p"]) for r in snap.collect()) == [(1, "x"), (2, "y")]
-    pr = txnlog.read_snapshot_partitioned(spark, table, "p", partition_values=["x"])
+    pr = txnlog.read_snapshot(spark, table, where={"p": ["x"]})
     assert {r["k"] for r in pr.collect()} == {1}
 
 
@@ -1867,9 +1943,9 @@ def test_indexed_append_enables_both_pruning_kinds(spark, table):
         )
     # zone maps answer ANALYZE and range skipping
     assert txnlog.snapshot_profile(table, ["k"])["n_rows"] == 100
-    assert txnlog.read_snapshot_skipping(spark, table, "k", 0, 10).count() == 50
+    assert txnlog.read_snapshot(spark, table, where={"k": (0, 10)}).count() == 50
     # blooms prune point lookups on the same files
-    cand = txnlog.bloom_candidate_files(table, "k", [7])
+    cand = _planned(spark, table, {"k": [7]})
     assert len(cand) == 1
 
 
@@ -2414,7 +2490,7 @@ class TestColumnMapping:
                 ["k"],
             )
         txnlog.txn_rename_column(spark, table, "k", "key")
-        got = txnlog.read_snapshot_skipping(spark, table, "key", 0, 24)
+        got = txnlog.read_snapshot(spark, table, where={"key": (0, 24)})
         assert got.columns == ["key", "v"]
         assert got.filter("key <= 24").count() == 25
 
@@ -3505,11 +3581,11 @@ class TestWidenColumn:
             ).coalesce(1),
             table, ["v"],
         )
-        lo = txnlog.read_snapshot_skipping(spark, table, "v", 2, 5)
+        lo = txnlog.read_snapshot(spark, table, where={"v": (2, 5)})
         assert dict(lo.dtypes)["v"] == "bigint"
         assert lo.filter("v BETWEEN 2 AND 5").count() == 4
-        hi = txnlog.read_snapshot_skipping(
-            spark, table, "v", 10_000_000_000, 20_000_000_000
+        hi = txnlog.read_snapshot(
+            spark, table, where={"v": (10_000_000_000, 20_000_000_000)}
         )
         # the int-era file's [0,9] band cannot intersect: pruned away
         assert hi.count() == 5
@@ -3705,10 +3781,11 @@ def test_auto_log_cleanup_property(spark, table, monkeypatch):
 
 
 class TestPrunedScanPlanning:
-    """Round-10: scan_candidates_df / read_snapshot_pruned — candidate
-    planning pushed into the checkpoint frames (snapshot_state_df), so a
-    selective read's driver memory is O(candidates), not O(live). The
-    results must match the driver-fold forms exactly."""
+    """read_snapshot(where=) plans its candidate files on the driver over
+    the folded log, or — once the checkpoint is multi-part — distributed
+    over the checkpoint frames (scan_candidates_df), so a selective
+    read's driver memory is O(candidates), not O(live). The two planners
+    must keep the same files, and the reads the same rows."""
 
     def _clustered(self, spark, table):
         df = spark.createDataFrame(
@@ -3724,27 +3801,144 @@ class TestPrunedScanPlanning:
         )
         txnlog.txn_append_stats(spark, df.filter("k >= 300"), table, ["k", "x"])
 
-    def test_matches_skipping_multi_with_dv(self, spark, table):
-        from pyspark.sql import functions as F
-
+    def _clustered_dv(self, spark, table):
         self._clustered(spark, table)
         txnlog.txn_delete_dv(spark, F.col("k") % 7 == 0, table)
-        bounds = {"k": (120, 180)}
+
+    def _statless(self, spark, table):
+        # file 1 carries stats, file 2 none
+        txnlog.txn_append_stats(
+            spark, _df(spark, [(1, "a"), (2, "b")]), table, ["k"]
+        )
+        txnlog.txn_append(spark, _df(spark, [(500, "z")]), table)
+
+    def _doubles(self, spark, table):
+        df = spark.createDataFrame([(1.5,), (7.5,)], "x double")
+        txnlog.txn_append_stats(spark, df.coalesce(1), table, ["x"])
+
+    def _strings(self, spark, table):
+        for lo in ("a", "m"):
+            df = spark.createDataFrame(
+                [(i, chr(ord(lo) + i)) for i in range(3)], "k long, v string"
+            )
+            txnlog.txn_append_stats(spark, df.coalesce(1), table, ["k", "v"])
+
+    def _partitioned(self, spark, table):
+        df = spark.createDataFrame(
+            [(i, ["eu", "us", "ap"][i % 3], i * 10) for i in range(90)],
+            "k long, region string, amt long",
+        )
+        txnlog.txn_append_partitioned(spark, df, table, "region")
+
+    def _bloomed(self, spark, table):
+        for m in range(3):  # hash-spread: only the blooms can prune
+            df = spark.range(300).filter(F.col("id") % 3 == m)
+            txnlog.txn_append_indexed(
+                spark, df.selectExpr("id AS k").coalesce(1), table,
+                stats_cols=["k"], bloom_col="k",
+            )
+
+    CASES = [
+        ("_clustered_dv", {"k": (120, 180)}),
+        ("_clustered", {"k": (0, 50)}),
+        ("_clustered", {"k": (5000, 6000)}),
+        ("_clustered", {"k": (120, 180), "x": (0.0, 200.0)}),
+        ("_clustered", {"k": [5, 250, 9999]}),
+        ("_clustered", {"k": []}),
+        ("_statless", {"k": (0, 10)}),
+        ("_statless", {"v": (0, 1)}),
+        ("_doubles", {"x": (10, 20)}),
+        ("_doubles", {"x": (10.0, 20.0)}),
+        # string stats probed with int bounds: not comparable -> kept
+        ("_strings", {"v": (0, 10)}),
+        ("_strings", {"v": ("b", "c")}),
+        ("_partitioned", {"region": ["eu"]}),
+        ("_partitioned", {"region": ["eu", "absent"], "k": (0, 10)}),
+        ("_bloomed", {"k": [7]}),
+        ("_bloomed", {"k": [7, 8, None]}),
+    ]
+
+    @pytest.mark.parametrize(
+        "build,where", CASES, ids=[f"{b}-{w}" for b, w in CASES]
+    )
+    def test_driver_and_distributed_planners_agree(
+        self, spark, table, build, where
+    ):
+        getattr(self, build)(spark, table)
+        live, _, props = txnlog._fold_log3(table, txnlog.current_version(table))
+        driver = txnlog._candidates(table, live, props, where)
+        distributed = sorted(_planned(spark, table, where))
+        assert driver == distributed
+
+    def test_matches_skipping_multi_with_dv(self, spark, table, monkeypatch):
+        """The same selective read through both planners: the distributed
+        one (multi-part checkpoint) returns the driver one's rows."""
+        self._clustered_dv(spark, table)
+        where = {"k": (120, 180)}
         want = sorted(
             (r.k, r.x, r.v)
-            for r in txnlog.read_snapshot_skipping_multi(
-                spark, table, bounds
-            ).collect()
+            for r in txnlog.read_snapshot(spark, table, where=where).collect()
         )
+        monkeypatch.setattr(txnlog, "CHECKPOINT_ROWS_PER_PART", 2)
+        txnlog.write_checkpoint(table)
         got = sorted(
             (r.k, r.x, r.v)
-            for r in txnlog.read_snapshot_pruned(spark, table, bounds).collect()
+            for r in txnlog.read_snapshot(spark, table, where=where).collect()
         )
         assert got == want
+        assert all(k % 7 for k, _, _ in got)  # the DV survived pruning
         # and the plan touched ONE band, not four
-        cand = txnlog.scan_candidates_df(spark, table, bounds).count()
-        total = len(txnlog.snapshot_files(table))
-        assert cand < total
+        assert len(_planned(spark, table, where)) < len(
+            txnlog.snapshot_files(table)
+        )
+
+    def test_multipart_checkpoint_selects_distributed_planner(
+        self, spark, table, monkeypatch
+    ):
+        self._clustered_dv(spark, table)
+        monkeypatch.setattr(txnlog, "CHECKPOINT_ROWS_PER_PART", 2)
+        txnlog.write_checkpoint(table)
+        calls = []
+        orig = txnlog.scan_candidates_df
+        monkeypatch.setattr(
+            txnlog,
+            "scan_candidates_df",
+            lambda *a, **k: (calls.append(a), orig(*a, **k))[1],
+        )
+
+        def no_fold(*a, **k):
+            raise AssertionError("read folded the live set on the driver")
+
+        monkeypatch.setattr(txnlog, "_fold_log3", no_fold)
+        out = txnlog.read_snapshot(spark, table, where={"k": (120, 180)})
+        got = sorted(r.k for r in out.filter("k BETWEEN 120 AND 180").collect())
+        assert got == [k for k in range(120, 181) if k % 7]
+        assert len(calls) == 1
+
+    @pytest.mark.parametrize("with_dv", [False, True])
+    def test_unfiltered_plan_unchanged(self, spark, table, capsys, with_dv):
+        """where=None keeps the pre-where plan: the DV-aware scan of every
+        live file, projected to the logical names."""
+        import re
+
+        (self._clustered_dv if with_dv else self._clustered)(spark, table)
+        props = txnlog.table_props(table)
+        before = txnlog._apply_colmap(
+            txnlog._read_files_dv(
+                spark, table, txnlog.snapshot_files(table),
+                txnlog.snapshot_dvs(table), props,
+            ),
+            props,
+        )
+
+        def plan(df):
+            df.explain("formatted")
+            # expression, RDD and plan ids differ between any two plans
+            out = capsys.readouterr().out
+            return re.sub(r"#\d+L?|RDD\[\d+\]|plan_id=\d+", "#", out)
+
+        assert bool(txnlog.snapshot_dvs(table)) == with_dv
+        assert plan(txnlog.read_snapshot(spark, table)) == plan(before)
 
     def test_plans_from_checkpoint_without_driver_fold(
         self, spark, table, monkeypatch
@@ -3758,124 +3952,61 @@ class TestPrunedScanPlanning:
             "_fold_log3",
             lambda *a, **k: (calls.append(a), orig(*a, **k))[1],
         )
-        names = {
-            r["n"]
-            for r in txnlog.scan_candidates_df(spark, table, {"k": (0, 50)})
-            .select("n")
-            .collect()
-        }
+        names = _planned(spark, table, {"k": (0, 50)})
         assert names  # the band's file(s) survived
         assert not calls, "planning fell back to the O(live) driver fold"
 
     def test_conservative_on_statless_and_type_mismatch(self, spark, table):
-        # file 1 carries stats, file 2 none: a selective read keeps #2
-        txnlog.txn_append_stats(
-            spark, _df(spark, [(1, "a"), (2, "b")]), table, ["k"]
-        )
-        txnlog.txn_append(spark, _df(spark, [(500, "z")]), table)
+        self._statless(spark, table)
         got = sorted(
             r.k
-            for r in txnlog.read_snapshot_pruned(
-                spark, table, {"k": (0, 10)}
+            for r in txnlog.read_snapshot(
+                spark, table, where={"k": (0, 10)}
             ).collect()
         )
         assert got == [1, 2, 500]  # statless file conservatively read
         # bounds on a stats-less STRING column: nothing prunable -> every
-        # live file with rows kept (zero-row files drop, same as
-        # read_snapshot_skipping_multi)
+        # live file with rows kept (zero-row files drop)
         n_nonempty = sum(
             1
             for st in txnlog.snapshot_stats(table).values()
             if st.get("__rows__") != 0
         )
-        assert (
-            txnlog.scan_candidates_df(spark, table, {"v": (0, 1)}).count()
-            == n_nonempty
-        )
+        assert len(_planned(spark, table, {"v": (0, 1)})) == n_nonempty
 
     def test_type_mismatch_casts_keep_not_drop(self, spark, table):
         # double stats probed with INT bounds: the bigint cast of "1.5"
         # is NULL, and a NULL stat must KEEP the file (conservative),
         # even though a double comparison would have pruned it
-        df = spark.createDataFrame([(1.5,), (7.5,)], "x double")
-        txnlog.txn_append_stats(spark, df.coalesce(1), table, ["x"])
-        assert txnlog.scan_candidates_df(spark, table, {"x": (10, 20)}).count() == 1
+        self._doubles(spark, table)
+        assert len(_planned(spark, table, {"x": (10, 20)})) == 1
         # float bounds take the double comparison and DO prune
-        assert (
-            txnlog.scan_candidates_df(spark, table, {"x": (10.0, 20.0)}).count()
-            == 0
-        )
+        assert _planned(spark, table, {"x": (10.0, 20.0)}) == []
 
-    def test_partitioned_matches_partitioned_read(self, spark, table):
-        df = spark.createDataFrame(
-            [(i, ["eu", "us", "ap"][i % 3], i * 10) for i in range(90)],
-            "k long, region string, amt long",
-        )
-        txnlog.txn_append_partitioned(spark, df, table, "region")
+    def test_partitioned_matches_partitioned_read(self, spark, table, monkeypatch):
+        self._partitioned(spark, table)
+        where = {"region": ["eu"]}
         want = sorted(
             (r.k, r.region, r.amt)
-            for r in txnlog.read_snapshot_partitioned(
-                spark, table, "region", partition_values=["eu"]
-            ).collect()
+            for r in txnlog.read_snapshot(spark, table).collect()
+            if r.region == "eu"
         )
+        monkeypatch.setattr(txnlog, "CHECKPOINT_ROWS_PER_PART", 1)
+        txnlog.write_checkpoint(table)
         got = sorted(
             (r.k, r.region, r.amt)
-            for r in txnlog.read_snapshot_pruned(
-                spark,
-                table,
-                partition_col="region",
-                partition_values=["eu"],
-            ).collect()
+            for r in txnlog.read_snapshot(spark, table, where=where).collect()
         )
         assert got == want
-        cand = txnlog.scan_candidates_df(
-            spark, table, partition_values=["eu"]
-        ).count()
+        cand = len(_planned(spark, table, where))
         total = len(txnlog.snapshot_files(table))
         assert 0 < cand < total
-        # partitioned read without the column name fails loudly
-        with pytest.raises(ValueError, match="partition_col"):
-            txnlog.read_snapshot_pruned(spark, table, partition_values=["eu"])
 
     def test_empty_candidates_returns_empty_with_schema(self, spark, table):
         self._clustered(spark, table)
-        out = txnlog.read_snapshot_pruned(spark, table, {"k": (5000, 6000)})
+        out = txnlog.read_snapshot(spark, table, where={"k": (5000, 6000)})
         assert out.count() == 0
         assert set(out.columns) == {"k", "x", "v"}
-
-    def test_precomputed_candidates_match_replanned_read(self, spark, table):
-        """read_snapshot_pruned(candidates=...) — plan once, read once
-        (r10 optimization): handing over the collected candidate rows
-        must produce exactly the replanned read's rows, and must not
-        run a second scan_candidates_df pass."""
-        from pyspark.sql import functions as F
-
-        self._clustered(spark, table)
-        txnlog.txn_delete_dv(spark, F.col("k") % 7 == 0, table)
-        bounds = {"k": (120, 180)}
-        cand = (
-            txnlog.scan_candidates_df(spark, table, bounds)
-            .select("n", "p", "dv")
-            .collect()
-        )
-        want = sorted(
-            (r.k, r.x, r.v)
-            for r in txnlog.read_snapshot_pruned(spark, table, bounds).collect()
-        )
-        import unittest.mock as mock
-
-        with mock.patch.object(
-            txnlog, "scan_candidates_df", side_effect=AssertionError(
-                "read_snapshot_pruned(candidates=...) replanned candidates"
-            )
-        ):
-            got = sorted(
-                (r.k, r.x, r.v)
-                for r in txnlog.read_snapshot_pruned(
-                    spark, table, bounds, candidates=cand
-                ).collect()
-            )
-        assert got == want
 
     def test_planning_memory_proportional_to_candidates(self, spark):
         """The probe's claim at pytest scale: candidate planning over

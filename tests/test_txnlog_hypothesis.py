@@ -17,6 +17,7 @@ states no example-based test enumerates."""
 import json
 import os
 
+import pytest
 from hypothesis import settings
 from hypothesis import strategies as st
 from hypothesis.stateful import (
@@ -27,6 +28,9 @@ from hypothesis.stateful import (
 )
 
 from dbimport_spark import txnlog
+
+
+pytestmark = pytest.mark.slow  # protocol fuzzers (~4 min)
 
 
 def _visible(table: str, version=None) -> set:

@@ -17,6 +17,9 @@ import pytest
 from dbimport_spark import txnlog
 
 
+pytestmark = pytest.mark.slow  # multiprocess commit races
+
+
 @pytest.fixture(autouse=True, params=["posix", "objstore"])
 def commit_backend(request):
     """Every MP race in this file runs TWICE: once on the POSIX

@@ -8,10 +8,11 @@ narrow key band:
 
 * ``full_fold``   — snapshot_files: the O(live) driver fold every
   read_snapshot-based path pays;
-* ``fold_prune``  — read_snapshot_skipping_multi's candidate loop:
-  still folds all live entries, prunes after;
-* ``frame_prune`` — scan_candidates_df + collect of survivors only:
-  the checkpoint-frame path, O(candidates) driver memory.
+* ``fold_prune``  — the driver planner's shape (read_snapshot(where=)
+  on a single-part checkpoint): folds all live entries, prunes after;
+* ``frame_prune`` — scan_candidates_df(where=) + collect of survivors
+  only: the checkpoint-frame path read_snapshot(where=) takes on a
+  multi-part checkpoint, O(candidates) driver memory.
 
 Run:  python tools/probe_plan_prune.py [n_files] [band_files]
 Prints one JSON line; the ratio frame/full is the claim being graded.
@@ -69,11 +70,11 @@ def run(spark, n_files=100_000, band_files=20):
     table = build(n_files)
     lo = (n_files // 2) * ROWS_PER_FILE
     hi = lo + band_files * ROWS_PER_FILE - 1
-    bounds = {"k": (lo, hi)}
+    where = {"k": (lo, hi)}
 
     # warm the Spark/py4j/Arrow import machinery once so the measured
     # peaks are the strategies' own allocations, not first-use costs
-    txnlog.scan_candidates_df(spark, table, bounds).select("n").collect()
+    txnlog.scan_candidates_df(spark, table, where=where).select("n").collect()
 
     full, p_full = peak(lambda: len(txnlog.snapshot_files(table)))
     pruned, p_fold = peak(
@@ -89,7 +90,7 @@ def run(spark, n_files=100_000, band_files=20):
     cand, p_frame = peak(
         lambda: [
             r["n"]
-            for r in txnlog.scan_candidates_df(spark, table, bounds)
+            for r in txnlog.scan_candidates_df(spark, table, where=where)
             .select("n")
             .collect()
         ]
