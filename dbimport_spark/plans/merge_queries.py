@@ -774,7 +774,7 @@ def lake_txn_partitioned_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     t0 = orders.filter(F.col("o_orderkey") % 3 != 0).select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    txnlog.txn_append_partitioned(spark, t0, path, "o_orderpriority")
+    txnlog.txn_append(spark, t0, path, props={"partition.column": "o_orderpriority"})
     src = (
         orders.filter(
             (F.col("o_orderkey") % 7 == 0)
@@ -809,7 +809,7 @@ def lake_txn_partitioned_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 FROM orders WHERE o_orderkey BETWEEN 1000 AND 5000""",
 )
 def lake_txn_zonemap_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Log-driven zone-map file skipping (txnlog.txn_append_stats /
+    """Log-driven zone-map file skipping (write.statsColumns /
     read_snapshot(where=) — the Iceberg/Delta data-skipping design:
     per-file footer min/max ride in the commit entry, selective reads
     prune FILES from the log without opening a single footer at read
@@ -832,7 +832,7 @@ def lake_txn_zonemap_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     if os.path.isdir(path):
         shutil.rmtree(path)
     orders = load(spark, sf_dir, "orders").repartitionByRange(8, "o_orderkey")
-    txnlog.txn_append_stats(spark, orders, path, stats_cols=["o_orderkey"])
+    txnlog.txn_append(spark, orders, path, props={"write.statsColumns": "o_orderkey"})
     pruned = txnlog.read_snapshot(spark, path, where={"o_orderkey": (1000, 5000)})
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
     return (
@@ -1189,7 +1189,7 @@ def lake_txn_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 FROM orders WHERE o_orderkey % 1009 = 17""",
 )
 def lake_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-sidecar file skipping on the lake (txnlog.txn_append_bloom /
+    """Bloom-sidecar file skipping on the lake (write.bloomColumns /
     read_snapshot(where=)): six commits land HASH-SPREAD orderkey slices —
     every file spans the full key range, so zone maps cannot prune a
     single file — then a sparse point-lookup keyset probes each live
@@ -1217,8 +1217,11 @@ def lake_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     for m in range(6):  # %6 classes interleave: every file spans the range
-        txnlog.txn_append_bloom(
-            spark, orders.filter(F.col("o_orderkey") % 6 == m), path, "o_orderkey"
+        txnlog.txn_append(
+            spark,
+            orders.filter(F.col("o_orderkey") % 6 == m),
+            path,
+            props={"write.bloomColumns": "o_orderkey"},
         )
 
     keys = [
@@ -1275,11 +1278,11 @@ def lake_stats_metadata_only(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(path)
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     for m in range(3):
-        txnlog.txn_append_stats(
+        txnlog.txn_append(
             spark,
             orders.filter(F.col("o_orderkey") % 4 == m),
             path,
-            ["o_orderkey", "o_totalprice"],
+            props={"write.statsColumns": "o_orderkey,o_totalprice"},
         )
     prof = txnlog.snapshot_profile(path, ["o_orderkey", "o_totalprice"])
     return spark.createDataFrame(
@@ -1393,14 +1396,14 @@ def lake_delete_cow_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_key = cust.agg(F.max("c_custkey")).first()[0]  # control plane, 1 value
     width = max(1, math.ceil((max_key + 1) / 8))  # keys are 0-based
     for b in range(8):  # contiguous half-open key bands -> selective zone maps
-        txnlog.txn_append_stats(
+        txnlog.txn_append(
             spark,
             cust.filter(
                 (F.col("c_custkey") >= b * width)
                 & (F.col("c_custkey") < (b + 1) * width)
             ),
             path,
-            ["c_custkey"],
+            props={"write.statsColumns": "c_custkey"},
         )
 
     txnlog.txn_delete_cow(
@@ -1408,7 +1411,6 @@ def lake_delete_cow_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c_custkey") <= 150) & (F.col("c_acctbal") < 0),
         path,
         zone=("c_custkey", 0, 150),
-        stats_cols=["c_custkey"],
     )
     return (
         txnlog.read_snapshot(spark, path)
@@ -1475,14 +1477,14 @@ def lake_merge_into_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_key = base.agg(F.max("c_custkey")).first()[0]
     width = max(1, math.ceil((max_key + 1) / 8))  # keys are 0-based
     for b in range(8):
-        txnlog.txn_append_stats(
+        txnlog.txn_append(
             spark,
             base.filter(
                 (F.col("c_custkey") >= b * width)
                 & (F.col("c_custkey") < (b + 1) * width)
             ),
             path,
-            ["c_custkey"],
+            props={"write.statsColumns": "c_custkey"},
         )
 
     src = (
@@ -1494,7 +1496,7 @@ def lake_merge_into_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    txnlog.txn_merge_cow(spark, src, path, ["c_custkey"], stats_cols=["c_custkey"])
+    txnlog.txn_merge_cow(spark, src, path, ["c_custkey"])
     return txnlog.read_snapshot(spark, path).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.sum("bal_cents").cast("bigint").alias("bal_sum"),
@@ -1758,16 +1760,13 @@ def lake_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("price_cents"),
     )
     for m in range(4):  # hash-spread: every file spans both dimensions
-        txnlog.txn_append_stats(
+        txnlog.txn_append(
             spark,
             orders.filter(F.col("o_orderkey") % 4 == m),
             path,
-            ["o_custkey", "o_day"],
+            props={"write.statsColumns": "o_custkey,o_day"},
         )
-    txnlog.txn_zorder(
-        spark, path, "o_custkey", "o_day", n_files=16,
-        stats_cols=["o_custkey", "o_day"],
-    )
+    txnlog.txn_zorder(spark, path, "o_custkey", "o_day", n_files=16)
     pruned = txnlog.read_snapshot(
         spark, path, where={"o_custkey": (0, 150), "o_day": (100, 200)}
     )
@@ -1882,11 +1881,11 @@ def lake_partitioned_dv_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("price_cents"),
     )
     for m in range(2):  # fragment every status partition (2 files/value)
-        txnlog.txn_append_partitioned(
+        txnlog.txn_append(
             spark,
             orders.filter(F.col("o_orderkey") % 2 == m).coalesce(2),
             path,
-            "o_orderstatus",
+            props={"partition.column": "o_orderstatus"},
         )
     txnlog.txn_delete_dv(
         spark,
@@ -2124,14 +2123,14 @@ def lake_delete_dv_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_key = cust.agg(F.max("c_custkey")).first()[0]
     width = max(1, math.ceil((max_key + 1) / 8))
     for b in range(8):
-        txnlog.txn_append_stats(
+        txnlog.txn_append(
             spark,
             cust.filter(
                 (F.col("c_custkey") >= b * width)
                 & (F.col("c_custkey") < (b + 1) * width)
             ),
             path,
-            ["c_custkey"],
+            props={"write.statsColumns": "c_custkey"},
         )
 
     txnlog.txn_delete_dv(
@@ -2701,7 +2700,7 @@ def lake_pruned_scan_planning(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .repartitionByRange(8, "o_orderkey")
     )
-    txnlog.txn_append_stats(spark, base, path, ["o_orderkey"])
+    txnlog.txn_append(spark, base, path, props={"write.statsColumns": "o_orderkey"})
     txnlog.write_checkpoint(path)
     # sf-relative band from the zone maps the append just recorded — the
     # table holds every orders row, so max(o_orderkey) is a metadata fold

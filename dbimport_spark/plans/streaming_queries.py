@@ -1194,8 +1194,11 @@ def stream_lake_cdc_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(path)
     d = load(spark, sf_dir, "documents").select("doc_id", "lang")
     for m in range(2):
-        txnlog.txn_append_partitioned(
-            spark, d.filter(F.col("doc_id") % 2 == m), path, "lang"
+        txnlog.txn_append(
+            spark,
+            d.filter(F.col("doc_id") % 2 == m),
+            path,
+            props={"partition.column": "lang"},
         )
     register_lake_cdc(spark)
     s = (
@@ -1472,7 +1475,7 @@ def stream_crawl_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_lake_sink_exactly_once_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACTLY-ONCE streaming sink into the transactional lake
-    (txnlog.txn_append_idempotent — Delta's txnAppId/txnVersion): each
+    (txnlog.txn_append(txn=) — Delta's txnAppId/txnVersion): each
     foreachBatch micro-batch commits its rows WITH its batch id in one
     atomic log entry, so a redelivered batch no-ops instead of
     duplicating. After the stream drains, the query adversarially
@@ -1497,7 +1500,7 @@ def stream_lake_sink_exactly_once_q(spark: SparkSession, sf_dir: str) -> DataFra
     stream = read_events_stream(spark, _events_path(sf_dir)).select(*cols)
 
     def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        txnlog.txn_append_idempotent(spark, bdf, target, app, batch_id)
+        txnlog.txn_append(spark, bdf, target, txn=(app, batch_id))
 
     q = (
         stream.writeStream.foreachBatch(write_batch)
@@ -1508,8 +1511,8 @@ def stream_lake_sink_exactly_once_q(spark: SparkSession, sf_dir: str) -> DataFra
     q.awaitTermination()
 
     # adversarial redelivery: the whole corpus arrives again as batch 0
-    txnlog.txn_append_idempotent(
-        spark, load_events(spark, sf_dir).select(*cols), target, app, 0
+    txnlog.txn_append(
+        spark, load_events(spark, sf_dir).select(*cols), target, txn=(app, 0)
     )
     return txnlog.read_snapshot(spark, target).select(*cols)
 
@@ -1546,8 +1549,8 @@ def stream_lake_expectations_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write_batch(bdf: DataFrame, batch_id: int) -> None:
         # exactly-once on BOTH destinations under redelivery: each side
         # commits under (app, batch_id) against its own watermark
-        txnlog.txn_append_routed_idempotent(
-            spark, bdf, target, quarantine, "lake_expectations", batch_id
+        txnlog.txn_append_routed(
+            spark, bdf, target, quarantine, txn=("lake_expectations", batch_id)
         )
 
     q = (
@@ -1626,9 +1629,7 @@ def pipeline_lakehouse_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         # clean half. (Guarding the whole batch on only the clean
         # table's watermark would permanently drop the quarantine rows
         # of a half-committed batch.)
-        txnlog.txn_append_routed_idempotent(
-            spark, bdf, target, quarantine, app, batch_id
-        )
+        txnlog.txn_append_routed(spark, bdf, target, quarantine, txn=(app, batch_id))
 
     q = (
         stream.writeStream.foreachBatch(write_batch)
@@ -1638,8 +1639,8 @@ def pipeline_lakehouse_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     # adversarial replay: the WHOLE corpus claims to be batch 0 again
-    txnlog.txn_append_idempotent(
-        spark, load_events(spark, sf_dir).select(*cols), target, app, 0
+    txnlog.txn_append(
+        spark, load_events(spark, sf_dir).select(*cols), target, txn=(app, 0)
     )
     # final OPTIMIZE pins the graded live-file count at exactly 1 for any
     # sf/batch structure (autoOptimize already compacted at even versions

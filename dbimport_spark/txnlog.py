@@ -657,41 +657,122 @@ def _enforce_schema(df: DataFrame, path: str, props: dict) -> None:
         )
 
 
-def _stage(df: DataFrame, path: str) -> list[str]:
-    """Write df's rows as fresh uniquely-named parquet files under data/
-    and return their basenames (staged but NOT yet visible — only a log
-    commit publishes them).
+#: Table properties that choose how _stage lays out a write's files —
+#: the only keys txn_append's ``props`` may set alongside its data.
+_LAYOUT_KEYS = frozenset(
+    (
+        "partition.column",
+        "write.maxRecordsPerFile",
+        "write.statsColumns",
+        "write.bloomColumns",
+    )
+)
 
-    Honors the ``write.maxRecordsPerFile`` table property (file-size
-    governance that travels WITH the table — every writer splits oversize
-    task outputs, so one misconfigured producer can't land a 50 GB
-    file)."""
-    stage_id = uuid.uuid4().hex
-    stage_dir = os.path.join(path, f"_staged_{stage_id}")
-    props = table_props(path) if current_version(path) >= 0 else {}
-    _enforce_schema(df, path, props)
+
+def _prop_cols(props: dict, key: str) -> list[str]:
+    """A comma-separated column-list property as a list."""
+    return [c.strip() for c in (props.get(key) or "").split(",") if c.strip()]
+
+
+def _stage(spark, df: DataFrame, path: str, props: dict | None = None) -> list:
+    """THE stager: write df's rows as fresh uniquely-named parquet files
+    under data/ and return their commit entries (staged but NOT yet
+    visible — only a log commit publishes them). Every append and every
+    rewrite stages here, so the file layout is chosen by the table's
+    properties, overlaid by ``props`` (layout keys the caller commits in
+    the same commit as the data):
+
+    * ``partition.column`` — a partitionBy write: each file covers one
+      value, which lives in its LOG entry (``p`` directory-encoded, ``t``
+      the DDL type) and not in the file (Delta's partitionValues);
+    * ``write.maxRecordsPerFile`` — file-size governance: every writer
+      splits oversize task outputs;
+    * ``write.statsColumns`` — per-file footer zone maps (``stats``);
+    * ``write.bloomColumns`` — per-file bloom sidecars at a 1%
+      false-positive rate (``stats.__bloom__``).
+
+    An entry is a bare file name when nothing rides along. The write is
+    staged INSIDE the table (``<path>/_staged_<id>``), so publishing into
+    data/ is a same-filesystem rename. Changing ``partition.column`` on
+    a table with live files is refused: the old files' values would be
+    read under the new column."""
+    import shutil
+
+    props = dict(props or {})
+    bad = sorted(set(props) - _LAYOUT_KEYS)
+    if bad:
+        raise ValueError(
+            f"{bad} are not layout properties (one of {sorted(_LAYOUT_KEYS)})"
+            " — set them with txn_set_property(path, key, value)"
+        )
+    v = current_version(path)
+    live, _, tprops = _fold_log3(path, v) if v >= 0 else ({}, None, {})
+    pcol = props.get("partition.column", tprops.get("partition.column"))
+    if live and pcol != tprops.get("partition.column"):
+        raise ValueError(
+            f"{path} has live files laid out by partition.column="
+            f"{tprops.get('partition.column')!r} — cannot change it to {pcol!r}"
+        )
+    eff = {k: val for k, val in {**tprops, **props}.items() if val is not None}
+    _enforce_schema(df, path, eff)
     # column mapping: on-disk files ALWAYS carry physical names, whatever
     # the writer's logical era (physical names are stable, so a rename
-    # racing this stage cannot invalidate the written files)
-    df = _unapply_colmap(df, props)
+    # racing this stage cannot invalidate the written files); the
+    # partition column lives in the log and its rename is refused
+    df = _unapply_colmap(df, eff, keep=(pcol,))
+    stats_cols = [_phys_col(eff, c) for c in _prop_cols(eff, "write.statsColumns")]
+    blooms = [
+        c
+        for c in (_phys_col(eff, c) for c in _prop_cols(eff, "write.bloomColumns"))
+        if c in df.columns and c != pcol
+    ]
+    stage_id = uuid.uuid4().hex
+    stage_dir = os.path.join(path, f"_staged_{stage_id}")
     writer = df.write.mode("overwrite")
-    max_rec = props.get("write.maxRecordsPerFile")
-    if max_rec:
-        writer = writer.option("maxRecordsPerFile", int(max_rec))
+    if eff.get("write.maxRecordsPerFile"):
+        writer = writer.option("maxRecordsPerFile", int(eff["write.maxRecordsPerFile"]))
+    if pcol is not None:
+        writer = writer.partitionBy(pcol)
     writer.parquet(stage_dir)
+    if pcol is None:
+        found = [(stage_dir, None)]
+    else:
+        ptype = df.schema[pcol].dataType.simpleString()
+        # "p" is the DIRECTORY-ENCODED value exactly as Spark wrote it
+        found = [
+            (os.path.join(stage_dir, sub), sub.split("=", 1)[1])
+            for sub in sorted(os.listdir(stage_dir))
+            if sub.startswith(f"{pcol}=")
+        ]
     os.makedirs(_data_dir(path), exist_ok=True)
-    names = []
-    for f in sorted(os.listdir(stage_dir)):
-        if f.endswith(".parquet"):
-            name = f"part-{stage_id}-{len(names):04d}.parquet"
-            os.replace(
-                os.path.join(stage_dir, f), os.path.join(_data_dir(path), name)
-            )
-            names.append(name)
-    for leftover in os.listdir(stage_dir):
-        os.remove(os.path.join(stage_dir, leftover))
-    os.rmdir(stage_dir)
-    return names
+    entries: list = []
+    for d, value in found:
+        for f in sorted(os.listdir(d)):
+            if not f.endswith(".parquet"):
+                continue
+            name = f"part-{stage_id}-{len(entries):04d}.parquet"
+            dest = os.path.join(_data_dir(path), name)
+            os.replace(os.path.join(d, f), dest)
+            st = _footer_stats(dest, stats_cols) if stats_cols else {}
+            if blooms:
+                st["__bloom__"] = {c: _bloom_build_file(path, name, c) for c in blooms}
+            e: dict = {"n": name, "p": value}
+            if pcol is not None:
+                e["t"] = ptype
+            if st:
+                e["stats"] = st
+            entries.append(e if pcol is not None or st else name)
+    shutil.rmtree(stage_dir, ignore_errors=True)
+    return entries
+
+
+def _drop_staged(path: str, entries) -> None:
+    """Remove never-committed staged files (invisible to every reader)."""
+    for n in _entry_files(entries):
+        try:
+            os.remove(os.path.join(_data_dir(path), n))
+        except FileNotFoundError:
+            pass
 
 
 # --------------------------------------------------- commit claim backend
@@ -1051,63 +1132,63 @@ def commit(
     return new_v
 
 
-def txn_append(spark, df: DataFrame, path: str, max_retries: int = 5) -> int:
-    """Append-commit df; returns the new version. Validates staged files
-    against the table's live CHECK constraints (see txn_add_check).
+def txn_append(
+    spark,
+    df: DataFrame,
+    path: str,
+    txn: tuple[str, int] | None = None,
+    props: dict | None = None,
+    max_retries: int = 5,
+) -> int:
+    """THE append: stage df (the table's layout properties choose
+    partitioning, file size, zone maps and bloom sidecars — see _stage)
+    and commit it; returns the new version.
 
-    When the table carries a ``write.statsColumns`` property (comma-
-    separated column names), the append records per-file zone maps for
-    those columns automatically — data-skipping policy that travels WITH
-    the table, like autoOptimize.every and write.maxRecordsPerFile:
-    every producer indexes the same columns with zero shared code.
+    ``props`` sets layout properties (_LAYOUT_KEYS) in the SAME commit as
+    the data, so the first append of a partitioned or indexed table
+    costs one version; every later write of the table, rewrites
+    included, keeps the layout. Other keys raise ValueError (they go
+    through txn_set_property, which validates CHECK and unique
+    declarations), as does changing ``partition.column`` on a table with
+    live files.
 
-    The table version is PINNED before validation and the commit targets
-    the pinned version: any commit that interleaves between validation
-    and commit — including a txn_add_check — forces the TxnConflict path
-    and therefore _revalidate_if_changed, so a violating row can never
-    slip in under a constraint added in that window."""
-    stats_prop = (
-        table_props(path).get("write.statsColumns")
-        if current_version(path) >= 0
-        else None
-    )
-    if stats_prop:
-        return txn_append_stats(
-            spark, df, path,
-            [c.strip() for c in stats_prop.split(",") if c.strip()],
-            max_retries,
-        )
-    added = _stage(df, path)
-    base_v = current_version(path)
-    checks = _validate_staged(spark, path, added)
+    ``txn=(app_id, batch_id)`` makes the append EXACTLY-ONCE (Delta's
+    SetTransaction): the commit records the batch id as the ``txn.<app>``
+    watermark, and a redelivered batch (id ≤ the last committed one for
+    that app) is skipped — returns the current version, writes nothing.
+    The skip check runs before staging and again in the retry loop (a
+    racing writer of the SAME app may land the batch while we stage).
+
+    Staged files are validated against the live CHECK and unique
+    constraints. The table version is PINNED before validation and the
+    commit targets it: any interleaving commit — a txn_add_check
+    included — forces the TxnConflict path and so
+    _revalidate_if_changed. Every append then runs _maybe_auto_optimize."""
+    if txn is not None and txn[1] <= last_committed_batch(path, txn[0]):
+        return current_version(path)
+    added = _stage(spark, df, path, props)
+    pcol = (props or {}).get("partition.column")
+    base_v = current_version(path)  # pinned pre-validation (check TOCTOU)
+    checks = _validate_staged(spark, path, added, pcol)
     _validate_unique(spark, path, added, base_v)
+    new_props = dict(props or {})
+    if txn is not None:
+        new_props[f"txn.{txn[0]}"] = str(txn[1])
     for _ in range(max_retries):
+        if txn is not None and txn[1] <= last_committed_batch(path, txn[0]):
+            _drop_staged(path, added)
+            return current_version(path)
         try:
-            v = commit(path, added, [], base_v, op="APPEND")
+            v = commit(
+                path, added, [], base_v, props=new_props or None,
+                op="APPEND" if txn is None else "STREAMING_APPEND",
+            )
             return _maybe_auto_optimize(spark, path, v)
         except TxnConflict:
             base_v = current_version(path)
-            checks = _revalidate_if_changed(spark, path, added, checks)
+            checks = _revalidate_if_changed(spark, path, added, checks, pcol)
             _validate_unique(spark, path, added, base_v)
-            continue
     raise TxnConflict(f"gave up after {max_retries} retries appending to {path}")
-
-
-def _stage_auto(spark, df: DataFrame, path: str) -> list:
-    """_stage honoring ``write.statsColumns``: rewrite commits (upsert /
-    delete / compact / merge) keep recording the table's declared
-    zone-map columns, so data skipping survives every DML — without the
-    property this is exactly _stage."""
-    prop = (
-        table_props(path).get("write.statsColumns")
-        if current_version(path) >= 0
-        else None
-    )
-    if prop:
-        return _stage_with_meta(
-            spark, df, path, [c.strip() for c in prop.split(",") if c.strip()]
-        )
-    return _stage(df, path)
 
 
 def txn_upsert(
@@ -1119,10 +1200,11 @@ def txn_upsert(
     live files}. Readers see the old or the new table, never a mix; old
     versions stay time-travelable.
 
-    This is the whole-snapshot rewrite form; partition-pruned selective
-    rewrite (sinks.merge_into_partitioned) composes with the same log by
-    removing/adding only the touched partitions' files — kept separate
-    here so the commit protocol stays readable."""
+    This is the whole-snapshot rewrite form of an unpartitioned table;
+    partitioned tables take txn_upsert_partitioned, which removes/adds
+    only the touched partitions' files. The merged result restages
+    through _stage, so the rewrite keeps the table's layout (file size,
+    zone maps, bloom sidecars)."""
     from dbimport_spark.operators.merge import upsert
 
     _refuse_partitioned(path, "txn_upsert")
@@ -1138,7 +1220,7 @@ def txn_upsert(
         target = read_snapshot(spark, path, base_v)
         old_files = [os.path.basename(f) for f in snapshot_files(path, base_v)]
         merged = upsert(target, source, keys)
-        added = _stage_auto(spark, merged, path)
+        added = _stage(spark, merged, path)
         _validate_staged(spark, path, added)  # merge may introduce new rows
         try:
             v = commit(path, added, old_files, base_v, op="UPSERT")
@@ -1231,55 +1313,6 @@ def _encode_partition_value(v) -> str:
     return _escape_path_name(str(v))
 
 
-def _stage_partitioned(df: DataFrame, path: str, partition_col: str):
-    """Stage df split by partition value; returns [{"n": name, "p": value}].
-    The partition column is stored in the LOG (not the file), mirroring
-    the lakehouse convention (Delta's partitionValues / hive dir layout);
-    readers re-attach it as a literal per file group."""
-    import shutil
-    import tempfile
-
-    stage_id = uuid.uuid4().hex
-    stage_dir = os.path.join(tempfile.gettempdir(), f"txn_stage_{stage_id}")
-    ptype = df.schema[partition_col].dataType.simpleString()
-    if current_version(path) >= 0:
-        _enforce_schema(df, path, table_props(path))
-    if current_version(path) >= 0:
-        # data columns to physical names; the partition column stays
-        # logical (it lives in the log, and its rename is refused)
-        mp, _ = _colmap(table_props(path))
-        if mp:
-            from pyspark.sql import functions as F
-
-            df = df.select(
-                *[
-                    F.col(c) if c == partition_col else F.col(c).alias(mp.get(c, c))
-                    for c in df.columns
-                ]
-            )
-    df.write.mode("overwrite").partitionBy(partition_col).parquet(stage_dir)
-    os.makedirs(_data_dir(path), exist_ok=True)
-    added = []
-    for sub in sorted(os.listdir(stage_dir)):
-        if not sub.startswith(f"{partition_col}="):
-            continue
-        value = sub.split("=", 1)[1]
-        for f in sorted(os.listdir(os.path.join(stage_dir, sub))):
-            if f.endswith(".parquet"):
-                name = f"part-{stage_id}-{len(added):04d}.parquet"
-                os.replace(
-                    os.path.join(stage_dir, sub, f),
-                    os.path.join(_data_dir(path), name),
-                )
-                # "p" is the DIRECTORY-ENCODED value exactly as Spark
-                # wrote it; "t" is the column's DDL type so readers can
-                # cast the re-attached literal back (a date/int partition
-                # must not come back as string).
-                added.append({"n": name, "p": value, "t": ptype})
-    shutil.rmtree(stage_dir, ignore_errors=True)
-    return added
-
-
 def _partition_lit(encoded, ptype):
     """Typed literal for a directory-encoded partition value."""
     from pyspark.sql import functions as F
@@ -1322,44 +1355,16 @@ def txn_upsert_partitioned(
             merged = upsert(target_slice, source, keys)
         else:
             merged = source
-        added = _stage_partitioned(merged, path, partition_col)
+        layout = {"partition.column": partition_col}
+        added = _stage(spark, merged, path, layout)
         _validate_staged(spark, path, added, partition_col)
         try:
             return commit(
-                path, added, old_touched, base_v, op="UPSERT",
-                props={"partition.column": partition_col},
+                path, added, old_touched, base_v, op="UPSERT", props=layout
             )
         except TxnConflict:
             continue
     raise TxnConflict(f"gave up after {max_retries} retries upserting {path}")
-
-
-def txn_append_partitioned(
-    spark, df: DataFrame, path: str, partition_col: str, max_retries: int = 5
-) -> int:
-    """Append-commit df split by partition value (each staged file covers
-    exactly one value, recorded in the log entry). CHECK constraints are
-    enforced like the unpartitioned append — the staged files are
-    validated with their partition values re-attached."""
-    added = _stage_partitioned(df, path, partition_col)
-    base_v = current_version(path)  # pinned pre-validation (check TOCTOU)
-    checks = _validate_staged(spark, path, added, partition_col)
-    _validate_unique(spark, path, added, base_v)
-    for _ in range(max_retries):
-        try:
-            # the partition COLUMN NAME rides as a property so generic
-            # readers (read_snapshot) can re-attach it without being told
-            v = commit(
-                path, added, [], base_v, op="APPEND",
-                props={"partition.column": partition_col},
-            )
-            return _maybe_auto_optimize(spark, path, v)
-        except TxnConflict:
-            base_v = current_version(path)
-            checks = _revalidate_if_changed(spark, path, added, checks)
-            _validate_unique(spark, path, added, base_v)
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries appending to {path}")
 
 
 def txn_delete(spark, source_pred, path: str, max_retries: int = 3) -> int:
@@ -1382,7 +1387,7 @@ def txn_delete(spark, source_pred, path: str, max_retries: int = 3) -> int:
         target = read_snapshot(spark, path, base_v)
         old_files = [os.path.basename(f) for f in snapshot_files(path, base_v)]
         kept = target.filter(~F.coalesce(source_pred, F.lit(False)))
-        added = _stage_auto(spark, kept, path)
+        added = _stage(spark, kept, path)
         try:
             v = commit(path, added, old_files, base_v, op="DELETE")
             _maybe_write_change_data(spark, path, v, old_files, added, base_v)
@@ -1548,7 +1553,7 @@ def txn_compact(
             ),
             table_props(path, base_v),
         ).coalesce(n_out)
-        added = _stage_auto(spark, df, path)
+        added = _stage(spark, df, path)
         old = [os.path.basename(f) for f in files]
         try:
             return commit(path, added, old, base_v, op="OPTIMIZE")
@@ -2453,45 +2458,6 @@ def _footer_stats(file_path: str, cols) -> dict:
     return out
 
 
-def txn_append_stats(
-    spark, df: DataFrame, path: str, stats_cols, max_retries: int = 5
-) -> int:
-    """Append-commit with per-file zone maps: each staged file's footer
-    min/max for ``stats_cols`` rides in the log entry, so selective reads
-    prune FILES from the log alone — the Iceberg/Delta data-skipping
-    design (their manifests/add-actions carry exactly these bounds).
-    Combine with a range-clustered write (sinks.write_clustered_parquet /
-    zorder) and a selective read touches O(matching files)."""
-    has_props = current_version(path) >= 0
-    if has_props:
-        stats_cols = [_phys_col(table_props(path), c) for c in stats_cols]
-    # autoOptimize composes with statsColumns-driven appends because the
-    # compaction rewrite goes through _stage_auto, which re-records the
-    # table's declared zone-map columns. Explicit ad-hoc stats_cols (no
-    # property) stay exempt — a compaction would discard them.
-    stats_from_prop = has_props and bool(
-        table_props(path).get("write.statsColumns")
-    )
-    added_names = _stage(df, path)
-    base_v = current_version(path)  # pinned pre-validation (check TOCTOU)
-    checks = _validate_staged(spark, path, added_names)
-    _validate_unique(spark, path, added_names, base_v)
-    added = [
-        {"n": n, "p": None, "stats": _footer_stats(os.path.join(_data_dir(path), n), stats_cols)}
-        for n in added_names
-    ]
-    for _ in range(max_retries):
-        try:
-            v = commit(path, added, [], base_v, op="APPEND")
-            return _maybe_auto_optimize(spark, path, v) if stats_from_prop else v
-        except TxnConflict:
-            base_v = current_version(path)
-            checks = _revalidate_if_changed(spark, path, added_names, checks)
-            _validate_unique(spark, path, added_names, base_v)
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries appending to {path}")
-
-
 def snapshot_stats(path: str, version: int | None = None) -> dict[str, dict]:
     """{file name → stats dict} for live files (missing → {})."""
     v_max = current_version(path) if version is None else version
@@ -2504,9 +2470,9 @@ def snapshot_profile(path: str, cols, version: int | None = None) -> dict:
     of a snapshot computed purely from the commit log's recorded file
     stats — zero data pages read, zero Spark jobs (the Delta/Iceberg
     "stats in metadata" answer path). Raises loudly when any live file
-    lacks the needed stats (appended without txn_append_stats, or a
-    NULL-only column chunk) — a metadata answer must never silently
-    degrade to a guess."""
+    lacks the needed stats (staged without the column in
+    ``write.statsColumns``, or a NULL-only column chunk) — a metadata
+    answer must never silently degrade to a guess."""
     if snapshot_dvs(path, version):
         raise ValueError(
             "snapshot_profile: table has live deletion vectors — recorded "
@@ -2524,7 +2490,7 @@ def snapshot_profile(path: str, cols, version: int | None = None) -> dict:
         if rows is None:
             raise ValueError(
                 f"snapshot_profile: {name} has no recorded row count "
-                "(committed without txn_append_stats)"
+                "(committed without write.statsColumns)"
             )
         n_rows += rows
         if rows == 0:
@@ -2821,11 +2787,12 @@ def _bloom_hashes(value) -> tuple[int, int]:
     return h1, h2
 
 
-def _bloom_params(n_rows: int, fpp: float = 0.01) -> tuple[int, int]:
+def _bloom_params(n_rows: int) -> tuple[int, int]:
+    """(bits, hashes) for a 1% false-positive rate."""
     import math
 
     n = max(1, n_rows)
-    m = max(64, int(-n * math.log(fpp) / (math.log(2) ** 2)))
+    m = max(64, int(-n * math.log(0.01) / (math.log(2) ** 2)))
     k = max(1, round(m / n * math.log(2)))
     return m, min(k, 16)
 
@@ -2834,7 +2801,7 @@ def _bloom_sidecar(path: str, name: str, col: str) -> str:
     return os.path.join(_data_dir(path), f"{name}.bloom.{col}")
 
 
-def _bloom_build_file(path: str, name: str, col: str, fpp: float) -> dict:
+def _bloom_build_file(path: str, name: str, col: str) -> dict:
     """Build+write the sidecar for one staged file; returns the log
     parameters. Reads ONLY the keyed column (footer-pruned)."""
     import zlib
@@ -2844,7 +2811,7 @@ def _bloom_build_file(path: str, name: str, col: str, fpp: float) -> dict:
     values = pq.read_table(
         os.path.join(_data_dir(path), name), columns=[col]
     )[col].to_pylist()
-    m, k = _bloom_params(len(values), fpp)
+    m, k = _bloom_params(len(values))
     bits = bytearray((m + 7) // 8)
     for v in values:
         if v is None:
@@ -2878,35 +2845,6 @@ def _bloom_might_contain(sidecar: str, meta: dict, values) -> bool:
         ):
             return True
     return False
-
-
-def txn_append_bloom(
-    spark, df: DataFrame, path: str, bloom_col: str, fpp: float = 0.01,
-    max_retries: int = 5,
-) -> int:
-    """Append-commit with a per-file Bloom sidecar over ``bloom_col``.
-    Here the sidecar build is a column-pruned pass per staged file; in a
-    production writer it would fold into the staging task itself (the
-    rows stream through it either way)."""
-    if current_version(path) >= 0:
-        bloom_col = _phys_col(table_props(path), bloom_col)
-    added_names = _stage(df, path)
-    base_v = current_version(path)  # pinned pre-validation (check TOCTOU)
-    checks = _validate_staged(spark, path, added_names)
-    _validate_unique(spark, path, added_names, base_v)
-    added = []
-    for n in added_names:
-        meta = _bloom_build_file(path, n, bloom_col, fpp)
-        added.append({"n": n, "p": None, "stats": {"__bloom__": {bloom_col: meta}}})
-    for _ in range(max_retries):
-        try:
-            return commit(path, added, [], base_v, op="APPEND")
-        except TxnConflict:
-            base_v = current_version(path)
-            checks = _revalidate_if_changed(spark, path, added_names, checks)
-            _validate_unique(spark, path, added_names, base_v)
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries appending to {path}")
 
 
 def txn_convert_parquet_dir(src_dir: str, path: str, stats_cols=()) -> int:
@@ -3470,51 +3408,12 @@ def _zone_bloom_where(zone: tuple | None, bloom: tuple | None) -> dict:
     return where
 
 
-def _stage_with_meta(
-    spark, df: DataFrame, path: str, stats_cols=(), bloom_col: str | None = None,
-    fpp: float = 0.01,
-) -> list:
-    """Stage ``df`` and build the commit entries with the same per-file
-    metadata the append forms record (footer stats / bloom sidecars), so
-    zone-map skipping, snapshot_profile and bloom lookups keep working
-    across CoW rewrites. Metadata columns are translated to PHYSICAL
-    names (the staged files carry them; log stats stay physical-keyed
-    across renames). When no stats columns are passed, the table's
-    declared ``write.statsColumns`` apply — pruned rewrites keep the
-    table's data-skipping policy without every caller re-plumbing it."""
-    props = table_props(path) if current_version(path) >= 0 else {}
-    if not stats_cols and props.get("write.statsColumns"):
-        stats_cols = [
-            c.strip()
-            for c in props["write.statsColumns"].split(",")
-            if c.strip()
-        ]
-    stats_cols = [_phys_col(props, c) for c in stats_cols]
-    if bloom_col is not None:
-        bloom_col = _phys_col(props, bloom_col)
-    names = _stage(df, path)
-    added: list = []
-    for n in names:
-        st = (
-            _footer_stats(os.path.join(_data_dir(path), n), stats_cols)
-            if stats_cols
-            else {}
-        )
-        if bloom_col is not None:
-            st = dict(st)
-            st["__bloom__"] = {bloom_col: _bloom_build_file(path, n, bloom_col, fpp)}
-        added.append({"n": n, "p": None, "stats": st} if st else n)
-    return added
-
-
 def txn_delete_cow(
     spark,
     source_pred,
     path: str,
     zone: tuple | None = None,
     bloom: tuple | None = None,
-    stats_cols=(),
-    bloom_col: str | None = None,
     max_retries: int = 3,
 ) -> int:
     """PRUNED copy-on-write DELETE: rewrite ONLY the files that may
@@ -3550,7 +3449,7 @@ def txn_delete_cow(
             spark, path, {n: live[n] for n in cand}, None, props
         )
         kept = slice_df.filter(~F.coalesce(source_pred, F.lit(False)))
-        added = _stage_with_meta(spark, kept, path, stats_cols, bloom_col)
+        added = _stage(spark, kept, path)
         try:
             return commit(path, added, cand, base_v, op="DELETE")
         except TxnConflict:
@@ -3564,8 +3463,6 @@ def txn_merge_cow(
     path: str,
     keys,
     prune_key: str | None = None,
-    stats_cols=(),
-    bloom_col: str | None = None,
     max_retries: int = 3,
 ) -> int:
     """PRUNED copy-on-write MERGE (UPSERT): only files that may contain a
@@ -3607,10 +3504,8 @@ def txn_merge_cow(
         else:
             target_slice = read_snapshot(spark, path, base_v).limit(0)
         merged = upsert(target_slice, source, keys)
-        added = _stage_with_meta(spark, merged, path, stats_cols, bloom_col)
-        _validate_staged(
-            spark, path, [e["n"] if isinstance(e, dict) else e for e in added]
-        )
+        added = _stage(spark, merged, path)
+        _validate_staged(spark, path, added)
         try:
             return commit(path, added, cand, base_v, op="MERGE")
         except TxnConflict:
@@ -3670,11 +3565,7 @@ def txn_set_property(path: str, key: str, value: str | None, max_retries: int = 
             ):
                 cur = table_props(path) if current_version(path) >= 0 else {}
                 if cur.get("unique.autoStats", "").lower() != "false":
-                    declared = [
-                        c.strip()
-                        for c in (cur.get("write.statsColumns") or "").split(",")
-                        if c.strip()
-                    ]
+                    declared = _prop_cols(cur, "write.statsColumns")
                     if value not in declared:
                         props["write.statsColumns"] = ",".join(
                             declared + [value]
@@ -3741,9 +3632,10 @@ def _apply_colmap(df, props: dict, keep=()):
     return df.select(*cols)
 
 
-def _unapply_colmap(df, props: dict):
+def _unapply_colmap(df, props: dict, keep=()):
     """Logical → physical projection for WRITE paths (staging): every
     file on disk carries physical names, whatever the writer's era.
+    ``keep`` columns (the partition column) pass through.
 
     Refuses a NEW logical column (schema evolution) whose name collides
     with an existing physical or dropped-physical name — writing it
@@ -3756,13 +3648,15 @@ def _unapply_colmap(df, props: dict):
 
     taken = set(mp.values()) | set(dropped)
     for c in df.columns:
-        if c not in mp and c in taken:
+        if c not in mp and c in taken and c not in keep:
             raise ValueError(
                 f"column {c!r} collides with a physical column name of "
                 "this table (a renamed or dropped column's stable file "
                 "name) — pick a different name"
             )
-    return df.select(*[F.col(c).alias(mp.get(c, c)) for c in df.columns])
+    return df.select(
+        *[F.col(c).alias(c if c in keep else mp.get(c, c)) for c in df.columns]
+    )
 
 
 def _phys_col(props: dict, col: str) -> str:
@@ -3916,7 +3810,6 @@ def _validate_staged(
     checks = table_checks(path)
     if not checks or not staged:
         return checks
-    names = [e["n"] if isinstance(e, dict) else e for e in staged]
     # the first partitioned commit sets the property IN this commit — the
     # writer passes the column name explicitly for that window
     pcol = partition_col or table_props(path).get("partition.column")
@@ -3946,11 +3839,7 @@ def _validate_staged(
     df = _apply_colmap(df, table_props(path), keep=(pcol,) if pcol else ())
     bad = df.filter(_violation_pred(checks)).count()
     if bad:
-        for n in names:
-            try:
-                os.remove(os.path.join(_data_dir(path), n))
-            except FileNotFoundError:
-                pass
+        _drop_staged(path, staged)
         raise CheckViolation(
             f"append to {path} rejected: {bad} row(s) violate "
             f"check constraint(s) {sorted(checks)}"
@@ -4024,20 +3913,15 @@ def _validate_unique(spark, path: str, staged, base_v: int) -> None:
         return
     from pyspark.sql import functions as F
 
-    names = [e["n"] if isinstance(e, dict) else e for e in staged]
     sdf = _apply_colmap(
         spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(_data_dir(path), n) for n in names]
+            *[os.path.join(_data_dir(path), n) for n in _entry_files(staged)]
         ),
         props,
     )
 
     def _reject(msg):
-        for n in names:
-            try:
-                os.remove(os.path.join(_data_dir(path), n))
-            except FileNotFoundError:
-                pass
+        _drop_staged(path, staged)
         raise UniqueViolation(msg)
 
     live, _, _ = _fold_log3(path, base_v) if base_v >= 0 else ({}, None, {})
@@ -4098,7 +3982,7 @@ def _validate_unique(spark, path: str, staged, base_v: int) -> None:
             kdf.unpersist()
 
 
-def _revalidate_if_changed(spark, path, staged_names, prev_checks):
+def _revalidate_if_changed(spark, path, staged, prev_checks, partition_col=None):
     """After a lost commit race: a rival commit may have ADDED a check
     between our validation and our commit — revalidate iff the live
     check set differs from the one already validated. This closes the
@@ -4107,7 +3991,7 @@ def _revalidate_if_changed(spark, path, staged_names, prev_checks):
     conflicts and lands here); with a freshly-read expect_version the
     interleaved constraint would slide by without a conflict."""
     if table_checks(path) != prev_checks:
-        return _validate_staged(spark, path, staged_names)
+        return _validate_staged(spark, path, staged, partition_col)
     return prev_checks
 
 
@@ -4116,6 +4000,7 @@ def txn_append_routed(
     df: DataFrame,
     path: str,
     quarantine: str,
+    txn: tuple[str, int] | None = None,
     max_retries: int = 5,
 ) -> tuple[int, int]:
     """Expectation-style routed append (Delta Live Tables' expectations):
@@ -4130,14 +4015,17 @@ def txn_append_routed(
     re-validates its staged files like any append (a concurrent
     constraint change still cannot sneak a violating row in).
 
-    Redelivery semantics: AT-LEAST-ONCE on both sides — a replayed
-    batch appends again. Streaming sinks that need exactly-once use
-    txn_append_routed_idempotent."""
+    Without ``txn`` a replayed batch appends again on both sides. With
+    ``txn=(app_id, batch_id)`` BOTH sides are exactly-once: each table
+    tracks its OWN ``txn.<app>`` watermark, so a crash between the
+    clean-side and the quarantine commit replays safely — the clean side
+    no-ops and the quarantine side commits (guarding the batch on the
+    clean table's watermark alone would drop its quarantine rows)."""
     from pyspark.sql import functions as F
 
     checks = table_checks(path)
     if not checks:
-        return txn_append(spark, df, path, max_retries), -1
+        return txn_append(spark, df, path, txn=txn, max_retries=max_retries), -1
     per_check = [
         F.when(~F.coalesce(F.expr(e).cast("boolean"), F.lit(True)), F.lit(n))
         for n, e in sorted(checks.items())
@@ -4149,62 +4037,11 @@ def txn_append_routed(
     try:
         clean = tagged.filter(F.size("_violated") == 0).drop("_violated")
         bad = tagged.filter(F.size("_violated") > 0)
-        v_table = txn_append(spark, clean, path, max_retries)
+        v_table = txn_append(spark, clean, path, txn=txn, max_retries=max_retries)
         v_quar = -1
         if bad.limit(1).count():
-            v_quar = txn_append(spark, bad, quarantine, max_retries)
-        return v_table, v_quar
-    finally:
-        tagged.unpersist()
-
-
-def txn_append_routed_idempotent(
-    spark,
-    df: DataFrame,
-    path: str,
-    quarantine: str,
-    app_id: str,
-    batch_id: int,
-    max_retries: int = 5,
-) -> tuple[int, int]:
-    """Expectation-routed append with EXACTLY-ONCE on BOTH sides: each
-    destination commits through txn_append_idempotent under the same
-    ``(app_id, batch_id)``, and each table tracks its OWN ``txn.<app>``
-    watermark. A crash between the clean-side commit and the quarantine
-    commit therefore replays safely: the clean side no-ops (already
-    committed) and the quarantine side commits — no batch can be
-    double-ingested OR half-dropped. (txn_append_routed, by contrast, is
-    at-least-once under redelivery on both sides; and guarding a whole
-    replayed batch on only the clean table's watermark would permanently
-    drop that batch's quarantine rows.) Returns
-    ``(table_version, quarantine_version)``; quarantine version is -1
-    when this batch has no violating rows."""
-    from pyspark.sql import functions as F
-
-    checks = table_checks(path)
-    if not checks:
-        return (
-            txn_append_idempotent(spark, df, path, app_id, batch_id, max_retries),
-            -1,
-        )
-    per_check = [
-        F.when(~F.coalesce(F.expr(e).cast("boolean"), F.lit(True)), F.lit(n))
-        for n, e in sorted(checks.items())
-    ]
-    tagged = df.withColumn(
-        "_violated",
-        F.filter(F.array(*per_check), lambda x: x.isNotNull()),
-    ).persist()
-    try:
-        clean = tagged.filter(F.size("_violated") == 0).drop("_violated")
-        bad = tagged.filter(F.size("_violated") > 0)
-        v_table = txn_append_idempotent(
-            spark, clean, path, app_id, batch_id, max_retries
-        )
-        v_quar = -1
-        if bad.limit(1).count():
-            v_quar = txn_append_idempotent(
-                spark, bad, quarantine, app_id, batch_id, max_retries
+            v_quar = txn_append(
+                spark, bad, quarantine, txn=txn, max_retries=max_retries
             )
         return v_table, v_quar
     finally:
@@ -4330,16 +4167,16 @@ def txn_zorder(
     path: str,
     *cols: str,
     n_files: int = 16,
-    stats_cols=(),
     max_retries: int = 3,
 ) -> int:
     """OPTIMIZE ZORDER BY — transactional multi-column re-clustering:
     read the snapshot (deletion vectors materialize away), Morton-order
     the rows on N clustering columns (functions/zorder.py: one range
-    shuffle + within-partition sort), and commit the rewrite with fresh
-    per-file footer stats so zone maps prune on ANY clustered column
-    afterwards. Content is invariant; time travel keeps the old layout
-    until vacuum.
+    shuffle + within-partition sort), and commit the rewrite with the
+    clustering columns added to ``write.statsColumns`` in the same
+    commit, so zone maps prune on ANY clustered column afterwards — and
+    keep pruning across later writes. Content is invariant; time travel
+    keeps the old layout until vacuum.
 
     Every dimension is min/max-normalized to the SAME bit width before
     interleaving (Delta's range-id step): raw interleaving of unequal-
@@ -4353,7 +4190,6 @@ def txn_zorder(
     cols = list(cols)
     if len(cols) < 2:
         raise ValueError("txn_zorder: need at least 2 clustering columns")
-    stats_cols = list(stats_cols) or cols
     nb = min(16, 62 // len(cols))  # normalized bits per dimension
 
     for _ in range(max_retries):
@@ -4397,9 +4233,18 @@ def txn_zorder(
             .sortWithinPartitions("__z")
             .drop(*tmp_cols, "__z")
         )
-        added = _stage_with_meta(spark, clustered, path, stats_cols)
+        declared = _prop_cols(props_v, "write.statsColumns")
+        layout = {
+            "write.statsColumns": ",".join(
+                declared + [c for c in cols if c not in declared]
+            )
+        }
+        added = _stage(spark, clustered, path, layout)
         try:
-            return commit(path, added, sorted(live), base_v, op="OPTIMIZE_ZORDER")
+            return commit(
+                path, added, sorted(live), base_v, props=layout,
+                op="OPTIMIZE_ZORDER",
+            )
         except TxnConflict:
             continue
     raise TxnConflict(f"gave up after {max_retries} retries z-ordering {path}")
@@ -4408,11 +4253,10 @@ def txn_zorder(
 def _maybe_auto_optimize(spark, path: str, new_version: int) -> int:
     """Auto-compaction (Delta autoOptimize as a table property): when
     ``autoOptimize.every = N`` is set, every Nth version triggers a
-    compaction right after the triggering append commits. Hooked into the
-    PLAIN append paths only (txn_append / txn_append_partitioned /
-    txn_append_idempotent — where streaming and incremental loads pile up
-    small files); the stats/bloom appends are deliberately exempt, since
-    a blanket compaction would discard their curated per-file metadata.
+    compaction right after the triggering append commits. Every
+    txn_append runs it (streaming and incremental loads are where small
+    files pile up). The compaction restages through _stage, so it keeps
+    the table's layout — partitioning, zone maps, bloom sidecars.
     Returns the latest version (the compaction's, when one ran)."""
     every = table_props(path).get("autoOptimize.every")
     if not every:
@@ -4435,99 +4279,6 @@ def last_committed_batch(path: str, app_id: str) -> int:
     checkpoint-consolidated and time-travelable for free."""
     v = table_props(path).get(f"txn.{app_id}")
     return int(v) if v is not None else -1
-
-
-def txn_append_partitioned_idempotent(
-    spark, df: DataFrame, path: str, partition_col: str, app_id: str,
-    batch_id: int, max_retries: int = 5,
-) -> int:
-    """Partitioned + EXACTLY-ONCE streaming append — the partitioned arm
-    of txn_append_idempotent: the batch is staged split by partition
-    value (values in the LOG, files value-pure), the commit atomically
-    records the ``(app_id, batch_id)`` watermark, and a redelivered
-    batch is SKIPPED with its staged files removed. Completes the
-    exactly-once matrix for foreachBatch sinks on partitioned tables."""
-    if batch_id <= last_committed_batch(path, app_id):
-        return current_version(path)
-    added = _stage_partitioned(df, path, partition_col)
-    base_v = current_version(path)  # pinned pre-validation (check TOCTOU)
-    checks = _validate_staged(spark, path, added, partition_col)
-    _validate_unique(spark, path, added, base_v)
-    names = [e["n"] for e in added]
-    for _ in range(max_retries):
-        if batch_id <= last_committed_batch(path, app_id):
-            for n in names:
-                try:
-                    os.remove(os.path.join(_data_dir(path), n))
-                except FileNotFoundError:
-                    pass
-            return current_version(path)
-        try:
-            v = commit(
-                path, added, [], base_v,
-                props={
-                    f"txn.{app_id}": str(batch_id),
-                    "partition.column": partition_col,
-                },
-                op="STREAMING_APPEND",
-            )
-            return _maybe_auto_optimize(spark, path, v)
-        except TxnConflict:
-            base_v = current_version(path)
-            checks = _revalidate_if_changed(spark, path, added, checks)
-            _validate_unique(spark, path, added, base_v)
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries appending to {path}")
-
-
-def txn_append_idempotent(
-    spark, df: DataFrame, path: str, app_id: str, batch_id: int,
-    max_retries: int = 5,
-) -> int:
-    """EXACTLY-ONCE streaming append (Delta's txnAppId/txnVersion
-    SetTransaction): the commit atomically records ``(app_id, batch_id)``
-    with the data, and a redelivered batch (id ≤ the last committed one
-    for this app) is SKIPPED — returns the current version, writes
-    nothing. foreachBatch sinks get end-to-end exactly-once from at-least
-    -once delivery: after a crash between "data committed" and
-    "streaming checkpoint advanced", the replayed batch no-ops instead of
-    duplicating rows. Batch ids must be monotonically increasing per app,
-    which Spark's epoch ids are.
-
-    The skip check runs before staging (cheap) and again inside the
-    commit-retry loop (a racing writer of the SAME app may have landed
-    this batch while we staged — its commit conflicts ours, the re-check
-    sees its recorded batch id, and our staged files are dropped)."""
-    if batch_id <= last_committed_batch(path, app_id):
-        return current_version(path)
-    added = _stage(df, path)
-    base_v = current_version(path)  # pinned pre-validation (check TOCTOU)
-    checks = _validate_staged(spark, path, added)
-    _validate_unique(spark, path, added, base_v)
-    for _ in range(max_retries):
-        if batch_id <= last_committed_batch(path, app_id):
-            for n in added:
-                try:
-                    os.remove(os.path.join(_data_dir(path), n))
-                except FileNotFoundError:
-                    pass
-            return current_version(path)
-        try:
-            v = commit(
-                path,
-                added,
-                [],
-                base_v,
-                props={f"txn.{app_id}": str(batch_id)},
-                op="STREAMING_APPEND",
-            )
-            return _maybe_auto_optimize(spark, path, v)
-        except TxnConflict:
-            base_v = current_version(path)
-            checks = _revalidate_if_changed(spark, path, added, checks)
-            _validate_unique(spark, path, added, base_v)
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries appending to {path}")
 
 
 def export_symlink_manifest(path: str, version: int | None = None) -> str:
@@ -4631,9 +4382,7 @@ def txn_compact_partitioned(
         # one task per rewritten value → one output file per value (the
         # per-value coalesce granularity; finer splitting belongs to the
         # writer's maxRecordsPerFile at real scale)
-        added = _stage_partitioned(
-            union.repartition(len(groups), _F.col(pcol)), path, pcol
-        )
+        added = _stage(spark, union.repartition(len(groups), _F.col(pcol)), path)
         try:
             return commit(path, added, removed, base_v, op="OPTIMIZE")
         except TxnConflict:
@@ -4731,7 +4480,7 @@ def txn_merge_dv(
             .collect()
         )
         dv = [{"n": r["n"], "d": r["d"], "k": int(r["k"])} for r in entries]
-        added = _stage(source, path)
+        added = _stage(spark, source, path)
         _validate_staged(spark, path, added)
         try:
             return commit(
@@ -4746,11 +4495,7 @@ def txn_merge_dv(
                     os.remove(os.path.join(data_dir, e["d"]))
                 except FileNotFoundError:
                     pass
-            for n in added:
-                try:
-                    os.remove(os.path.join(data_dir, n))
-                except FileNotFoundError:
-                    pass
+            _drop_staged(path, added)
             continue
     raise TxnConflict(f"gave up after {max_retries} retries DV-merging into {path}")
 
@@ -4791,7 +4536,7 @@ def txn_merge_into(
         target = read_snapshot(spark, path, base_v)
         old_files = [os.path.basename(f) for f in snapshot_files(path, base_v)]
         merged = merge_into(target, source, keys, clauses)
-        added = _stage_auto(spark, merged, path)
+        added = _stage(spark, merged, path)
         _validate_staged(spark, path, added)
         props = {f"txn.{app_id}": str(batch_id)} if app_id is not None else None
         try:
@@ -4804,23 +4549,14 @@ def txn_merge_into(
             # lost the race: drop our invisible staged files and re-merge
             # against the new snapshot (the skip check re-runs first — the
             # rival may have been the SAME app landing this batch)
-            for e in added:
-                try:
-                    os.remove(
-                        os.path.join(
-                            _data_dir(path), e["n"] if isinstance(e, dict) else e
-                        )
-                    )
-                except FileNotFoundError:
-                    pass
+            _drop_staged(path, added)
             continue
     raise TxnConflict(f"gave up after {max_retries} retries merging into {path}")
 
 
 def txn_merge_into_cow(
     spark, source: DataFrame, path: str, keys, clauses,
-    prune_key: str | None = None,
-    stats_cols=(), bloom_col: str | None = None, max_retries: int = 3,
+    prune_key: str | None = None, max_retries: int = 3,
     app_id: str | None = None, batch_id: int | None = None,
 ) -> int:
     """PRUNED clause MERGE — txn_merge_into's scale path: only files
@@ -4870,62 +4606,12 @@ def txn_merge_into_cow(
         else:
             target_slice = read_snapshot(spark, path, base_v).limit(0)
         merged = merge_into(target_slice, source, keys, clauses)
-        added = _stage_with_meta(spark, merged, path, stats_cols, bloom_col)
-        _validate_staged(
-            spark, path, [e["n"] if isinstance(e, dict) else e for e in added]
-        )
+        added = _stage(spark, merged, path)
+        _validate_staged(spark, path, added)
         extra = {f"txn.{app_id}": str(batch_id)} if app_id is not None else None
         try:
             return commit(path, added, cand, base_v, props=extra, op="MERGE")
         except TxnConflict:
-            for e in added:
-                try:
-                    os.remove(
-                        os.path.join(
-                            _data_dir(path), e["n"] if isinstance(e, dict) else e
-                        )
-                    )
-                except FileNotFoundError:
-                    pass
+            _drop_staged(path, added)
             continue
     raise TxnConflict(f"gave up after {max_retries} retries merging into {path}")
-
-
-def txn_append_indexed(
-    spark, df: DataFrame, path: str, stats_cols=(), bloom_col: str | None = None,
-    fpp: float = 0.01, max_retries: int = 5,
-) -> int:
-    """Append-commit with BOTH per-file zone maps and a Bloom sidecar in
-    one commit — the fully-indexed ingest form (txn_append_stats and
-    txn_append_bloom each record one kind; production writers record
-    both, enabling range AND point pruning on the same files)."""
-    if current_version(path) >= 0:
-        props = table_props(path)
-        stats_cols = [_phys_col(props, c) for c in stats_cols]
-        if bloom_col is not None:
-            bloom_col = _phys_col(props, bloom_col)
-    added_names = _stage(df, path)
-    base_v = current_version(path)  # pinned pre-validation (check TOCTOU)
-    checks = _validate_staged(spark, path, added_names)
-    _validate_unique(spark, path, added_names, base_v)
-    added = []
-    for n in added_names:
-        st = (
-            _footer_stats(os.path.join(_data_dir(path), n), stats_cols)
-            if stats_cols
-            else {}
-        )
-        if bloom_col is not None:
-            st = dict(st)
-            st["__bloom__"] = {bloom_col: _bloom_build_file(path, n, bloom_col, fpp)}
-        added.append({"n": n, "p": None, "stats": st})
-    for _ in range(max_retries):
-        try:
-            v = commit(path, added, [], base_v, op="APPEND")
-            return _maybe_auto_optimize(spark, path, v)
-        except TxnConflict:
-            base_v = current_version(path)
-            checks = _revalidate_if_changed(spark, path, added_names, checks)
-            _validate_unique(spark, path, added_names, base_v)
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries appending to {path}")

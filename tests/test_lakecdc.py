@@ -175,7 +175,7 @@ def test_partitioned_table_requires_and_honors_partition_column(spark, tmp_path)
     df = spark.range(20).select(
         F.col("id").alias("k"), (F.col("id") % 3).cast("string").alias("lang")
     )
-    txnlog.txn_append_partitioned(spark, df, path, "lang")
+    txnlog.txn_append(spark, df, path, props={"partition.column": "lang"})
     register_lake_cdc(spark)
     # without the option: loud error at planning time
     s = spark.readStream.format("lake_cdc").option("path", path).load()
@@ -528,7 +528,7 @@ def test_change_feed_partitioned_dv_delete(spark, tmp_path):
     df = spark.range(12).select(
         F.col("id").alias("k"), (F.col("id") % 3).cast("string").alias("lang")
     )
-    txnlog.txn_append_partitioned(spark, df, path, "lang")
+    txnlog.txn_append(spark, df, path, props={"partition.column": "lang"})
     txnlog.txn_delete_dv(spark, F.col("k") == 4, path)  # lang "1"
     got = _drain_cdf(
         spark, path, str(tmp_path / "cp"), str(tmp_path / "sink"),

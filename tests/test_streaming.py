@@ -539,9 +539,7 @@ def test_lake_sink_idempotent_across_checkpoint_loss(spark, tmp_path):
         )
         q = (
             stream.writeStream.foreachBatch(
-                lambda bdf, bid: txnlog.txn_append_idempotent(
-                    spark, bdf, target, app, bid
-                )
+                lambda bdf, bid: txnlog.txn_append(spark, bdf, target, txn=(app, bid))
             )
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -557,21 +555,19 @@ def test_lake_sink_idempotent_across_checkpoint_loss(spark, tmp_path):
     assert txnlog.read_snapshot(spark, target).count() == 10  # no duplicates
     assert txnlog.current_version(target) == v_after  # not even empty commits
     # a genuinely NEW batch id still lands
-    txnlog.txn_append_idempotent(
+    txnlog.txn_append(
         spark,
         spark.createDataFrame([(99, 9.0)], "k long, v double"),
         target,
-        app,
-        txnlog.last_committed_batch(target, app) + 1,
+        txn=(app, txnlog.last_committed_batch(target, app) + 1),
     )
     assert txnlog.read_snapshot(spark, target).count() == 11
     # a DIFFERENT app's batch 0 is not confused with this app's
-    txnlog.txn_append_idempotent(
+    txnlog.txn_append(
         spark,
         spark.createDataFrame([(100, 1.0)], "k long, v double"),
         target,
-        "other_app",
-        0,
+        txn=("other_app", 0),
     )
     assert txnlog.read_snapshot(spark, target).count() == 12
 

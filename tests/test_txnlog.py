@@ -36,7 +36,7 @@ def test_append_upsert_and_time_travel(spark, table):
 def test_staged_files_invisible_until_commit(spark, table):
     txnlog.txn_append(spark, _df(spark, [(1, "a")]), table)
     # stage a second batch but do NOT commit it
-    txnlog._stage(_df(spark, [(99, "zz")]), table)
+    txnlog._stage(spark, _df(spark, [(99, "zz")]), table)
     got = {r["k"] for r in txnlog.read_snapshot(spark, table).collect()}
     assert got == {1}
     # the physical file exists but no reader resolves it
@@ -169,7 +169,7 @@ def test_vacuum_racing_reader_and_staged_writer(spark, table):
     txnlog.txn_upsert(spark, _df(spark, [(1, "A"), (2, "b")]), table, ["k"])
     txnlog.txn_upsert(spark, _df(spark, [(3, "c")]), table, ["k"])
     # in-flight writer staged, not yet committed
-    staged = txnlog._stage(_df(spark, [(99, "zz")]), table)
+    staged = txnlog._stage(spark, _df(spark, [(99, "zz")]), table)
     doomed = txnlog.vacuum(table, retain_versions=2)
     assert doomed  # version 0's file really was reclaimed
     for name in staged:
@@ -203,8 +203,8 @@ def test_zone_map_null_only_and_statless_files(spark, table):
     stats collection."""
     df_null = spark.createDataFrame([(None, "x"), (None, "y")], "k long, v string")
     df_vals = spark.createDataFrame([(5, "five"), (6, "six")], "k long, v string")
-    txnlog.txn_append_stats(spark, df_null, table, ["k"])
-    txnlog.txn_append_stats(spark, df_vals, table, ["k"])
+    txnlog.txn_append(spark, df_null, table, props={"write.statsColumns": "k"})
+    txnlog.txn_append(spark, df_vals, table, props={"write.statsColumns": "k"})
     stats = txnlog.snapshot_stats(table)
     # the NULL-only batch's file(s) omit the column's stats entirely;
     # the value batch's file(s) carry real finite bounds
@@ -244,11 +244,11 @@ def _pdf(spark, rows):
 
 
 def test_partitioned_upsert_carries_untouched_files(spark, table):
-    txnlog.txn_append_partitioned(
+    txnlog.txn_append(
         spark,
         _pdf(spark, [(1, "A", "a1"), (2, "A", "a2"), (3, "B", "b1"), (4, "C", "c1")]),
         table,
-        "p",
+        props={"partition.column": "p"},
     )
     before = txnlog.snapshot_partitions(table)
     # upsert touches only partition A (update k=2, insert k=5)
@@ -283,8 +283,11 @@ def test_partitioned_upsert_carries_untouched_files(spark, table):
 
 
 def test_partitioned_read_prunes_to_requested_values(spark, table):
-    txnlog.txn_append_partitioned(
-        spark, _pdf(spark, [(1, "A", "a"), (2, "B", "b")]), table, "p"
+    txnlog.txn_append(
+        spark,
+        _pdf(spark, [(1, "A", "a"), (2, "B", "b")]),
+        table,
+        props={"partition.column": "p"},
     )
     only_b = txnlog.read_snapshot(spark, table, where={"p": ["B"]})
     assert [r["k"] for r in only_b.collect()] == [2]
@@ -298,13 +301,16 @@ def test_partitioned_read_null_fills_evolved_partition(spark, table):
     """A later partition's append added a column: the plain read and the
     DV delete's position scan union the per-partition scans by name and
     NULL-fill the older groups."""
-    txnlog.txn_append_partitioned(
-        spark, _pdf(spark, [(1, "A", "a"), (3, "A", "c")]), table, "p"
+    txnlog.txn_append(
+        spark,
+        _pdf(spark, [(1, "A", "a"), (3, "A", "c")]),
+        table,
+        props={"partition.column": "p"},
     )
     wide = spark.createDataFrame(
         [(2, "B", "b", 7)], "k long, p string, v string, extra long"
     )
-    txnlog.txn_append_partitioned(spark, wide, table, "p")
+    txnlog.txn_append(spark, wide, table, props={"partition.column": "p"})
     out = txnlog.read_snapshot(spark, table)
     assert out.columns[-1] == "p"
     assert {r.k: (r.p, r.v, r.extra) for r in out.collect()} == {
@@ -319,8 +325,11 @@ def test_partitioned_read_null_fills_evolved_partition(spark, table):
 
 
 def test_absent_partition_value_reads_empty_with_schema(spark, table):
-    txnlog.txn_append_partitioned(
-        spark, _pdf(spark, [(1, "A", "a"), (2, "B", "b")]), table, "p"
+    txnlog.txn_append(
+        spark,
+        _pdf(spark, [(1, "A", "a"), (2, "B", "b")]),
+        table,
+        props={"partition.column": "p"},
     )
     out = txnlog.read_snapshot(spark, table, where={"p": ["absent"]})
     assert out.count() == 0
@@ -331,13 +340,21 @@ def test_every_read_refuses_vacuumed_versions(spark, table):
     """Pruned reads and the row-id read check the vacuum horizon up front
     instead of failing mid-scan on a deleted file."""
     part, bloom, rids = table + "_part", table + "_bloom", table + "_rids"
-    txnlog.txn_append_partitioned(
-        spark, _pdf(spark, [(1, "A", "a"), (2, "B", "b")]), part, "p"
+    txnlog.txn_append(
+        spark,
+        _pdf(spark, [(1, "A", "a"), (2, "B", "b")]),
+        part,
+        props={"partition.column": "p"},
     )
     txnlog.txn_upsert_partitioned(
         spark, _pdf(spark, [(1, "A", "a2")]), part, ["k"], "p"
     )
-    txnlog.txn_append_bloom(spark, _df(spark, [(5, "x"), (6, "y")]), bloom, "k")
+    txnlog.txn_append(
+        spark,
+        _df(spark, [(5, "x"), (6, "y")]),
+        bloom,
+        props={"write.bloomColumns": "k"},
+    )
     txnlog.txn_upsert(spark, _df(spark, [(5, "X")]), bloom, ["k"])
     txnlog.txn_enable_row_ids(rids)
     txnlog.txn_append(spark, _df(spark, [(1, "a")]), rids)
@@ -373,7 +390,9 @@ def test_cdf_prune_with_tk_named_column(spark, table):
 
 
 def test_partitioned_upsert_into_new_partition(spark, table):
-    txnlog.txn_append_partitioned(spark, _pdf(spark, [(1, "A", "a")]), table, "p")
+    txnlog.txn_append(
+        spark, _pdf(spark, [(1, "A", "a")]), table, props={"partition.column": "p"}
+    )
     # source lands entirely in a partition that doesn't exist yet
     txnlog.txn_upsert_partitioned(
         spark, _pdf(spark, [(9, "Z", "z")]), table, ["k"], "p"
@@ -389,7 +408,7 @@ def test_vacuum_reclaims_only_dead_files(spark, table):
     txnlog.txn_append(spark, _df(spark, [(1, "a"), (2, "b")]), table)
     txnlog.txn_upsert(spark, _df(spark, [(2, "B")]), table, ["k"])
     # stage an uncommitted batch: vacuum must NOT touch it
-    txnlog._stage(_df(spark, [(99, "z")]), table)
+    txnlog._stage(spark, _df(spark, [(99, "z")]), table)
     files_before = set(os.listdir(os.path.join(table, "data")))
     deleted = txnlog.vacuum(table, retain_versions=1)
     assert deleted  # version 0's files are dead
@@ -412,7 +431,7 @@ def test_zone_map_file_skipping(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, f"v{i}") for i in range(1000)], "k long, v string"
     ).repartitionByRange(4, "k")
-    txnlog.txn_append_stats(spark, df, table, stats_cols=["k"])
+    txnlog.txn_append(spark, df, table, props={"write.statsColumns": "k"})
     live = txnlog.snapshot_stats(table)
     assert len(live) == 4 and all("k" in st for st in live.values())
     pruned = txnlog.read_snapshot(spark, table, where={"k": (100, 120)})
@@ -432,7 +451,7 @@ def test_zone_map_file_skipping(spark, tmp_path):
 def test_zone_map_empty_intersection(spark, tmp_path):
     table = str(tmp_path / "ztbl2")
     df = spark.createDataFrame([(i, "x") for i in range(50)], "k long, v string")
-    txnlog.txn_append_stats(spark, df, table, stats_cols=["k"])
+    txnlog.txn_append(spark, df, table, props={"write.statsColumns": "k"})
     none = txnlog.read_snapshot(spark, table, where={"k": (10_000, 20_000)})
     assert none.count() == 0
 
@@ -465,7 +484,7 @@ def test_partitioned_int_type_roundtrips(spark, table):
     df = spark.createDataFrame(
         [(1, 5, "a"), (2, 7, "b")], "k long, p int, v string"
     )
-    txnlog.txn_append_partitioned(spark, df, table, "p")
+    txnlog.txn_append(spark, df, table, props={"partition.column": "p"})
     back = txnlog.read_snapshot(spark, table)
     # the re-attached partition column has its ORIGINAL type, not string
     assert dict(back.dtypes)["p"] == "int"
@@ -490,7 +509,7 @@ def test_partitioned_date_type_roundtrips(spark, table):
 
     d = datetime.date(2024, 3, 1)
     df = spark.createDataFrame([(1, d, "a")], "k long, p date, v string")
-    txnlog.txn_append_partitioned(spark, df, table, "p")
+    txnlog.txn_append(spark, df, table, props={"partition.column": "p"})
     back = txnlog.read_snapshot(spark, table)
     assert dict(back.dtypes)["p"] == "date"
     assert back.collect()[0]["p"] == d
@@ -502,7 +521,7 @@ def test_partitioned_date_type_roundtrips(spark, table):
 def test_partitioned_hive_escaped_and_null_values(spark, table):
     rows = [(1, "a:b c", "x"), (2, None, "y"), (3, "plain", "z")]
     df = spark.createDataFrame(rows, "k long, p string, v string")
-    txnlog.txn_append_partitioned(spark, df, table, "p")
+    txnlog.txn_append(spark, df, table, props={"partition.column": "p"})
     # the log stores the directory encoding EXACTLY as Spark wrote it —
     # this asserts our encoder replicates Spark's escapePathName table
     live = set(txnlog.snapshot_partitions(table).values())
@@ -784,7 +803,7 @@ def test_change_feed_across_schema_evolution(spark, table):
     )
     # replace-all commit: v1 snapshot carries the ADDED `extra` column
     old_files = [os.path.basename(f) for f in txnlog.snapshot_files(table, 0)]
-    txnlog.commit(table, txnlog._stage(evolved, table), old_files, 0)  # v1
+    txnlog.commit(table, txnlog._stage(spark, evolved, table), old_files, 0)  # v1
     feed = {
         (r["k"], r["_change_type"]): (r["v"], r["extra"])
         for r in txnlog.read_changes(spark, table, ["k"], 0, 1).collect()
@@ -810,7 +829,7 @@ def test_change_feed_dropped_column(spark, table):
     narrow = _df(spark, [(1, "a")])
     # replace-all commit: remove old files, add narrow snapshot
     old_files = [os.path.basename(f) for f in txnlog.snapshot_files(table, 0)]
-    added = txnlog._stage(narrow, table)
+    added = txnlog._stage(spark, narrow, table)
     txnlog.commit(table, added, old_files, 0)  # v1
     feed = {
         (r["k"], r["_change_type"]): r["extra"]
@@ -893,7 +912,7 @@ def test_clone_partitioned_carries_pruning_metadata(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "eu", "a"), (2, "us", "b"), (3, "eu", "c")], "k int, region string, v string"
     )
-    txnlog.txn_append_partitioned(spark, df, src, "region")
+    txnlog.txn_append(spark, df, src, props={"partition.column": "region"})
     txnlog.txn_clone(src, dst)
     out = txnlog.read_snapshot(spark, dst, where={"region": ["eu"]})
     assert {r["k"] for r in out.collect()} == {1, 3}
@@ -945,7 +964,7 @@ class TestBloomSkipping:
                 .filter(F.col("id") % commits == m)
                 .select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
             )
-            txnlog.txn_append_bloom(spark, df, table, "k")
+            txnlog.txn_append(spark, df, table, props={"write.bloomColumns": "k"})
         return commits
 
     def test_no_false_negatives_and_real_pruning(self, spark, table):
@@ -1033,7 +1052,7 @@ class TestSnapshotProfile:
         df = spark.createDataFrame(
             [(i, float(i) * 1.5) for i in range(500)], "k long, x double"
         ).repartition(4)
-        txnlog.txn_append_stats(spark, df, table, ["k", "x"])
+        txnlog.txn_append(spark, df, table, props={"write.statsColumns": "k,x"})
         prof = txnlog.snapshot_profile(table, ["k", "x"])
         assert prof["n_rows"] == 500
         assert (prof["min_k"], prof["max_k"]) == (0, 499)
@@ -1055,15 +1074,17 @@ class TestSnapshotProfile:
 
     def test_profile_refuses_missing_column_stats(self, spark, table):
         df = spark.createDataFrame([(None,), (None,)], "k long")
-        txnlog.txn_append_stats(spark, df, table, ["k"])  # NULL-only: no k stats
+        txnlog.txn_append(
+            spark, df, table, props={"write.statsColumns": "k"}
+        )  # NULL-only: no k stats
         with pytest.raises(ValueError, match="no stats for 'k'"):
             txnlog.snapshot_profile(table, ["k"])
 
     def test_profile_time_travels(self, spark, table):
         df1 = spark.createDataFrame([(1, 1.0), (2, 2.0)], "k long, x double")
         df2 = spark.createDataFrame([(10, 10.0)], "k long, x double")
-        txnlog.txn_append_stats(spark, df1, table, ["k", "x"])
-        txnlog.txn_append_stats(spark, df2, table, ["k", "x"])
+        txnlog.txn_append(spark, df1, table, props={"write.statsColumns": "k,x"})
+        txnlog.txn_append(spark, df2, table, props={"write.statsColumns": "k,x"})
         assert txnlog.snapshot_profile(table, ["k"], version=0)["max_k"] == 2
         assert txnlog.snapshot_profile(table, ["k"])["max_k"] == 10
         assert txnlog.snapshot_profile(table, ["k"], version=0)["n_rows"] == 2
@@ -1174,15 +1195,19 @@ class TestDeletionVectors:
 
     def test_dv_applies_on_skipping_and_bloom_reads(self, spark, table):
         df = spark.range(0, 100).selectExpr("id AS k", "id * 3 AS v")
-        txnlog.txn_append_stats(spark, df.filter("k < 50"), table, ["k"])
-        txnlog.txn_append_stats(spark, df.filter("k >= 50"), table, ["k"])
+        txnlog.txn_append(
+            spark, df.filter("k < 50"), table, props={"write.statsColumns": "k"}
+        )
+        txnlog.txn_append(
+            spark, df.filter("k >= 50"), table, props={"write.statsColumns": "k"}
+        )
         txnlog.txn_delete_dv(spark, F.col("k").isin(7, 80), table)
         got = txnlog.read_snapshot(spark, table, where={"k": (0, 49)})
         assert got.filter("k = 7").count() == 0
         assert got.filter("k = 8").count() == 1
 
         btable = table + "_bloom"
-        txnlog.txn_append_bloom(spark, df, btable, "k")
+        txnlog.txn_append(spark, df, btable, props={"write.bloomColumns": "k"})
         txnlog.txn_delete_dv(spark, F.col("k") == 7, btable)
         got = txnlog.read_snapshot(spark, btable, where={"k": [7, 8]})
         assert got.filter("k = 7").count() == 0
@@ -1221,7 +1246,7 @@ class TestDeletionVectors:
 
     def test_snapshot_profile_refuses_dv_tables(self, spark, table):
         df = spark.range(0, 20).selectExpr("id AS k", "id AS v")
-        txnlog.txn_append_stats(spark, df, table, ["k"])
+        txnlog.txn_append(spark, df, table, props={"write.statsColumns": "k"})
         txnlog.txn_delete_dv(spark, F.col("k") == 5, table)
         with pytest.raises(ValueError, match="deletion vectors"):
             txnlog.snapshot_profile(table, ["k"])
@@ -1249,7 +1274,7 @@ class TestDeletionVectors:
             [(k, "x" if k % 2 == 0 else "y", k * 10) for k in range(10)],
             "k long, p string, v long",
         )
-        txnlog.txn_append_partitioned(spark, df, table, "p")
+        txnlog.txn_append(spark, df, table, props={"partition.column": "p"})
         before = _inodes(table)
         txnlog.txn_delete_dv(
             spark, (F.col("p") == "x") & (F.col("k") < 5), table
@@ -1269,7 +1294,7 @@ class TestDeletionVectors:
         strip the log-carried partition values — they must refuse loudly,
         never silently convert the table."""
         df = spark.createDataFrame([(1, "x"), (2, "y")], "k long, p string")
-        txnlog.txn_append_partitioned(spark, df, table, "p")
+        txnlog.txn_append(spark, df, table, props={"partition.column": "p"})
         with pytest.raises(ValueError, match="partition"):
             txnlog.txn_delete(spark, F.col("k") == 1, table)
         with pytest.raises(ValueError, match="partition"):
@@ -1294,11 +1319,11 @@ class TestCopyOnWriteDML:
             "id AS k", "CAST(id % 7 AS STRING) AS v"
         )
         for b in range(bands):
-            txnlog.txn_append_stats(
+            txnlog.txn_append(
                 spark,
                 df.filter((F.col("k") >= b * width) & (F.col("k") < (b + 1) * width)),
                 table,
-                ["k"],
+                props={"write.statsColumns": "k"},
             )
         return df
 
@@ -1318,7 +1343,6 @@ class TestCopyOnWriteDML:
             (F.col("k") <= 24) & (F.col("k") % 2 == 0),
             table,
             zone=("k", 0, 24),
-            stats_cols=["k"],
         )
         after = _inodes(table)
         # every non-candidate file survives IDENTICALLY (name + inode)
@@ -1362,8 +1386,10 @@ class TestCopyOnWriteDML:
         # CoW-rewrite band 0 only: its DV must not resurrect k=3, and the
         # untouched band-2 file keeps its DV working
         txnlog.txn_delete_cow(
-            spark, (F.col("k") <= 24) & (F.col("k") % 2 == 0), table,
-            zone=("k", 0, 24), stats_cols=["k"],
+            spark,
+            (F.col("k") <= 24) & (F.col("k") % 2 == 0),
+            table,
+            zone=("k", 0, 24),
         )
         snap = txnlog.read_snapshot(spark, table)
         assert snap.filter("k = 3").count() == 0
@@ -1379,7 +1405,7 @@ class TestCopyOnWriteDML:
             "k long, v string",
         )
         before = _inodes(table)
-        txnlog.txn_merge_cow(spark, src, table, ["k"], stats_cols=["k"])
+        txnlog.txn_merge_cow(spark, src, table, ["k"])
         txnlog.txn_upsert(spark, src, other, ["k"])
         a = sorted((r["k"], r["v"]) for r in txnlog.read_snapshot(spark, table).collect())
         b = sorted((r["k"], r["v"]) for r in txnlog.read_snapshot(spark, other).collect())
@@ -1400,12 +1426,15 @@ class TestCopyOnWriteDML:
     def test_cow_merge_bloom_pruning(self, spark, table):
         df = spark.range(0, 90).selectExpr("id AS k", "CAST(id AS STRING) AS v")
         for m in range(3):  # hash-spread: zone maps cannot prune
-            txnlog.txn_append_bloom(spark, df.filter(F.col("k") % 3 == m), table, "k")
+            txnlog.txn_append(
+                spark,
+                df.filter(F.col("k") % 3 == m),
+                table,
+                props={"write.bloomColumns": "k"},
+            )
         src = spark.createDataFrame([(0, "U"), (500, "N")], "k long, v string")
         before = _inodes(table)
-        txnlog.txn_merge_cow(
-            spark, src, table, ["k"], bloom_col="k"
-        )
+        txnlog.txn_merge_cow(spark, src, table, ["k"])
         after = _inodes(table)
         # at most the files whose bloom admits key 0 were rewritten; at
         # least one of the three hash-spread files must have been pruned
@@ -1444,9 +1473,19 @@ class TestCheckConstraints:
         assert txnlog.read_snapshot(spark, table).count() == 1
         # stats/bloom appends enforce too
         with pytest.raises(txnlog.CheckViolation):
-            txnlog.txn_append_stats(spark, _df(spark, [(-2, "bad")]), table, ["k"])
+            txnlog.txn_append(
+                spark,
+                _df(spark, [(-2, "bad")]),
+                table,
+                props={"write.statsColumns": "k"},
+            )
         with pytest.raises(txnlog.CheckViolation):
-            txnlog.txn_append_bloom(spark, _df(spark, [(-3, "bad")]), table, "k")
+            txnlog.txn_append(
+                spark,
+                _df(spark, [(-3, "bad")]),
+                table,
+                props={"write.bloomColumns": "k"},
+            )
 
     def test_null_passes_sql_standard(self, spark, table):
         df = spark.createDataFrame([(1, 5), (2, None)], "k long, v long")
@@ -1465,15 +1504,15 @@ class TestCheckConstraints:
 
     def test_upsert_and_merge_cow_enforce(self, spark, table):
         df = spark.range(0, 40).selectExpr("id AS k", "CAST(id AS STRING) AS v")
-        txnlog.txn_append_stats(spark, df, table, ["k"])
+        txnlog.txn_append(spark, df, table, props={"write.statsColumns": "k"})
         txnlog.txn_add_check(spark, table, "k_small", "k < 1000")
         bad = spark.createDataFrame([(5000, "nope")], "k long, v string")
         with pytest.raises(txnlog.CheckViolation):
             txnlog.txn_upsert(spark, bad, table, ["k"])
         with pytest.raises(txnlog.CheckViolation):
-            txnlog.txn_merge_cow(spark, bad, table, ["k"], stats_cols=["k"])
+            txnlog.txn_merge_cow(spark, bad, table, ["k"])
         ok = spark.createDataFrame([(5, "upd")], "k long, v string")
-        txnlog.txn_merge_cow(spark, ok, table, ["k"], stats_cols=["k"])
+        txnlog.txn_merge_cow(spark, ok, table, ["k"])
         assert txnlog.read_snapshot(spark, table).filter("v = 'upd'").count() == 1
 
     def test_routed_append_quarantines_with_reasons(self, spark, table, tmp_path):
@@ -1521,20 +1560,20 @@ class TestCheckConstraints:
         including constraints referencing the PARTITION column itself
         (which lives in the log, re-attached for validation)."""
         df = spark.createDataFrame([(1, "x")], "k long, p string")
-        txnlog.txn_append_partitioned(spark, df, table, "p")
+        txnlog.txn_append(spark, df, table, props={"partition.column": "p"})
         txnlog.txn_add_check(spark, table, "k_pos", "k > 0")
         txnlog.txn_add_check(spark, table, "p_known", "p IN ('x', 'y')")
         bad_k = spark.createDataFrame([(-1, "x")], "k long, p string")
         with pytest.raises(txnlog.CheckViolation, match="k_pos"):
-            txnlog.txn_append_partitioned(spark, bad_k, table, "p")
+            txnlog.txn_append(spark, bad_k, table, props={"partition.column": "p"})
         bad_p = spark.createDataFrame([(2, "z")], "k long, p string")
         with pytest.raises(txnlog.CheckViolation, match="p_known"):
-            txnlog.txn_append_partitioned(spark, bad_p, table, "p")
+            txnlog.txn_append(spark, bad_p, table, props={"partition.column": "p"})
         with pytest.raises(txnlog.CheckViolation):
             txnlog.txn_upsert_partitioned(spark, bad_k, table, ["k"], "p")
         # clean rows still land on both paths
         ok = spark.createDataFrame([(5, "y")], "k long, p string")
-        txnlog.txn_append_partitioned(spark, ok, table, "p")
+        txnlog.txn_append(spark, ok, table, props={"partition.column": "p"})
         txnlog.txn_upsert_partitioned(
             spark,
             spark.createDataFrame([(5, "y"), (6, "x")], "k long, p string"),
@@ -1546,7 +1585,7 @@ class TestCheckConstraints:
         t2 = table + "_fresh"
         txnlog.txn_add_check(spark, t2, "p_known", "p = 'x'")
         with pytest.raises(txnlog.CheckViolation):
-            txnlog.txn_append_partitioned(spark, bad_p, t2, "p")
+            txnlog.txn_append(spark, bad_p, t2, props={"partition.column": "p"})
 
 
 class TestHistoryRestoreZorder:
@@ -1607,7 +1646,9 @@ class TestHistoryRestoreZorder:
 
     def test_restore_carries_metadata(self, spark, table):
         df = spark.range(0, 30).selectExpr("id AS k", "id AS v")
-        txnlog.txn_append_stats(spark, df, table, ["k"])          # v0
+        txnlog.txn_append(
+            spark, df, table, props={"write.statsColumns": "k"}
+        )          # v0
         txnlog.txn_delete(spark, F.col("k") < 5, table)           # v1 (stat-less)
         txnlog.txn_restore(table, 0)                              # v2
         # the restored files' zone maps are back: profile answers again
@@ -1618,8 +1659,11 @@ class TestHistoryRestoreZorder:
             "id AS a", "CAST(hash(id) & 255 AS BIGINT) AS b", "id AS v"
         )
         for m in range(4):
-            txnlog.txn_append_stats(
-                spark, df.filter(F.col("a") % 4 == m), table, ["a", "b"]
+            txnlog.txn_append(
+                spark,
+                df.filter(F.col("a") % 4 == m),
+                table,
+                props={"write.statsColumns": "a,b"},
             )
         before = sorted(
             (r["a"], r["b"], r["v"])
@@ -1731,12 +1775,17 @@ def test_partitioned_compaction_is_per_partition(spark, table):
     )
     # hot partition fragmented across 4 commits; cold lands once
     for m in range(4):
-        txnlog.txn_append_partitioned(
-            spark, df.filter((F.col("p") == "hot") & (F.col("k") % 4 == m)),
-            table, "p",
+        txnlog.txn_append(
+            spark,
+            df.filter((F.col("p") == "hot") & (F.col("k") % 4 == m)),
+            table,
+            props={"partition.column": "p"},
         )
-    txnlog.txn_append_partitioned(
-        spark, df.filter("p = 'cold'").coalesce(1), table, "p"
+    txnlog.txn_append(
+        spark,
+        df.filter("p = 'cold'").coalesce(1),
+        table,
+        props={"partition.column": "p"},
     )
     txnlog.txn_delete_dv(spark, F.col("k") == 2, table)
 
@@ -1774,7 +1823,7 @@ def test_change_feed_on_partitioned_tables(spark, table):
     df = spark.createDataFrame(
         [(1, "a", "x"), (2, "b", "y")], "k long, v string, p string"
     )
-    txnlog.txn_append_partitioned(spark, df, table, "p")       # v0
+    txnlog.txn_append(spark, df, table, props={"partition.column": "p"})       # v0
     txnlog.txn_upsert_partitioned(
         spark,
         spark.createDataFrame([(2, "B2", "y"), (3, "c", "x")],
@@ -1800,8 +1849,11 @@ def test_zorder_three_dimensions_prune_each(spark, table):
         "CAST(hash(id * 7) & 63 AS BIGINT) AS c",
     )
     for m in range(4):
-        txnlog.txn_append_stats(
-            spark, df.filter(F.col("a") % 4 == m), table, ["a", "b", "c"]
+        txnlog.txn_append(
+            spark,
+            df.filter(F.col("a") % 4 == m),
+            table,
+            props={"write.statsColumns": "a,b,c"},
         )
     before = sorted(tuple(r) for r in txnlog.read_snapshot(spark, table).collect())
     txnlog.txn_zorder(spark, table, "a", "b", "c", n_files=32)
@@ -1828,7 +1880,8 @@ def test_zorder_three_dimensions_prune_each(spark, table):
 
 def test_auto_optimize_property_compacts_every_n(spark, table):
     """autoOptimize.every=3: the third append triggers a compaction in
-    the same call; content invariant, stats/bloom appends exempt."""
+    the same call; content invariant. Indexed appends compact too, and
+    the compaction keeps their zone maps."""
     txnlog.txn_set_property(table, "autoOptimize.every", "3")  # v0
     txnlog.txn_append(spark, _df(spark, [(1, "a")]).coalesce(1), table)  # v1
     txnlog.txn_append(spark, _df(spark, [(2, "b")]).coalesce(1), table)  # v2
@@ -1840,14 +1893,18 @@ def test_auto_optimize_property_compacts_every_n(spark, table):
     assert len(txnlog.snapshot_files(table)) == 1
     got = {r["k"] for r in txnlog.read_snapshot(spark, table).collect()}
     assert got == {1, 2, 3}
-    # exempt path: stats appends never auto-compact (metadata curated)
+    # stats appends compact like any other; the rewrite restages the
+    # table's zone maps
     t2 = table + "_stats"
     txnlog.txn_set_property(t2, "autoOptimize.every", "1")
     for i in range(3):
-        txnlog.txn_append_stats(
-            spark, _df(spark, [(i, "x")]).coalesce(1), t2, ["k"]
+        txnlog.txn_append(
+            spark,
+            _df(spark, [(i, "x")]).coalesce(1),
+            t2,
+            props={"write.statsColumns": "k"},
         )
-    assert len(txnlog.snapshot_files(t2)) == 3
+    assert len(txnlog.snapshot_files(t2)) == 1
     assert txnlog.snapshot_profile(t2, ["k"])["n_rows"] == 3
 
 
@@ -1857,7 +1914,7 @@ def test_restore_partitioned_table(spark, table):
     df = spark.createDataFrame(
         [(1, "a", "x"), (2, "b", "y")], "k long, v string, p string"
     )
-    txnlog.txn_append_partitioned(spark, df, table, "p")       # v0
+    txnlog.txn_append(spark, df, table, props={"partition.column": "p"})       # v0
     txnlog.txn_upsert_partitioned(
         spark,
         spark.createDataFrame([(9, "z", "x")], "k long, v string, p string"),
@@ -1934,12 +1991,11 @@ class TestMergeOnReadUpsert:
 def test_indexed_append_enables_both_pruning_kinds(spark, table):
     df = spark.range(0, 100).selectExpr("id AS k", "id AS v")
     for lo in (0, 50):
-        txnlog.txn_append_indexed(
+        txnlog.txn_append(
             spark,
             df.filter((F.col("k") >= lo) & (F.col("k") < lo + 50)).coalesce(1),
             table,
-            stats_cols=["k"],
-            bloom_col="k",
+            props={"write.statsColumns": "k", "write.bloomColumns": "k"},
         )
     # zone maps answer ANALYZE and range skipping
     assert txnlog.snapshot_profile(table, ["k"])["n_rows"] == 100
@@ -1949,17 +2005,123 @@ def test_indexed_append_enables_both_pruning_kinds(spark, table):
     assert len(cand) == 1
 
 
-def test_max_records_per_file_property_governs_staging(spark, table):
+#: The append shapes every layout property must govern alike.
+_APPEND_KINDS = ["plain", "partitioned", "txn"]
+
+
+def _append_as(kind, spark, df, table, batch=0):
+    """Append ``df`` (it carries a ``p`` column) as a plain append, a
+    partitioned one (by ``p``) or an exactly-once one (batch ``batch``)."""
+    kw = {
+        "partitioned": {"props": {"partition.column": "p"}},
+        "txn": {"txn": ("app", batch)},
+    }.get(kind, {})
+    return txnlog.txn_append(spark, df, table, **kw)
+
+
+@pytest.mark.parametrize("kind", _APPEND_KINDS)
+def test_max_records_per_file_property_governs_staging(spark, table, kind):
     """write.maxRecordsPerFile travels with the table: every writer's
     staged output splits at the bound — one misconfigured producer can't
     land a giant file."""
     txnlog.txn_set_property(table, "write.maxRecordsPerFile", "100")
-    txnlog.txn_append(
-        spark, spark.range(350).selectExpr("id AS k").coalesce(1), table
+    _append_as(
+        kind, spark,
+        spark.range(350).selectExpr("id AS k", "'a' AS p").coalesce(1), table,
     )
     files = txnlog.snapshot_files(table)
     assert len(files) == 4  # 350 rows / 100 per file from ONE task
     assert txnlog.read_snapshot(spark, table).count() == 350
+
+
+@pytest.mark.parametrize("kind", ["plain", "txn"])
+def test_append_to_partitioned_table_keeps_partition_values(spark, table, kind):
+    """An append that does not name the partition column still stages by
+    the table's: the values land in the log, not as NULLs."""
+    txnlog.txn_append(
+        spark, _pdf(spark, [(1, "0", "a")]), table, props={"partition.column": "p"}
+    )
+    _append_as(kind, spark, _pdf(spark, [(2, "0", "b"), (3, "1", "c")]), table)
+    got = txnlog.read_snapshot(spark, table)
+    assert sorted((r.k, r.p) for r in got.collect()) == [
+        (1, "0"), (2, "0"), (3, "1"),
+    ]
+    pruned = txnlog.read_snapshot(spark, table, where={"p": ["0"]})
+    assert sorted(r.k for r in pruned.collect()) == [1, 2]
+
+
+def test_changing_partition_column_with_live_files_raises(spark, table):
+    txnlog.txn_append(
+        spark, _pdf(spark, [(1, "0", "a")]).withColumn("q", F.lit("x")), table,
+        props={"partition.column": "p"},
+    )
+    more = _pdf(spark, [(2, "1", "b")]).withColumn("q", F.lit("y"))
+    for layout in ({"partition.column": "q"}, {"partition.column": None}):
+        with pytest.raises(ValueError, match="cannot change"):
+            txnlog.txn_append(spark, more, table, props=layout)
+    plain = table + "_plain"
+    txnlog.txn_append(spark, _pdf(spark, [(1, "0", "a")]), plain)
+    with pytest.raises(ValueError, match="cannot change"):
+        txnlog.txn_append(
+            spark, _pdf(spark, [(2, "1", "b")]), plain,
+            props={"partition.column": "p"},
+        )
+    # nothing was committed or staged by the refused appends
+    assert txnlog.current_version(table) == 0
+    got = txnlog.read_snapshot(spark, table)
+    assert sorted((r.k, r.p) for r in got.collect()) == [(1, "0")]
+    assert len(os.listdir(os.path.join(table, "data"))) == 1
+
+
+def test_append_props_accept_only_layout_keys(spark, table):
+    """Other properties go through txn_set_property, which validates
+    CHECK and unique declarations."""
+    with pytest.raises(ValueError, match="txn_set_property"):
+        txnlog.txn_append(
+            spark, _df(spark, [(1, "a")]), table, props={"check.pos": "k > 0"}
+        )
+    assert txnlog.current_version(table) == -1
+    v = txnlog.txn_append(
+        spark, _df(spark, [(1, "a")]), table,
+        props={"write.statsColumns": "k", "write.maxRecordsPerFile": "10"},
+    )
+    # the layout rides in the data commit: one version, not three
+    assert v == 0
+    assert txnlog.table_props(table)["write.statsColumns"] == "k"
+    stats = txnlog.snapshot_stats(table).values()
+    assert [st["k"] for st in stats if "k" in st] == [[1, 1]]
+
+
+def test_partitioned_append_stages_inside_the_table(spark, tmp_path):
+    """Staging happens under the table, so publishing a partitioned
+    write is a same-filesystem rename even when the table and the temp
+    dir live on different devices."""
+    import shutil
+    import tempfile
+    import uuid
+
+    shm = "/dev/shm"
+    if not os.path.isdir(shm) or (
+        os.stat(shm).st_dev == os.stat(tempfile.gettempdir()).st_dev
+    ):
+        pytest.skip("needs /dev/shm on a device other than the temp dir")
+    table = os.path.join(shm, f"txn_xdev_{uuid.uuid4().hex}")
+    before = set(os.listdir(tempfile.gettempdir()))
+    try:
+        for m in range(2):
+            txnlog.txn_append(
+                spark, _pdf(spark, [(m, str(m), "v")]), table,
+                props={"partition.column": "p"},
+            )
+        got = txnlog.read_snapshot(spark, table)
+        assert sorted((r.k, r.p) for r in got.collect()) == [(0, "0"), (1, "1")]
+        assert not [
+            n for n in os.listdir(table) if n.startswith("_staged_")
+        ]
+    finally:
+        shutil.rmtree(table, ignore_errors=True)
+    leaked = set(os.listdir(tempfile.gettempdir())) - before
+    assert not [n for n in leaked if n.startswith("txn_stage_")]
 
 
 class TestDvDmlPruning:
@@ -1975,11 +2137,11 @@ class TestDvDmlPruning:
             "id AS k", "CAST(id % 7 AS STRING) AS v"
         )
         for b in range(bands):
-            txnlog.txn_append_stats(
+            txnlog.txn_append(
                 spark,
                 df.filter((F.col("k") >= b * width) & (F.col("k") < (b + 1) * width)),
                 table,
-                ["k"],
+                props={"write.statsColumns": "k"},
             )
         return df
 
@@ -2221,14 +2383,10 @@ class TestAdviceR7Fixes:
         quarantine = str(tmp_path / "quar")
         txnlog.txn_add_check(spark, table, "pos", "k >= 0")
         df = spark.createDataFrame([(1,), (2,), (-7,)], "k long")
-        v1, q1 = txnlog.txn_append_routed_idempotent(
-            spark, df, table, quarantine, "app", 0
-        )
+        v1, q1 = txnlog.txn_append_routed(spark, df, table, quarantine, txn=("app", 0))
         assert v1 >= 0 and q1 >= 0
         # full redelivery of batch 0: both sides skip
-        v2, q2 = txnlog.txn_append_routed_idempotent(
-            spark, df, table, quarantine, "app", 0
-        )
+        v2, q2 = txnlog.txn_append_routed(spark, df, table, quarantine, txn=("app", 0))
         assert txnlog.read_snapshot(spark, table).count() == 2
         assert txnlog.read_snapshot(spark, quarantine).count() == 1
 
@@ -2243,12 +2401,10 @@ class TestAdviceR7Fixes:
         df = spark.createDataFrame([(1,), (2,), (-7,)], "k long")
         # simulate the half-committed crash: only the clean side landed
         clean = df.filter("k >= 0")
-        txnlog.txn_append_idempotent(spark, clean, table, "app", 0)
+        txnlog.txn_append(spark, clean, table, txn=("app", 0))
         assert txnlog.current_version(str(tmp_path / "quar")) == -1
         # replayed batch: clean no-ops, quarantine lands its row
-        txnlog.txn_append_routed_idempotent(
-            spark, df, table, quarantine, "app", 0
-        )
+        txnlog.txn_append_routed(spark, df, table, quarantine, txn=("app", 0))
         assert txnlog.read_snapshot(spark, table).count() == 2
         q = txnlog.read_snapshot(spark, quarantine)
         assert [r["k"] for r in q.collect()] == [-7]
@@ -2402,7 +2558,7 @@ class TestColumnMapping:
 
     def test_delete_dv_zone_spec_in_logical_names(self, spark, table):
         df = spark.range(0, 100).selectExpr("id AS k", "id * 2 AS val")
-        txnlog.txn_append_stats(spark, df, table, ["k"])
+        txnlog.txn_append(spark, df, table, props={"write.statsColumns": "k"})
         txnlog.txn_rename_column(spark, table, "k", "key")
         txnlog.txn_delete_dv(
             spark, F.col("key") < 10, table, zone=("key", 0, 9)
@@ -2443,7 +2599,7 @@ class TestColumnMapping:
 
     def test_drop_refusals(self, spark, table):
         df = spark.createDataFrame([(1, "x")], "k long, p string")
-        txnlog.txn_append_partitioned(spark, df, table, "p")
+        txnlog.txn_append(spark, df, table, props={"partition.column": "p"})
         with pytest.raises(ValueError, match="partition"):
             txnlog.txn_drop_column(spark, table, "p")
         txnlog.txn_drop_column(spark, table, "k")
@@ -2483,11 +2639,11 @@ class TestColumnMapping:
     def test_skipping_read_speaks_logical_after_rename(self, spark, table):
         df = spark.range(0, 100).selectExpr("id AS k", "id % 7 AS v")
         for b in range(4):
-            txnlog.txn_append_stats(
+            txnlog.txn_append(
                 spark,
                 df.filter((F.col("k") >= b * 25) & (F.col("k") < (b + 1) * 25)),
                 table,
-                ["k"],
+                props={"write.statsColumns": "k"},
             )
         txnlog.txn_rename_column(spark, table, "k", "key")
         got = txnlog.read_snapshot(spark, table, where={"key": (0, 24)})
@@ -2526,7 +2682,7 @@ class TestColumnMapping:
         df = spark.createDataFrame(
             [(1, 10, "x"), (2, 20, "y"), (3, 30, "x")], "k long, val long, p string"
         )
-        txnlog.txn_append_partitioned(spark, df, table, "p")
+        txnlog.txn_append(spark, df, table, props={"partition.column": "p"})
         txnlog.txn_rename_column(spark, table, "val", "amount")
         snap = txnlog.read_snapshot(spark, table)
         assert sorted(snap.columns) == ["amount", "k", "p"]
@@ -2534,11 +2690,11 @@ class TestColumnMapping:
             (1, 10, "x"), (2, 20, "y"), (3, 30, "x")
         }
         # partitioned append after the rename, logical schema in
-        txnlog.txn_append_partitioned(
+        txnlog.txn_append(
             spark,
             spark.createDataFrame([(4, 40, "z")], "k long, amount long, p string"),
             table,
-            "p",
+            props={"partition.column": "p"},
         )
         assert txnlog.read_snapshot(spark, table).count() == 4
 
@@ -2597,29 +2753,35 @@ class TestMergeIntoTxn:
             )
 
 
+@pytest.mark.parametrize("kind", _APPEND_KINDS)
 class TestStatsColumnsProperty:
-    def test_write_stats_columns_governs_appends_and_rewrites(self, spark, table):
+    def test_governs_every_append_and_rewrite(self, spark, table, kind):
         """write.statsColumns is table-resident data-skipping policy:
-        plain txn_append records zone maps for the declared columns, and
-        rewrite commits (upsert / compact / DELETE) keep recording them
-        — pruning survives every DML with zero writer-side code."""
-        txnlog.txn_append(spark, spark.range(5).selectExpr("id AS k"), table)
+        every append kind records zone maps for the declared columns, and
+        rewrite commits (DELETE / compact) keep recording them — pruning
+        survives every DML with zero writer-side code."""
+        def rows(lo, hi):
+            return spark.range(lo, hi).selectExpr("id AS k", "'a' AS p")
+
+        _append_as(kind, spark, rows(0, 5), table, batch=0)
         txnlog.txn_set_property(table, "write.statsColumns", "k")
-        txnlog.txn_append(
-            spark, spark.range(100, 200).selectExpr("id AS k").coalesce(1), table
-        )
+        _append_as(kind, spark, rows(100, 200).coalesce(1), table, batch=1)
         stats = txnlog.snapshot_stats(table)
         with_k = [st for st in stats.values() if st.get("k") is not None]
         assert with_k and with_k[0]["k"] == [100, 199]
-        # a whole-snapshot rewrite re-records the declared stats
-        txnlog.txn_delete(spark, F.col("k") == 150, table)
+        # a rewrite re-records the declared stats
+        if kind == "partitioned":
+            txnlog.txn_delete_dv(spark, F.col("k") == 150, table)
+            txnlog.txn_compact_partitioned(spark, table, min_files=1)
+        else:
+            txnlog.txn_delete(spark, F.col("k") == 150, table)
         stats = txnlog.snapshot_stats(table)
         assert all(st.get("k") is not None for st in stats.values())
         prof = txnlog.snapshot_profile(table, ["k"])
         assert prof["n_rows"] == 104
         assert prof["min_k"] == 0 and prof["max_k"] == 199
         # compaction keeps them too
-        txnlog.txn_compact(spark, table, min_files=1)
+        txnlog.txn_compact_partitioned(spark, table, min_files=1)
         assert all(
             st.get("k") is not None
             for st in txnlog.snapshot_stats(table).values()
@@ -2791,7 +2953,9 @@ class TestRowTracking:
                 fired["n"] = 1
                 # rival append claims the slot (and an id range) first
                 rival = _t._stage(
-                    spark.range(100, 107).selectExpr("id AS k").coalesce(1), path
+                    spark,
+                    spark.range(100, 107).selectExpr("id AS k").coalesce(1),
+                    path,
                 )
                 real_commit(path, rival, [], expect_version, op="APPEND")
             return real_commit(path, added, removed, expect_version, **kw)
@@ -2842,13 +3006,13 @@ class TestRowTracking:
 class TestMergeIntoCow:
     def _ranged(self, spark, table, bands=4, width=25):
         for b in range(bands):
-            txnlog.txn_append_stats(
+            txnlog.txn_append(
                 spark,
                 spark.range(b * width, (b + 1) * width).selectExpr(
                     "id AS k", "CAST(id % 7 AS STRING) AS v"
                 ),
                 table,
-                ["k"],
+                props={"write.statsColumns": "k"},
             )
 
     def test_pruned_clause_merge_matches_whole_snapshot(self, spark, table, tmp_path):
@@ -2864,7 +3028,7 @@ class TestMergeIntoCow:
             ("matched_update", None, {"v": "s.v"}),
             ("not_matched_insert", "s.op <> 'D'", {"k": "s.k", "v": "s.v"}),
         ]
-        txnlog.txn_merge_into_cow(spark, src, table, ["k"], clauses, stats_cols=["k"])
+        txnlog.txn_merge_into_cow(spark, src, table, ["k"], clauses)
         txnlog.txn_merge_into(spark, src, other, ["k"], clauses)
         a = sorted((r.k, r.v) for r in txnlog.read_snapshot(spark, table).collect())
         b = sorted((r.k, r.v) for r in txnlog.read_snapshot(spark, other).collect())
@@ -2883,8 +3047,11 @@ class TestMergeIntoCow:
         src = spark.createDataFrame([(10, "UPD", "U")], "k long, v string, op string")
         try:
             txnlog.txn_merge_into_cow(
-                spark, src, table, ["k"],
-                [("matched_update", None, {"v": "s.v"})], stats_cols=["k"],
+                spark,
+                src,
+                table,
+                ["k"],
+                [("matched_update", None, {"v": "s.v"})],
             )
         finally:
             for n in moved:
@@ -2906,8 +3073,13 @@ class TestMergeIntoCow:
         src = spark.createDataFrame([(1, "A", "U")], "k long, v string, op string")
         clauses = [("matched_update", None, {"v": "s.v"})]
         txnlog.txn_merge_into_cow(
-            spark, src, table, ["k"], clauses, app_id="cdc", batch_id=0,
-            stats_cols=["k"],
+            spark,
+            src,
+            table,
+            ["k"],
+            clauses,
+            app_id="cdc",
+            batch_id=0,
         )
         v = txnlog.current_version(table)
         # redelivery through EITHER form no-ops on the shared watermark
@@ -2932,8 +3104,11 @@ class TestFsck:
         assert rep["ok"] and rep["checked_versions"] == [0, 1, 2, 3]
 
     def test_detects_missing_file_sidecar_and_bad_positions(self, spark, table):
-        txnlog.txn_append_stats(
-            spark, spark.range(10).selectExpr("id AS k").coalesce(1), table, ["k"]
+        txnlog.txn_append(
+            spark,
+            spark.range(10).selectExpr("id AS k").coalesce(1),
+            table,
+            props={"write.statsColumns": "k"},
         )
         txnlog.txn_delete_dv(spark, F.col("k") == 3, table)
         d = os.path.join(table, "data")
@@ -2951,8 +3126,11 @@ class TestFsck:
         assert any("missing data file" in i for i in rep2["issues"])
 
     def test_detects_row_count_drift(self, spark, table):
-        txnlog.txn_append_stats(
-            spark, spark.range(10).selectExpr("id AS k").coalesce(1), table, ["k"]
+        txnlog.txn_append(
+            spark,
+            spark.range(10).selectExpr("id AS k").coalesce(1),
+            table,
+            props={"write.statsColumns": "k"},
         )
         d = os.path.join(table, "data")
         (name,) = list(txnlog.snapshot_stats(table))
@@ -3008,11 +3186,11 @@ class TestUniqueConstraints:
         pruning tests)."""
         txnlog.txn_set_property(table, "unique.pk", "k")
         for b in range(4):
-            txnlog.txn_append_stats(
+            txnlog.txn_append(
                 spark,
                 spark.range(b * 25, (b + 1) * 25).selectExpr("id AS k").coalesce(1),
                 table,
-                ["k"],
+                props={"write.statsColumns": "k"},
             )
         d = os.path.join(table, "data")
         moved = []
@@ -3024,14 +3202,17 @@ class TestUniqueConstraints:
         try:
             # keys land in band 0's range only: bands 1-3 never opened
             with pytest.raises(txnlog.UniqueViolation):
-                txnlog.txn_append_stats(
-                    spark, spark.createDataFrame([(7,)], "k long"), table, ["k"]
+                txnlog.txn_append(
+                    spark,
+                    spark.createDataFrame([(7,)], "k long"),
+                    table,
+                    props={"write.statsColumns": "k"},
                 )
-            txnlog.txn_append_stats(
+            txnlog.txn_append(
                 spark,
                 spark.createDataFrame([(1000,)], "k long").coalesce(1),
                 table,
-                ["k"],
+                props={"write.statsColumns": "k"},
             )
         finally:
             for n in moved:
@@ -3110,18 +3291,23 @@ def test_partitioned_idempotent_append_exactly_once(spark, table):
     df = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "a")], "k long, p string"
     )
-    v1 = txnlog.txn_append_partitioned_idempotent(spark, df, table, "p", "app", 0)
+    v1 = txnlog.txn_append(
+        spark, df, table, txn=("app", 0), props={"partition.column": "p"}
+    )
     assert v1 == 0
     d = os.path.join(table, "data")
     n_files = len(os.listdir(d))
     # full redelivery: no new rows, no staged litter
-    txnlog.txn_append_partitioned_idempotent(spark, df, table, "p", "app", 0)
+    txnlog.txn_append(spark, df, table, txn=("app", 0), props={"partition.column": "p"})
     assert txnlog.read_snapshot(spark, table).count() == 3
     assert len(os.listdir(d)) == n_files
     # next batch lands, partition values readable through the generic read
-    txnlog.txn_append_partitioned_idempotent(
-        spark, spark.createDataFrame([(4, "c")], "k long, p string"),
-        table, "p", "app", 1,
+    txnlog.txn_append(
+        spark,
+        spark.createDataFrame([(4, "c")], "k long, p string"),
+        table,
+        txn=("app", 1),
+        props={"partition.column": "p"},
     )
     got = {(r.k, r.p) for r in txnlog.read_snapshot(spark, table).collect()}
     assert got == {(1, "a"), (2, "b"), (3, "a"), (4, "c")}
@@ -3202,7 +3388,7 @@ class TestUniqueConstraintAdvice9:
                 fired["n"] = 1
                 real_commit(
                     path,
-                    _t._stage(spark.createDataFrame([(99,)], "k long"), path),
+                    _t._stage(spark, spark.createDataFrame([(99,)], "k long"), path),
                     [], expect_version, op="APPEND",
                 )
             return real_commit(path, added, removed, expect_version, **kw)
@@ -3221,7 +3407,7 @@ class TestUniqueConstraintAdvice9:
     ):
         self._race_unique(
             spark, table,
-            lambda df: txnlog.txn_append_idempotent(spark, df, table, "app", 0),
+            lambda df: txnlog.txn_append(spark, df, table, txn=("app", 0)),
         )
 
     def test_partitioned_append_revalidates_unique_after_lost_race(
@@ -3231,10 +3417,11 @@ class TestUniqueConstraintAdvice9:
 
         table = str(tmp_path / "ptbl")
         txnlog.txn_set_property(table, "unique.pk", "k")
-        txnlog.txn_append_partitioned(
+        txnlog.txn_append(
             spark,
             spark.createDataFrame([(1, "a"), (2, "b")], "k long, p string"),
-            table, "p",
+            table,
+            props={"partition.column": "p"},
         )
         real_commit = _t.commit
         fired = {"n": 0}
@@ -3244,9 +3431,10 @@ class TestUniqueConstraintAdvice9:
                 fired["n"] = 1
                 real_commit(
                     path,
-                    _t._stage_partitioned(
+                    _t._stage(
+                        spark,
                         spark.createDataFrame([(99, "a")], "k long, p string"),
-                        path, "p",
+                        path,
                     ),
                     [], expect_version, op="APPEND",
                     props={"partition.column": "p"},
@@ -3256,10 +3444,11 @@ class TestUniqueConstraintAdvice9:
         _t.commit = racing_commit
         try:
             with pytest.raises(txnlog.UniqueViolation, match="already live"):
-                txnlog.txn_append_partitioned(
+                txnlog.txn_append(
                     spark,
                     spark.createDataFrame([(99, "b")], "k long, p string"),
-                    table, "p",
+                    table,
+                    props={"partition.column": "p"},
                 )
         finally:
             _t.commit = real_commit
@@ -3267,9 +3456,8 @@ class TestUniqueConstraintAdvice9:
 
     def test_stats_property_append_auto_optimizes(self, spark, table):
         """write.statsColumns + autoOptimize.every on one table: appends
-        keep compacting (the delegation to txn_append_stats must not
-        silently drop auto-optimize) AND the rewritten files carry the
-        declared zone maps (via _stage_auto)."""
+        keep compacting AND the rewritten files carry the declared zone
+        maps (the compaction restages through _stage)."""
         txnlog.txn_set_property(table, "write.statsColumns", "k")
         txnlog.txn_set_property(table, "autoOptimize.every", "3")
         for b in range(2):
@@ -3286,21 +3474,29 @@ class TestUniqueConstraintAdvice9:
         assert stats and all("k" in st for st in stats.values())
         assert txnlog.read_snapshot(spark, table).count() == 20
 
-    def test_adhoc_stats_append_stays_exempt_from_auto_optimize(
-        self, spark, tmp_path
-    ):
-        """Explicit stats_cols WITHOUT write.statsColumns: a compaction
-        would discard the curated per-file metadata, so auto-optimize
-        must not fire."""
-        table = str(tmp_path / "adhoc")
-        txnlog.txn_set_property(table, "autoOptimize.every", "1")
-        v = txnlog.txn_append_stats(
-            spark, spark.range(10).selectExpr("id AS k").repartition(4),
-            table, ["k"],
-        )
-        # no compaction commit rode on top of the append
-        assert v == txnlog.current_version(table) == 1
-        assert len(txnlog.snapshot_files(table)) == 4
+    def test_auto_compaction_keeps_zone_maps_and_blooms(self, spark, tmp_path):
+        """Every append runs auto-optimize, and the compaction restages
+        through the one stager: the rewritten files carry the table's
+        zone maps AND bloom sidecars."""
+        table = str(tmp_path / "indexed")
+        txnlog.txn_set_property(table, "autoOptimize.every", "2")  # v0
+        for b in range(2):  # v1, v2 -> compaction v3
+            txnlog.txn_append(
+                spark,
+                spark.range(b * 10, (b + 1) * 10)
+                .selectExpr("id AS k").repartition(4),
+                table,
+                props={"write.statsColumns": "k", "write.bloomColumns": "k"},
+            )
+        assert txnlog.current_version(table) == 3
+        assert txnlog.table_history(table)[0]["op"] == "OPTIMIZE"
+        stats = txnlog.snapshot_stats(table)
+        assert len(stats) < 8
+        for name, st in stats.items():
+            assert "k" in st and "k" in st["__bloom__"]
+            assert os.path.exists(txnlog._bloom_sidecar(table, name, "k"))
+        hit = txnlog.read_snapshot(spark, table, where={"k": [13]}).filter("k = 13")
+        assert hit.count() == 1
 
 
 class TestMultiPartCheckpoint:
@@ -3407,11 +3603,13 @@ class TestMultiPartCheckpoint:
         df = spark.createDataFrame(
             [(1, "a"), (2, "b"), (3, "a"), (4, "c")], "k long, p string"
         )
-        txnlog.txn_append_partitioned(spark, df, table, "p")
+        txnlog.txn_append(spark, df, table, props={"partition.column": "p"})
         txnlog.write_checkpoint(table)
-        txnlog.txn_append_partitioned(
-            spark, spark.createDataFrame([(5, "b")], "k long, p string"),
-            table, "p",
+        txnlog.txn_append(
+            spark,
+            spark.createDataFrame([(5, "b")], "k long, p string"),
+            table,
+            props={"partition.column": "p"},
         )
         v = txnlog.current_version(table)
         txnlog.write_checkpoint_incremental(spark, table, v)
@@ -3567,19 +3765,21 @@ class TestWidenColumn:
         """Zone-map pruning over a width-mixed table: stats recorded in
         the int era and the bigint era prune together, and the pruned
         read takes the upcasting scan."""
-        txnlog.txn_append_stats(
+        txnlog.txn_append(
             spark,
             spark.range(10).selectExpr("id AS k", "CAST(id AS int) AS v")
             .coalesce(1),
-            table, ["v"],
+            table,
+            props={"write.statsColumns": "v"},
         )
         txnlog.txn_widen_column(spark, table, "v", "bigint")
-        txnlog.txn_append_stats(
+        txnlog.txn_append(
             spark,
             spark.range(10, 15).selectExpr(
                 "id AS k", "CAST(id + 10000000000 AS bigint) AS v"
             ).coalesce(1),
-            table, ["v"],
+            table,
+            props={"write.statsColumns": "v"},
         )
         lo = txnlog.read_snapshot(spark, table, where={"v": (2, 5)})
         assert dict(lo.dtypes)["v"] == "bigint"
@@ -3792,14 +3992,24 @@ class TestPrunedScanPlanning:
             [(i, float(i) * 1.5, f"v{i}") for i in range(400)],
             "k long, x double, v string",
         )
-        txnlog.txn_append_stats(spark, df.filter("k < 100"), table, ["k", "x"])
-        txnlog.txn_append_stats(
-            spark, df.filter("k >= 100 AND k < 200"), table, ["k", "x"]
+        txnlog.txn_append(
+            spark, df.filter("k < 100"), table, props={"write.statsColumns": "k,x"}
         )
-        txnlog.txn_append_stats(
-            spark, df.filter("k >= 200 AND k < 300"), table, ["k", "x"]
+        txnlog.txn_append(
+            spark,
+            df.filter("k >= 100 AND k < 200"),
+            table,
+            props={"write.statsColumns": "k,x"},
         )
-        txnlog.txn_append_stats(spark, df.filter("k >= 300"), table, ["k", "x"])
+        txnlog.txn_append(
+            spark,
+            df.filter("k >= 200 AND k < 300"),
+            table,
+            props={"write.statsColumns": "k,x"},
+        )
+        txnlog.txn_append(
+            spark, df.filter("k >= 300"), table, props={"write.statsColumns": "k,x"}
+        )
 
     def _clustered_dv(self, spark, table):
         self._clustered(spark, table)
@@ -3807,35 +4017,47 @@ class TestPrunedScanPlanning:
 
     def _statless(self, spark, table):
         # file 1 carries stats, file 2 none
-        txnlog.txn_append_stats(
-            spark, _df(spark, [(1, "a"), (2, "b")]), table, ["k"]
+        txnlog.txn_append(
+            spark,
+            _df(spark, [(1, "a"), (2, "b")]),
+            table,
+            props={"write.statsColumns": "k"},
         )
-        txnlog.txn_append(spark, _df(spark, [(500, "z")]), table)
+        txnlog.txn_append(
+            spark, _df(spark, [(500, "z")]), table,
+            props={"write.statsColumns": None},
+        )
 
     def _doubles(self, spark, table):
         df = spark.createDataFrame([(1.5,), (7.5,)], "x double")
-        txnlog.txn_append_stats(spark, df.coalesce(1), table, ["x"])
+        txnlog.txn_append(
+            spark, df.coalesce(1), table, props={"write.statsColumns": "x"}
+        )
 
     def _strings(self, spark, table):
         for lo in ("a", "m"):
             df = spark.createDataFrame(
                 [(i, chr(ord(lo) + i)) for i in range(3)], "k long, v string"
             )
-            txnlog.txn_append_stats(spark, df.coalesce(1), table, ["k", "v"])
+            txnlog.txn_append(
+                spark, df.coalesce(1), table, props={"write.statsColumns": "k,v"}
+            )
 
     def _partitioned(self, spark, table):
         df = spark.createDataFrame(
             [(i, ["eu", "us", "ap"][i % 3], i * 10) for i in range(90)],
             "k long, region string, amt long",
         )
-        txnlog.txn_append_partitioned(spark, df, table, "region")
+        txnlog.txn_append(spark, df, table, props={"partition.column": "region"})
 
     def _bloomed(self, spark, table):
         for m in range(3):  # hash-spread: only the blooms can prune
             df = spark.range(300).filter(F.col("id") % 3 == m)
-            txnlog.txn_append_indexed(
-                spark, df.selectExpr("id AS k").coalesce(1), table,
-                stats_cols=["k"], bloom_col="k",
+            txnlog.txn_append(
+                spark,
+                df.selectExpr("id AS k").coalesce(1),
+                table,
+                props={"write.statsColumns": "k", "write.bloomColumns": "k"},
             )
 
     CASES = [

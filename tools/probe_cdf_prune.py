@@ -64,7 +64,7 @@ def main() -> None:
     target = txnlog.read_snapshot(spark, path, base_v)
     old_files = [os.path.basename(f) for f in txnlog.snapshot_files(path, base_v)]
     merged = upsert(target, upd, ["doc_id"])
-    added = txnlog._stage_auto(spark, merged, path)
+    added = txnlog._stage(spark, merged, path)
 
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r11")
     os.makedirs(out_dir, exist_ok=True)

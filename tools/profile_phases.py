@@ -58,7 +58,6 @@ def main() -> None:
         "txn_upsert",
         "txn_delete_dv",
         "txn_set_property",
-        "txn_append_partitioned",
         "txn_widen_column",
         "txn_cleanup_log",
         "txn_vacuum",
