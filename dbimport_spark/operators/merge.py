@@ -384,9 +384,9 @@ def merge_into(
     no driver loop; Catalyst folds the whole clause lattice into one
     whole-stage-codegen'd projection. At 100 TB this is exactly a
     key-shuffle plus map work. (The transactional lake form,
-    txnlog.txn_merge_into, stages this result as one commit; its pruned
-    siblings — txn_merge_cow / txn_merge_dv — remain the point-update
-    fast paths.)
+    txnlog.txn_merge_into, stages this result as one commit over only
+    the files that may hold a source key when the table carries key
+    metadata; txn_merge_dv is the merge-on-read point-update path.)
     """
     from functools import reduce
 

@@ -744,19 +744,17 @@ SELECT CAST(1 AS BIGINT) AS version, count(*) AS n_rows,
 FROM v1""",
 )
 def lake_txn_partitioned_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition-pruned TRANSACTIONAL upsert (txnlog.txn_upsert_partitioned
-    — merge_into_partitioned composed with the ACID commit log): the
-    source batch touches ONE priority partition, so the commit removes
-    and re-adds only that partition's files; the other four partitions'
-    files carry over by name (asserted in tests/test_txnlog.py) and are
-    never read during the merge. Output aggregates both versions via
-    log-driven snapshot resolution — incremental-load cost O(batch), full
-    time travel retained.
+    """Partition-pruned TRANSACTIONAL upsert (txnlog.txn_upsert on a
+    partitioned table): the partition column is one of the merge keys,
+    so the table prunes on it — the source batch touches ONE priority
+    partition, and the commit removes and re-adds only that partition's
+    files; the other four partitions' files carry over by name (asserted
+    in tests/test_txnlog.py) and are never read during the merge. Output
+    aggregates both versions via log-driven snapshot resolution —
+    incremental-load cost O(batch), full time travel retained.
 
     The partition column rides in the LOG, not the data files (the
-    lakehouse partitionValues convention), and the source keeps each
-    key's original partition value — the stable-partition contract of
-    merge_into_partitioned."""
+    lakehouse partitionValues convention)."""
     import os
     import shutil
     import tempfile
@@ -786,9 +784,7 @@ def lake_txn_partitioned_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("o_totalprice") * 2).alias("o_totalprice"),
         )
     )
-    txnlog.txn_upsert_partitioned(
-        spark, src, path, ["o_orderkey"], "o_orderpriority"
-    )
+    txnlog.txn_upsert(spark, src, path, ["o_orderkey", "o_orderpriority"])
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
 
     def agg(version: int) -> DataFrame:
@@ -1365,7 +1361,7 @@ WHERE NOT (c_custkey <= 150 AND c_acctbal < 0)
 GROUP BY c_mktsegment""",
 )
 def lake_delete_cow_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRUNED copy-on-write DELETE (txnlog.txn_delete_cow): eight
+    """PRUNED copy-on-write DELETE (txnlog.txn_delete with ``where``): eight
     range-clustered stats commits land customer key bands, then a DELETE
     whose predicate is confined to the first band rewrites ONLY the files
     whose zone maps intersect it — the other bands are not read, not
@@ -1406,11 +1402,11 @@ def lake_delete_cow_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             props={"write.statsColumns": "c_custkey"},
         )
 
-    txnlog.txn_delete_cow(
+    txnlog.txn_delete(
         spark,
         (F.col("c_custkey") <= 150) & (F.col("c_acctbal") < 0),
         path,
-        zone=("c_custkey", 0, 150),
+        where={"c_custkey": (0, 150)},
     )
     return (
         txnlog.read_snapshot(spark, path)
@@ -1445,10 +1441,11 @@ SELECT CAST(count(*) AS BIGINT) AS n_rows,
 FROM merged""",
 )
 def lake_merge_into_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRUNED copy-on-write MERGE INTO (txnlog.txn_merge_cow): the source
-    updates a narrow key band and inserts brand-new keys far beyond every
-    file's range. Per-file candidacy tests each zone map against the
-    source's distinct keys, so only the band's files rewrite; the insert
+    """PRUNED copy-on-write MERGE INTO (txnlog.txn_upsert on a table with
+    zone maps on the key): the source updates a narrow key band and
+    inserts brand-new keys far beyond every file's range. Per-file
+    candidacy tests each zone map against the source's distinct keys,
+    so only the band's files rewrite; the insert
     keys hit no file's range and land in the rewritten output — the
     untouched bands keep their identity. Result is EXACTLY txn_upsert's
     (pruning is a provable superset of matching files; equivalence pinned
@@ -1496,7 +1493,7 @@ def lake_merge_into_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    txnlog.txn_merge_cow(spark, src, path, ["c_custkey"])
+    txnlog.txn_upsert(spark, src, path, ["c_custkey"])
     return txnlog.read_snapshot(spark, path).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.sum("bal_cents").cast("bigint").alias("bal_sum"),
@@ -1854,7 +1851,7 @@ def lake_partitioned_dv_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partitioned deletion vectors + per-partition OPTIMIZE: two
     partitioned appends fragment each status partition, a DV delete whose
     predicate references the LOG-carried partition column removes rows
-    with zero data bytes moved, then txn_compact_partitioned merges small
+    with zero data bytes moved, then txn_compact merges small
     files WITHIN each value (materializing the vectors) — untouched
     partitions are not read or mentioned in the commit. The graded read
     goes through the generic snapshot reader, which re-attaches the
@@ -1892,7 +1889,7 @@ def lake_partitioned_dv_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderstatus") == "F") & (F.col("o_orderkey") % 7 == 0),
         path,
     )
-    txnlog.txn_compact_partitioned(spark, path, target_file_bytes=1 << 30)
+    txnlog.txn_compact(spark, path, target_file_bytes=1 << 30)
     return (
         txnlog.read_snapshot(spark, path)
         .groupBy(F.col("o_orderstatus").alias("status"))
@@ -1982,8 +1979,7 @@ FROM merged""",
 )
 def lake_merge_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE-ON-READ UPSERT via deletion vectors (txnlog.txn_merge_dv) —
-    the third merge strategy beside the whole-snapshot rewrite
-    (★merge_upsert's lake form) and the pruned CoW rewrite
+    the merge strategy beside the copy-on-write rewrite
     (★lake_merge_into_pruned), graded against the SAME oracle as the
     latter: identical semantics, different write amplification. Matched
     target rows are deleted by DV sidecars built from a KEY-COLUMN-pruned
@@ -2137,7 +2133,7 @@ def lake_delete_dv_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         (F.col("c_custkey") <= 150) & (F.col("c_acctbal") < 0),
         path,
-        zone=("c_custkey", 0, 150),
+        where={"c_custkey": (0, 150)},
     )
     stats = txnlog.snapshot_stats(path)
     n_outside = sum(

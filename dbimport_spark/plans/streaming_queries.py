@@ -1768,7 +1768,7 @@ def stream_lake_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("user_id", "x.event_id", "x.v4", "x.op")
         )
-        txnlog.txn_merge_into_cow(
+        txnlog.txn_merge_into(
             spark,
             last,
             path,
@@ -1786,8 +1786,7 @@ def stream_lake_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
                     {"user_id": "s.user_id", "eid": "s.event_id", "v4": "s.v4"},
                 ),
             ],
-            app_id=app,
-            batch_id=batch_id,
+            txn=(app, batch_id),
         )
 
     q = (
@@ -1818,7 +1817,7 @@ def stream_lake_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     txnlog.txn_merge_into(
         spark, replay, path, ["user_id"],
         [("matched_delete", "s.op = 'D'"), ("matched_update", None, "all")],
-        app_id=app, batch_id=0,
+        txn=(app, 0),
     )
 
     return txnlog.read_snapshot(spark, path).agg(
@@ -1851,8 +1850,7 @@ def pipeline_gdpr_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
        table's row-level change feed (lake_cdc readChangeFeed=true):
        insert rows add (+1, +v4) deltas, the DV commit's delete
        preimages subtract, and each micro-batch folds its delta into
-       the aggregate through the pruned clause merge
-       (txn_merge_into_cow) —
+       the aggregate through the clause merge (txn_merge_into) —
        matched+zero-count deletes the user's row (full erasure
        downstream), matched updates, unmatched positive inserts.
 
@@ -1910,7 +1908,7 @@ def pipeline_gdpr_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("sgn") * F.col("v4")).cast("bigint").alias("dv4"),
             )
         )
-        txnlog.txn_merge_into_cow(
+        txnlog.txn_merge_into(
             spark,
             delta,
             totals,
@@ -1928,8 +1926,7 @@ def pipeline_gdpr_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
                     {"user_id": "s.user_id", "n": "s.dn", "v4": "s.dv4"},
                 ),
             ],
-            app_id=app,
-            batch_id=batch_id,
+            txn=(app, batch_id),
         )
 
     q = (

@@ -42,12 +42,15 @@ travel fails loudly up front.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import re
 import time
 import uuid
 
 from pyspark.sql import DataFrame
+
+_LOG = logging.getLogger(__name__)
 
 
 class TxnConflict(RuntimeError):
@@ -1194,49 +1197,149 @@ def txn_append(
 def txn_upsert(
     spark, source: DataFrame, path: str, keys, max_retries: int = 3
 ) -> int:
-    """Transactional UPSERT: merge source into the current snapshot with
-    the library merge (operators/merge.py upsert semantics), stage the
-    merged result, and commit it as {add: new files, remove: ALL previous
-    live files}. Readers see the old or the new table, never a mix; old
-    versions stay time-travelable.
+    """Transactional UPSERT: merge source into the table with the library
+    merge (operators/merge.py upsert semantics), stage the merged result
+    and commit it as {add: new files, remove: the files it replaced}.
+    Readers see the old or the new table, never a mix; old versions stay
+    time-travelable.
 
-    This is the whole-snapshot rewrite form of an unpartitioned table;
-    partitioned tables take txn_upsert_partitioned, which removes/adds
-    only the touched partitions' files. The merged result restages
-    through _stage, so the rewrite keeps the table's layout (file size,
-    zone maps, bloom sidecars)."""
+    Which files are replaced is the snapshot's choice (_merge_where):
+    when a merge key is the table's ``partition.column`` or is listed in
+    ``write.statsColumns`` / ``write.bloomColumns``, only the files that
+    may hold one of the source's keys are read and rewritten; otherwise
+    the whole snapshot is. Pruning on merge keys is always sound — a
+    file holding no source key holds no matched row. The result restages
+    through _stage, so the rewrite keeps the table's layout.
+
+    The source is persisted for the merge's two joins and the change-data
+    prune, and released on return unless the caller had cached it."""
+    from pyspark import StorageLevel
+
     from dbimport_spark.operators.merge import upsert
 
-    _refuse_partitioned(path, "txn_upsert")
-    # An upsert only changes rows whose key appears in the source, so the
-    # CDF diff (when cdf.enabled) can be pre-filtered to those keys —
-    # plain string keys only (KeyColumn key functions would change what
-    # "appears in the source" means; none of the txn callers use them).
-    touched_keys = (
-        (list(keys), source) if all(isinstance(k, str) for k in keys) else None
-    )
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        target = read_snapshot(spark, path, base_v)
-        old_files = [os.path.basename(f) for f in snapshot_files(path, base_v)]
-        merged = upsert(target, source, keys)
-        added = _stage(spark, merged, path)
-        _validate_staged(spark, path, added)  # merge may introduce new rows
-        try:
-            v = commit(path, added, old_files, base_v, op="UPSERT")
-            _maybe_write_change_data(
-                spark, path, v, old_files, added, base_v,
-                touched_keys=touched_keys,
-            )
-            return v
-        except TxnConflict:
-            # lost the race: the staged files are unreferenced (invisible
-            # to every reader); re-merge against the new snapshot.
+    keys = list(keys)
+    owned = not source.is_cached
+    if owned:
+        source = source.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        where = _merge_where(path, source, keys)
+        # An upsert only changes rows whose key appears in the source, so
+        # the CDF diff can be pre-filtered to those keys — plain string
+        # keys only (KeyColumn key functions would change what "appears
+        # in the source" means).
+        touched = (keys, source) if all(isinstance(k, str) for k in keys) else None
+
+        def build(target):
+            return upsert(target, source, keys, materialize_source=False)
+
+        return _rewrite(
+            spark, path, "UPSERT",
+            lambda live, props: (_pruned(path, live, props, where), build),
+            max_retries, validate=True, touched=touched,
+        )
+    finally:
+        if owned:
+            source.unpersist()
+
+
+def _pruned(path: str, live: dict, props: dict, where: dict | None) -> list[str]:
+    """The live files a ``where`` may match (_candidates), or every live
+    file when there is none."""
+    return sorted(live) if where is None else _candidates(path, live, props, where)
+
+
+def _merge_where(path: str, source: DataFrame, keys) -> dict | None:
+    """The ``where`` a merge takes from the snapshot: one entry per merge
+    key the table can prune on — its ``partition.column``, or a column
+    of ``write.statsColumns`` / ``write.bloomColumns``. The entry is the
+    source's distinct values of the key, or past _UNIQUE_BLOOM_KEYS_MAX
+    of them the source's ``(min, max)`` range. Without such a key the
+    merge reads the whole snapshot and collects nothing."""
+    from pyspark.sql import functions as F
+
+    props = table_props(path)
+    prunable = {
+        props.get("partition.column"),
+        *_prop_cols(props, "write.statsColumns"),
+        *_prop_cols(props, "write.bloomColumns"),
+    }
+    where = {}
+    for k in keys:
+        if not isinstance(k, str) or k not in prunable:
             continue
-    raise TxnConflict(f"gave up after {max_retries} retries upserting {path}")
+        vals = [
+            r[0]
+            for r in source.select(k).distinct()
+            .limit(_UNIQUE_BLOOM_KEYS_MAX + 1)
+            .collect()
+        ]
+        if len(vals) <= _UNIQUE_BLOOM_KEYS_MAX:
+            where[k] = vals
+        else:
+            where[k] = tuple(source.agg(F.min(k), F.max(k)).first())
+    return where or None
 
 
-# ------------------------------------------------------- partitioned form
+def _rewrite(
+    spark, path: str, op: str, plan, max_retries: int, validate: bool = False,
+    touched=None, txn: tuple[str, int] | None = None,
+) -> int:
+    """THE rewrite core under every copy-on-write DML verb and compaction:
+    one optimistic-retry loop that folds the log, asks
+    ``plan(live, props)`` for ``(names, build)`` — the live files to
+    replace and a function from their rows to the new rows — or None
+    when there is nothing to commit, scans the named files
+    (_scan_snapshot; an empty, schema-carrying frame when none are
+    named), stages ``build``'s rows (_stage, so partitioned tables keep
+    their layout), validates them against the table's CHECKs when
+    ``validate`` (merges, which may introduce rows), and commits
+    {add: staged, remove: names}. A lost race drops the staged files
+    and replans against the new snapshot.
+
+    After the commit, a ``cdf.enabled`` table gets change files for any
+    rewrite but OPTIMIZE (whose content is unchanged; the CDC reader
+    skips it by op). ``touched`` is the ``(key_cols, keys_df)`` prune of
+    that diff (_write_change_data). Partitioned tables keep the CDC
+    reader's own diff: change files would lack the log-resident
+    partition column. ``txn=(app_id, batch_id)`` records the
+    exactly-once watermark in the commit, and a redelivered batch
+    returns the current version without writing."""
+    for _ in range(max_retries):
+        if txn is not None and txn[1] <= last_committed_batch(path, txn[0]):
+            return current_version(path)
+        base_v = current_version(path)
+        if base_v < 0:
+            raise ValueError(f"{op}: {path} has no committed version")
+        live, ptype, props = _fold_log3(path, base_v)
+        planned = plan(live, props)
+        if planned is None:
+            return base_v
+        names, build = planned
+        target = (
+            _scan_snapshot(spark, path, {n: live[n] for n in names}, ptype, props)
+            if names
+            else read_snapshot(spark, path, base_v).limit(0)
+        )
+        added = _stage(spark, build(target), path)
+        if validate:
+            _validate_staged(spark, path, added)
+        try:
+            v = commit(
+                path, added, names, base_v, op=op,
+                props={f"txn.{txn[0]}": str(txn[1])} if txn is not None else None,
+            )
+        except TxnConflict:
+            _drop_staged(path, added)
+            continue
+        if op != "OPTIMIZE" and ptype is None:
+            _maybe_write_change_data(
+                spark, path, v, names, added, base_v, touched_keys=touched
+            )
+        return v
+    raise TxnConflict(f"gave up after {max_retries} retries: {op} on {path}")
+
+
+# ------------------------------------------------------- partition values
 
 def _entry_files(entry_list):
     """Log entries are either bare file names (unpartitioned commits) or
@@ -1245,18 +1348,17 @@ def _entry_files(entry_list):
 
 
 def _refuse_partitioned(path: str, op_name: str) -> None:
-    """Loud guard for operations whose staged output would strip the
-    log-carried partition values (silent corruption: the table's files
-    would stop matching its partition metadata)."""
+    """Loud guard for operations that cannot carry the log-resident
+    partition values (silent corruption: the table's files would stop
+    matching its partition metadata)."""
     cur = current_version(path)
     if cur < 0:
         return
     _, ptype = _fold_log(path, cur)
     if ptype is not None:
         raise ValueError(
-            f"{op_name}: partitioned tables are not supported — the rewrite "
-            "would strip the log-carried partition values; use the "
-            "partitioned forms (txn_upsert_partitioned) or txn_delete_dv"
+            f"{op_name}: partitioned tables are not supported — the "
+            "partition values live in the log, not in the files"
         )
 
 
@@ -1324,55 +1426,21 @@ def _partition_lit(encoded, ptype):
     return col.cast(ptype) if ptype else col
 
 
-def txn_upsert_partitioned(
-    spark, source: DataFrame, path: str, keys, partition_col: str,
-    max_retries: int = 3,
+def txn_delete(
+    spark, pred, path: str, where: dict | None = None, max_retries: int = 3
 ) -> int:
-    """Partition-pruned TRANSACTIONAL upsert — sinks.merge_into_partitioned
-    composed with the commit log: merge only the partitions the source
-    touches, stage their replacement files, and commit {add: new files of
-    touched partitions, remove: OLD files of touched partitions}.
-    Untouched partitions' files are not read, not rewritten, and not even
-    mentioned in the commit — an incremental load's commit is O(batch).
-    Same correctness requirement as merge_into_partitioned: the partition
-    column must be a stable function of the merge keys."""
-    from pyspark.sql import functions as F
+    """Transactional row-level DELETE: rewrite the files that may hold a
+    row matching ``pred`` (a Column predicate) without those rows
+    and commit {add: kept-row files, remove: the rewritten files} as one
+    version; deleted rows stay time-travelable until vacuum. Returns the
+    new version, or the current one when no file can match.
 
-    from dbimport_spark.operators.merge import upsert
-
-    touched_values = [
-        r[0] for r in source.select(partition_col).distinct().collect()
-    ]
-    touched = {_encode_partition_value(v) for v in touched_values}
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        live = snapshot_partitions(path, base_v)
-        old_touched = [n for n, p in live.items() if p in touched]
-        if old_touched:
-            target_slice = read_snapshot(
-                spark, path, base_v, where={partition_col: touched_values}
-            )
-            merged = upsert(target_slice, source, keys)
-        else:
-            merged = source
-        layout = {"partition.column": partition_col}
-        added = _stage(spark, merged, path, layout)
-        _validate_staged(spark, path, added, partition_col)
-        try:
-            return commit(
-                path, added, old_touched, base_v, op="UPSERT", props=layout
-            )
-        except TxnConflict:
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries upserting {path}")
-
-
-def txn_delete(spark, source_pred, path: str, max_retries: int = 3) -> int:
-    """Transactional row-level DELETE: rewrite the current snapshot
-    without the rows matching ``source_pred`` (a Column predicate) and
-    commit {add: kept-row files, remove: all previous files} as one
-    version. Same optimistic-retry shape as txn_upsert; deleted rows stay
-    time-travelable until vacuum. Returns the new version.
+    ``where`` is read_snapshot's spec and must be IMPLIED by the
+    predicate (a pruned file may hold no matching row): the snapshot's
+    metadata picks the candidate files (_candidates), so a delete
+    confined to one key band reads and rewrites O(band) files and the
+    rest keep their identity. Without it every live file is rewritten.
+    Candidate files' deletion vectors retire with them.
 
     SQL DELETE (and Delta's) removes only rows where the predicate is
     TRUE; rows where it evaluates to NULL (e.g. ``status == 'spam'`` on a
@@ -1381,20 +1449,13 @@ def txn_delete(spark, source_pred, path: str, max_retries: int = 3) -> int:
     (which is NULL for NULL inputs and would silently drop those rows)."""
     from pyspark.sql import functions as F
 
-    _refuse_partitioned(path, "txn_delete")
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        target = read_snapshot(spark, path, base_v)
-        old_files = [os.path.basename(f) for f in snapshot_files(path, base_v)]
-        kept = target.filter(~F.coalesce(source_pred, F.lit(False)))
-        added = _stage(spark, kept, path)
-        try:
-            v = commit(path, added, old_files, base_v, op="DELETE")
-            _maybe_write_change_data(spark, path, v, old_files, added, base_v)
-            return v
-        except TxnConflict:
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries deleting from {path}")
+    keep = ~F.coalesce(pred, F.lit(False))
+
+    def plan(live, props):
+        names = _pruned(path, live, props, where)
+        return (names, lambda t: t.filter(keep)) if names else None
+
+    return _rewrite(spark, path, "DELETE", plan, max_retries)
 
 
 def read_changes(
@@ -1417,9 +1478,7 @@ def read_changes(
     and never rescans the base table (★lake_cdf_incremental_agg proves
     the algebra against a from-scratch recompute).
 
-    Unchanged rows are not emitted. One shuffle on the key columns; at
-    100 TB pair this with the partitioned form so only touched partitions'
-    files are read on either side."""
+    Unchanged rows are not emitted. One shuffle on the key columns."""
     from functools import reduce
 
     from pyspark.sql import functions as F
@@ -1514,52 +1573,53 @@ def txn_compact(
     max_retries: int = 3,
 ) -> int:
     """Transactional small-file compaction — Delta/Iceberg OPTIMIZE reduced
-    to its core: read the current snapshot's files, rewrite the same rows
-    as ⌈total_bytes / target_file_bytes⌉ files, and commit
-    {add: new files, remove: all old files} as ONE version. Readers see
-    the old or the new layout, never a mix; the table's CONTENT is
-    invariant (asserted by the lake_txn_compact oracle query), and time
-    travel to pre-compaction versions still resolves the old files until
-    vacuum. A lost commit race leaves the staged files unreferenced and
-    retries against the new snapshot, like txn_upsert. Returns the new
-    version (or the current one if there was nothing to compact)."""
+    to its core: rewrite the snapshot's files as ⌈total_bytes /
+    target_file_bytes⌉ files and commit {add: new files, remove: old
+    files} as ONE version. Readers see the old or the new layout, never a
+    mix; the table's CONTENT is invariant (asserted by the
+    lake_txn_compact oracle query), and time travel to pre-compaction
+    versions still resolves the old files until vacuum. Returns the new
+    version (or the current one if there was nothing to compact).
+
+    A partitioned table compacts WITHIN each partition value (the value
+    is per-file log metadata, so files of two values never merge), one
+    output file per rewritten value, all values in one staging job;
+    values whose files are already few or large enough are not read and
+    not mentioned in the commit.
+
+    DV-aware: compaction MATERIALIZES deletion vectors (deleted rows drop
+    out of the rewrite; the removed files take their DV refs with them) —
+    Delta's PURGE semantics ride along with OPTIMIZE — so a group with a
+    vector is rewritten whatever its size (snapshot_profile and
+    export_symlink_manifest send users here for exactly that). The
+    logical round-trip also PURGES dropped columns' bytes from the
+    rewritten files; renames keep their stable physical names."""
     import math
 
-    _refuse_partitioned(path, "txn_compact")
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        files = snapshot_files(path, base_v)
-        # min_files alone must not short-circuit a DV-carrying table: a
-        # single file with a deletion vector still needs compaction to
-        # MATERIALIZE the DV (snapshot_profile / export_symlink_manifest
-        # send users here for exactly that), matching the guard in
-        # txn_compact_partitioned.
-        if len(files) < min_files and not snapshot_dvs(path, base_v):
-            return base_v
-        total = sum(os.path.getsize(f) for f in files)
-        n_out = max(1, math.ceil(total / target_file_bytes))
-        if n_out >= len(files) and not snapshot_dvs(path, base_v):
-            return base_v  # already at or below target granularity
-        # DV-aware: compaction MATERIALIZES deletion vectors (deleted rows
-        # drop out of the rewrite; the removed files take their DV refs
-        # with them) — Delta's PURGE semantics ride along with OPTIMIZE.
-        # The logical round-trip (_apply_colmap here, _stage's unapply on
-        # the way out) also PURGES dropped columns' bytes from the
-        # rewritten files — renames keep their stable physical names.
-        df = _apply_colmap(
-            _read_files_dv(
-                spark, path, files, snapshot_dvs(path, base_v),
-                table_props(path, base_v),
-            ),
-            table_props(path, base_v),
-        ).coalesce(n_out)
-        added = _stage(spark, df, path)
-        old = [os.path.basename(f) for f in files]
-        try:
-            return commit(path, added, old, base_v, op="OPTIMIZE")
-        except TxnConflict:
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries compacting {path}")
+    data = _data_dir(path)
+
+    def plan(live, props):
+        by_value: dict = {}
+        for n, d in live.items():
+            by_value.setdefault(d["p"], []).append(n)
+        names, n_out = [], 0
+        for group in by_value.values():
+            size = sum(os.path.getsize(os.path.join(data, n)) for n in group)
+            k = max(1, math.ceil(size / target_file_bytes))
+            has_dv = any(live[n].get("dv") for n in group)
+            if (len(group) < min_files or k >= len(group)) and not has_dv:
+                continue
+            names += group
+            n_out += k
+        if not names:
+            return None
+        pcol = props.get("partition.column")
+        if pcol is None:
+            return names, lambda t: t.coalesce(n_out)
+        n_values = len({live[n]["p"] for n in names})
+        return names, lambda t: t.repartition(n_values, pcol)
+
+    return _rewrite(spark, path, "OPTIMIZE", plan, max_retries)
 
 
 def _write_change_data(
@@ -1568,7 +1628,7 @@ def _write_change_data(
 ) -> None:
     """Writer-side CHANGE FILES for a rewrite commit (Delta's _change_data
     design, materialized lazily-on-write): when the table property
-    ``cdf.enabled=true`` is set, a whole-snapshot rewrite writes its
+    ``cdf.enabled=true`` is set, a rewrite (_rewrite) writes its
     row-level diff — the multiset difference of the removed files'
     VISIBLE rows vs the added files' rows, computed DISTRIBUTED as one
     union + one hash aggregation + an explode of per-row multiplicities
@@ -1729,10 +1789,13 @@ def _maybe_write_change_data(
                 spark, path, new_v, removed_names, added_entries, base_v,
                 touched_keys=touched_keys,
             )
-        except Exception:
+        except Exception as e:  # noqa: BLE001
             # change files are an accelerator, never a correctness
             # dependency: the CDC reader falls back to the on-read diff
-            pass
+            _LOG.warning(
+                "change data for version %s of %s not written (the CDC "
+                "reader will diff the snapshots instead): %r", new_v, path, e,
+            )
 
 
 def txn_fsck(path: str, version: int | None = None) -> dict:
@@ -2885,7 +2948,7 @@ def txn_convert_parquet_dir(src_dir: str, path: str, stats_cols=()) -> int:
 # file's deleted row positions, and every snapshot read anti-filters those
 # positions via parquet's ``_metadata.row_index`` — the merge-on-read
 # design of Delta deletion vectors / Iceberg positional deletes. The
-# whole-file rewrite forms (txn_delete / txn_delete_cow) stay the right
+# whole-file rewrite form (txn_delete) stays the right
 # tool for LARGE deletes; DVs win when the deleted fraction is small —
 # at 100 TB a 0.1% delete costs O(deleted rows) sidecar bytes instead of
 # a 100 TB rewrite. Sidecar generations are immutable: a later DV delete
@@ -3259,258 +3322,132 @@ def txn_widen_column(
 
 
 def txn_delete_dv(
-    spark, source_pred, path: str, zone: tuple | None = None,
-    bloom: tuple | None = None, max_retries: int = 3,
+    spark, pred, path: str, where: dict | None = None, max_retries: int = 3
 ) -> int:
     """Row-level DELETE as a deletion-vector commit: no data file is
     rewritten or removed — matching rows' (file, row position) pairs are
-    folded into per-file DV sidecars (written on EXECUTORS, one task per
-    touched file) and one commit replaces the touched files' DV
-    references. Returns the new version, or the current one when nothing
-    matched. Same NULL semantics as txn_delete: only rows where the
-    predicate is TRUE are deleted.
+    folded into per-file DV sidecars and one commit replaces the touched
+    files' DV references (_dv_rewrite). Returns the new version, or the
+    current one when nothing matched. Same NULL semantics as txn_delete:
+    only rows where the predicate is TRUE are deleted; the predicate may
+    reference a partitioned table's log-carried partition column.
 
-    ``zone=(col, lo, hi)`` / ``bloom=(col, values)`` describe the
-    predicate's key constraint and route the scan through the SAME
-    candidate planner as the reads and the CoW twins (_candidates):
-    a one-band delete then opens O(band) files instead of paying a
-    footer read on every live file — at 100 TB that is the difference
-    between a point DML and a table scan. Specs must be IMPLIED by the
-    predicate (a pruned file must contain no matching row); files
-    lacking the metadata are kept conservatively.
+    ``where`` is txn_delete's: read_snapshot's spec, IMPLIED by the
+    predicate, so a one-band delete opens O(band) files instead of paying
+    a footer read on every live file — at 100 TB the difference between
+    a point DML and a table scan.
 
     Already-deleted positions re-matching the predicate are harmless —
     the new sidecar is the set-union of old and new positions."""
+    from pyspark.sql import functions as F
+
+    def hits(scan):
+        return scan.filter(F.coalesce(pred, F.lit(False))).select("__f", "__p")
+
+    return _dv_rewrite(spark, path, "DELETE_DV", hits, max_retries, where=where)
+
+
+def _position_scan(spark, path: str, files: dict, ptype, props: dict) -> DataFrame:
+    """The rows of ``files`` (live name → fold state) under their logical
+    names, each with its file name ``__f`` and row position ``__p`` —
+    deletion vectors NOT applied (a DV writer unions old positions in).
+    A partitioned table scans per value with the typed partition value
+    re-attached, so predicates may reference the partition column."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    pcol = props.get("partition.column") if ptype is not None else None
+    if ptype is not None and pcol is None:
+        raise ValueError(
+            f"{path} is partitioned but the log predates the partition.column "
+            "property — cannot re-attach the partition column"
+        )
+    groups: dict = {}
+    for n, d in files.items():
+        groups.setdefault(d["p"] if pcol else None, []).append(
+            os.path.join(_data_dir(path), n)
+        )
+    parts = []
+    for p, fs in sorted(groups.items(), key=lambda kv: (kv[0] is None, kv[0] or "")):
+        g = _scan_files(spark, path, sorted(fs), props)
+        g = g.select(
+            F.substring_index(F.col("_metadata.file_path"), "/", -1).alias("__f"),
+            F.col("_metadata.row_index").alias("__p"),
+            *g.columns,
+        )
+        parts.append(g.withColumn(pcol, _partition_lit(p, ptype)) if pcol else g)
+    src = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    return _apply_colmap(src, props, keep=("__f", "__p") + ((pcol,) if pcol else ()))
+
+
+def _write_dvs(path: str, files: dict, hits: DataFrame) -> list[dict]:
+    """Fold ``hits`` (``__f``, ``__p``) into one NEW deletion-vector
+    sidecar per touched file — the union with the file's current vector,
+    written on the EXECUTORS, one task per file — and return the commit's
+    ``dv`` entries (one row per touched file: metadata, not data rows)."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        if base_v < 0:
-            raise ValueError(f"no data to delete at {path}")
-        live, ptype, props = _fold_log3(path, base_v)
-        cand = _candidates(path, live, props, _zone_bloom_where(zone, bloom))
-        if not cand:
-            return base_v  # log proves no file can match
-        live = {n: live[n] for n in cand}
-        old_dvs = {n: d["dv"]["d"] for n, d in live.items() if d.get("dv")}
-        if ptype is not None:
-            # partitioned table: the predicate may reference the partition
-            # column, which lives in the LOG — scan per value group with
-            # the typed literal re-attached, exactly like the read path
-            pcol = props.get("partition.column")
-            if pcol is None:
-                raise ValueError(
-                    "txn_delete_dv: partitioned table predates the "
-                    "partition.column property — cannot re-attach the "
-                    "partition column for predicate evaluation"
-                )
-            by_value: dict = {}
-            for n, d in live.items():
-                by_value.setdefault(d["p"], []).append(
-                    os.path.join(_data_dir(path), n)
-                )
-            groups = []
-            for value, gfiles in sorted(
-                by_value.items(), key=lambda kv: (kv[0] is None, kv[0])
-            ):
-                g = _scan_files(spark, path, sorted(gfiles), props)
-                groups.append(
-                    g.select(
-                        F.substring_index(
-                            F.col("_metadata.file_path"), "/", -1
-                        ).alias("__f"),
-                        F.col("_metadata.row_index").alias("__p"),
-                        *g.columns,
-                    ).withColumn(pcol, _partition_lit(value, ptype))
-                )
-            from functools import reduce
+    old_dvs = {n: d["dv"]["d"] for n, d in files.items() if d.get("dv")}
+    gen = uuid.uuid4().hex[:8]
+    data_dir = _data_dir(path)
 
-            src = reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True), groups
-            )
-            src = _apply_colmap(src, props, keep=("__f", "__p", pcol))
-            hits = src.filter(F.coalesce(source_pred, F.lit(False))).select(
-                "__f", "__p"
-            )
-        else:
-            files = sorted(os.path.join(_data_dir(path), n) for n in live)
-            src = _scan_files(spark, path, files, props)
-            hits = (
-                _apply_colmap(
-                    src.select(
-                        F.substring_index(
-                            F.col("_metadata.file_path"), "/", -1
-                        ).alias("__f"),
-                        F.col("_metadata.row_index").alias("__p"),
-                        *src.columns,
-                    ),
-                    props,
-                    keep=("__f", "__p"),
-                )
-                .filter(F.coalesce(source_pred, F.lit(False)))
-                .select("__f", "__p")
-            )
-        gen = uuid.uuid4().hex[:8]
-        data_dir = _data_dir(path)
+    def _write_dv(key, pdf):
+        from dbimport_spark.txnlog import _dv_decode as dec, _dv_encode as enc
 
-        def _write_dv(key, pdf):
-            from dbimport_spark.txnlog import _dv_decode as dec, _dv_encode as enc
+        n = key[0]
+        positions = set(int(p) for p in pdf["__p"])
+        old = old_dvs.get(n)
+        if old:
+            with open(os.path.join(data_dir, old), "rb") as fh:
+                positions.update(dec(fh.read()))
+        name = f"{n}.dv.{gen}"
+        tmp = os.path.join(data_dir, f".tmp-{name}")
+        with open(tmp, "wb") as fh:
+            fh.write(enc(positions))
+        os.replace(tmp, os.path.join(data_dir, name))
+        return pd.DataFrame({"n": [n], "d": [name], "k": [len(positions)]})
 
-            n = key[0]
-            positions = set(int(p) for p in pdf["__p"])
-            old = old_dvs.get(n)
-            if old:
-                with open(os.path.join(data_dir, old), "rb") as fh:
-                    positions.update(dec(fh.read()))
-            name = f"{n}.dv.{gen}"
-            tmp = os.path.join(data_dir, f".tmp-{name}")
-            with open(tmp, "wb") as fh:
-                fh.write(enc(positions))
-            os.replace(tmp, os.path.join(data_dir, name))
-            return pd.DataFrame({"n": [n], "d": [name], "k": [len(positions)]})
-
-        entries = (
-            hits.groupBy("__f")
-            .applyInPandas(_write_dv, "n string, d string, k long")
-            .collect()  # one row per TOUCHED FILE — metadata, not data rows
-        )
-        if not entries:
-            return base_v
-        dv = [{"n": r["n"], "d": r["d"], "k": int(r["k"])} for r in entries]
-        try:
-            return commit(path, [], [], base_v, dv=dv, op="DELETE_DV")
-        except TxnConflict:
-            # lost the race: this generation was never committed, so it is
-            # INVISIBLE to vacuum (which only reaps log-proven generations)
-            # and would leak until the data file itself dies — the losing
-            # writer knows the names, so it reaps its own sidecars before
-            # recomputing against the new snapshot.
-            for e in dv:
-                try:
-                    os.remove(os.path.join(data_dir, e["d"]))
-                except FileNotFoundError:
-                    pass
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries DV-deleting from {path}")
+    rows = (
+        hits.groupBy("__f")
+        .applyInPandas(_write_dv, "n string, d string, k long")
+        .collect()
+    )
+    return [{"n": r["n"], "d": r["d"], "k": int(r["k"])} for r in rows]
 
 
-# --------------------------------------- pruned copy-on-write DML (CoW)
-
-
-def _zone_bloom_where(zone: tuple | None, bloom: tuple | None) -> dict:
-    """The DML ``zone=(col, lo, hi)`` / ``bloom=(col, values)`` specs as a
-    ``where`` for _candidates (a value list prunes by zone map AND bloom,
-    so it takes the column when both specs name it)."""
-    where = {zone[0]: (zone[1], zone[2])} if zone else {}
-    if bloom:
-        where[bloom[0]] = list(bloom[1])
-    return where
-
-
-def txn_delete_cow(
-    spark,
-    source_pred,
-    path: str,
-    zone: tuple | None = None,
-    bloom: tuple | None = None,
-    max_retries: int = 3,
+def _dv_rewrite(
+    spark, path: str, op: str, hits, max_retries: int,
+    where: dict | None = None, source: DataFrame | None = None,
 ) -> int:
-    """PRUNED copy-on-write DELETE: rewrite ONLY the files that may
-    contain matching rows (zone-map / bloom candidacy from the log —
-    Delta/Iceberg DML file pruning) and commit {add: rewritten files,
-    remove: candidate files}; untouched files are not read, not
-    rewritten, and keep their identity (names, inodes, sidecars). At
-    100 TB a delete constrained to one key band costs O(band files), not
-    a table rewrite — the difference between txn_delete and this form.
-
-    ``zone``/``bloom`` describe the predicate's key constraint and MUST
-    be implied by it (see _candidates); candidate files with
-    deletion vectors are materialized by the rewrite (their DVs retire
-    with the removed files). NULL-predicate rows are kept, as in
-    txn_delete."""
-    from pyspark.sql import functions as F
-
+    """The merge-on-read core of txn_delete_dv and txn_merge_dv: fold the
+    log, take the candidate files (_pruned), select the positions to
+    delete with ``hits`` over their _position_scan, write the vectors
+    (_write_dvs), stage ``source`` as new files when given (validated
+    against the table's CHECKs), and commit {add: staged, dv: vectors}.
+    Returns the current version when there is nothing to commit. A lost
+    race reaps the never-committed sidecars and staged files — invisible
+    to vacuum, which only reaps log-proven generations — and replans."""
     for _ in range(max_retries):
         base_v = current_version(path)
         if base_v < 0:
-            raise ValueError(f"no data to delete at {path}")
+            raise ValueError(f"{op}: {path} has no committed version")
         live, ptype, props = _fold_log3(path, base_v)
-        if ptype is not None:
-            raise ValueError(
-                "txn_delete_cow: partitioned tables are not supported — "
-                "rewritten files would lose their partition values; use "
-                "the partitioned rewrite forms instead"
-            )
-        cand = _candidates(path, live, props, _zone_bloom_where(zone, bloom))
-        if not cand:
+        files = {n: live[n] for n in _pruned(path, live, props, where)}
+        dv = []
+        if files:
+            scan = _position_scan(spark, path, files, ptype, props)
+            dv = _write_dvs(path, files, hits(scan))
+        added = _stage(spark, source, path) if source is not None else []
+        if not dv and not added:
             return base_v
-        slice_df = _scan_snapshot(
-            spark, path, {n: live[n] for n in cand}, None, props
-        )
-        kept = slice_df.filter(~F.coalesce(source_pred, F.lit(False)))
-        added = _stage(spark, kept, path)
+        if added:
+            _validate_staged(spark, path, added)
         try:
-            return commit(path, added, cand, base_v, op="DELETE")
+            return commit(path, added, [], base_v, dv=dv or None, op=op)
         except TxnConflict:
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries CoW-deleting from {path}")
-
-
-def txn_merge_cow(
-    spark,
-    source: DataFrame,
-    path: str,
-    keys,
-    prune_key: str | None = None,
-    max_retries: int = 3,
-) -> int:
-    """PRUNED copy-on-write MERGE (UPSERT): only files that may contain a
-    source key are rewritten; every other file is untouched. Inserts
-    (source keys present in no file) land in the rewritten output.
-    Result is EXACTLY txn_upsert's — pruning is a superset of the files
-    containing matches, so non-candidates contribute no updated row and
-    can't hide an "insert" key.
-
-    The source's distinct ``prune_key`` values (default: the single merge
-    key) are collected to drive per-file candidacy — a value-list
-    ``where`` for _candidates, pruned by zone maps and by bloom sidecars
-    where the table's files carry them. The point-update workload this
-    form exists for has a small source by definition; a source too large
-    to collect keys from belongs with txn_upsert's whole-snapshot
-    rewrite anyway."""
-    from dbimport_spark.operators.merge import upsert
-
-    keys = list(keys)
-    pk = prune_key or (keys[0] if len(keys) == 1 else None)
-    if pk is None:
-        raise ValueError("txn_merge_cow: pass prune_key for composite merge keys")
-    where = {pk: [r[0] for r in source.select(pk).distinct().collect()]}
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        if base_v < 0:
-            raise ValueError(f"merge target {path} has no committed version")
-        live, ptype, props = _fold_log3(path, base_v)
-        if ptype is not None:
-            raise ValueError(
-                "txn_merge_cow: partitioned tables are not supported — "
-                "use txn_upsert_partitioned (partition-pruned rewrite)"
-            )
-        cand = _candidates(path, live, props, where)
-        if cand:
-            target_slice = _scan_snapshot(
-                spark, path, {n: live[n] for n in cand}, None, props
-            )
-        else:
-            target_slice = read_snapshot(spark, path, base_v).limit(0)
-        merged = upsert(target_slice, source, keys)
-        added = _stage(spark, merged, path)
-        _validate_staged(spark, path, added)
-        try:
-            return commit(path, added, cand, base_v, op="MERGE")
-        except TxnConflict:
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries CoW-merging into {path}")
+            _drop_staged(path, added + [e["d"] for e in dv])
+    raise TxnConflict(f"gave up after {max_retries} retries: {op} on {path}")
 
 
 # -------------------------------------- table properties + CHECK constraints
@@ -3880,8 +3817,8 @@ def txn_add_unique(
 
 
 #: Batches with at most this many distinct keys drive bloom pruning and
-#: a broadcast probe in _validate_unique; larger batches stay fully
-#: distributed (zone pruning + shuffle semi-join).
+#: a broadcast probe in _validate_unique, and a merge's key-list pruning
+#: (_merge_where); larger batches prune by their key range.
 _UNIQUE_BLOOM_KEYS_MAX = 10_000
 
 
@@ -4264,10 +4201,7 @@ def _maybe_auto_optimize(spark, path: str, new_version: int) -> int:
     n = int(every)
     if n <= 0 or new_version <= 0 or new_version % n != 0:
         return new_version
-    _, ptype, _ = _fold_log3(path, current_version(path))
-    if ptype is None:
-        return txn_compact(spark, path)
-    return txn_compact_partitioned(spark, path)
+    return txn_compact(spark, path)
 
 
 # --------------------------------------------- idempotent streaming sink
@@ -4320,298 +4254,78 @@ def export_symlink_manifest(path: str, version: int | None = None) -> str:
     return target
 
 
-def txn_compact_partitioned(
-    spark, path: str, target_file_bytes: int = 128 << 20, min_files: int = 2,
-    max_retries: int = 3,
-) -> int:
-    """OPTIMIZE for partitioned tables: compact small files WITHIN each
-    partition value (cross-partition merges are impossible by definition
-    — the value is per-file log metadata). Only values whose file count
-    and total size warrant it are rewritten; untouched partitions' files
-    are not read and not mentioned in the commit, so compacting one hot
-    partition of a thousand is O(that partition). Deletion vectors on
-    rewritten files materialize away; content is invariant."""
-    import math
-    from pyspark.sql import functions as _F
-
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        if base_v < 0:
-            return base_v
-        live, ptype, props = _fold_log3(path, base_v)
-        if ptype is None:
-            return txn_compact(spark, path, target_file_bytes, min_files)
-        pcol = props.get("partition.column")
-        if pcol is None:
-            raise ValueError(
-                "txn_compact_partitioned: partitioned table predates the "
-                "partition.column property — cannot re-attach the column "
-                "for the rewrite"
-            )
-        dvmap = {n: d["dv"] for n, d in live.items() if d.get("dv")}
-        by_value: dict = {}
-        for n, d in live.items():
-            by_value.setdefault(d["p"], []).append(n)
-        # pick the partitions worth rewriting; ONE staging job covers them
-        # all (a per-partition job loop serializes P tiny jobs — the wrong
-        # shape when one table has thousands of values)
-        groups: list = []
-        removed: list = []
-        for value, names in sorted(
-            by_value.items(), key=lambda kv: (kv[0] is None, kv[0])
-        ):
-            has_dv = any(n in dvmap for n in names)
-            files = [os.path.join(_data_dir(path), n) for n in names]
-            total = sum(os.path.getsize(f) for f in files)
-            n_out = max(1, math.ceil(total / target_file_bytes))
-            if (len(names) < min_files or n_out >= len(names)) and not has_dv:
-                continue
-            df = _read_files_dv(
-                spark, path, files,
-                {n: dvmap[n] for n in names if n in dvmap}, props,
-            ).withColumn(pcol, _partition_lit(value, ptype))
-            groups.append(df)
-            removed.extend(names)
-        if not removed:
-            return base_v
-        from functools import reduce
-
-        union = _apply_colmap(
-            reduce(lambda a, b: a.unionByName(b), groups), props, keep=(pcol,)
-        )
-        # one task per rewritten value → one output file per value (the
-        # per-value coalesce granularity; finer splitting belongs to the
-        # writer's maxRecordsPerFile at real scale)
-        added = _stage(spark, union.repartition(len(groups), _F.col(pcol)), path)
-        try:
-            return commit(path, added, removed, base_v, op="OPTIMIZE")
-        except TxnConflict:
-            # staged files unreferenced; re-derive from the new snapshot
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries compacting {path}")
-
-
 def txn_merge_dv(
-    spark, source: DataFrame, path: str, keys,
-    prune_key: str | None = None, max_retries: int = 3,
+    spark, source: DataFrame, path: str, keys, max_retries: int = 3
 ) -> int:
-    """MERGE-ON-READ UPSERT via deletion vectors — the third merge
-    strategy beside txn_upsert (whole-snapshot rewrite) and txn_merge_cow
-    (pruned rewrite): matched target rows are deleted by per-file DV
-    sidecars and the ENTIRE source (updates + inserts alike) appends as
-    new files, all in ONE atomic commit {add: source files, dv: matched
-    positions}. No target data file is read beyond the key column and
-    none is rewritten — at 100 TB a point-update batch costs O(source) +
-    O(matched rows) sidecar bytes, the cheapest write amplification of
-    the three. Result is EXACTLY txn_upsert's whole-row-replace semantics
-    for a key-distinct source; reads pay the DV anti-join until
-    compaction materializes.
+    """MERGE-ON-READ UPSERT via deletion vectors — the merge strategy
+    beside txn_upsert's copy-on-write rewrite: matched target rows are
+    deleted by per-file DV sidecars and the ENTIRE source (updates +
+    inserts alike) appends as new files, all in ONE atomic commit
+    {add: source files, dv: matched positions} (_dv_rewrite). No target
+    data file is read beyond the key columns and none is rewritten — at
+    100 TB a point-update batch costs O(source) + O(matched rows) sidecar
+    bytes. Result is EXACTLY txn_upsert's whole-row-replace semantics for
+    a key-distinct source; reads pay the DV anti-join until compaction
+    materializes.
 
-    ``prune_key`` (default: the single merge key) routes the position
-    scan through the log's zone-map and bloom candidacy (_candidates),
-    like txn_merge_cow: only files that MAY contain a source key are
-    opened for the key scan. Non-candidates provably contain no matched
-    row, so pruning cannot change the result; a point-update batch then
-    reads O(band) footers, not every live file. Files without the
-    metadata are kept conservatively.
-
-    Unpartitioned tables only (like the other DV writers' staging)."""
-    import pandas as pd
+    The position scan prunes like txn_upsert (_merge_where): only files
+    that may hold a source key are opened when the table carries
+    metadata on a merge key. Unpartitioned tables only — the staged
+    source would need the partition column the log carries."""
     from pyspark.sql import functions as F
 
     keys = list(keys)
-    pk = prune_key or (keys[0] if len(keys) == 1 else None)
-    where = (
-        {pk: [r[0] for r in source.select(pk).distinct().collect()]}
-        if pk is not None
-        else None
-    )
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        if base_v < 0:
-            raise ValueError(f"merge target {path} has no committed version")
-        live, ptype, props = _fold_log3(path, base_v)
-        if ptype is not None:
-            raise ValueError(
-                "txn_merge_dv: partitioned tables are not supported — use "
-                "txn_upsert_partitioned"
-            )
-        if where is not None:
-            live = {n: live[n] for n in _candidates(path, live, props, where)}
-        old_dvs = {n: d["dv"]["d"] for n, d in live.items() if d.get("dv")}
-        files = sorted(os.path.join(_data_dir(path), n) for n in live)
-        # key-column-pruned scan: only the keys + row position leave the
-        # parquet reader; matched VISIBLE rows' positions fold into DVs
-        # (already-deleted rows re-matching is harmless set-union)
-        if files:
-            tgt = _scan_files(spark, path, files, props).select(
-                F.substring_index(F.col("_metadata.file_path"), "/", -1).alias("__f"),
-                F.col("_metadata.row_index").alias("__p"),
-                # files carry physical names; merge keys speak logical
-                *[F.col(_phys_col(props, k)).alias(k) for k in keys],
-            )
-            hits = tgt.join(
-                F.broadcast(source.select(*keys).distinct()), keys, "left_semi"
-            ).select("__f", "__p")
-        else:  # every file pruned: pure-insert batch, no positions to scan
-            hits = spark.createDataFrame([], "__f: string, __p: bigint")
-        gen = uuid.uuid4().hex[:8]
-        data_dir = _data_dir(path)
+    _refuse_partitioned(path, "txn_merge_dv")
+    probe = F.broadcast(source.select(*keys).distinct())
 
-        def _write_dv(key_row, pdf):
-            from dbimport_spark.txnlog import _dv_decode as dec, _dv_encode as enc
-
-            n = key_row[0]
-            positions = set(int(p) for p in pdf["__p"])
-            old = old_dvs.get(n)
-            if old:
-                with open(os.path.join(data_dir, old), "rb") as fh:
-                    positions.update(dec(fh.read()))
-            name = f"{n}.dv.{gen}"
-            tmp = os.path.join(data_dir, f".tmp-{name}")
-            with open(tmp, "wb") as fh:
-                fh.write(enc(positions))
-            os.replace(tmp, os.path.join(data_dir, name))
-            return pd.DataFrame({"n": [n], "d": [name], "k": [len(positions)]})
-
-        entries = (
-            hits.groupBy("__f")
-            .applyInPandas(_write_dv, "n string, d string, k long")
-            .collect()
+    def hits(scan):
+        return (
+            scan.select("__f", "__p", *keys)
+            .join(probe, keys, "left_semi")
+            .select("__f", "__p")
         )
-        dv = [{"n": r["n"], "d": r["d"], "k": int(r["k"])} for r in entries]
-        added = _stage(spark, source, path)
-        _validate_staged(spark, path, added)
-        try:
-            return commit(
-                path, added, [], base_v, dv=dv or None, op="MERGE_DV"
-            )
-        except TxnConflict:
-            # lost the race: the never-committed generation is invisible
-            # to vacuum — reap our own sidecars AND staged data files
-            # (both known by name) before re-merging the new snapshot.
-            for e in dv:
-                try:
-                    os.remove(os.path.join(data_dir, e["d"]))
-                except FileNotFoundError:
-                    pass
-            _drop_staged(path, added)
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries DV-merging into {path}")
+
+    return _dv_rewrite(
+        spark, path, "MERGE_DV", hits, max_retries,
+        where=_merge_where(path, source, keys), source=source,
+    )
 
 
 def txn_merge_into(
-    spark, source: DataFrame, path: str, keys, clauses, max_retries: int = 3,
-    app_id: str | None = None, batch_id: int | None = None,
+    spark, source: DataFrame, path: str, keys, clauses,
+    txn: tuple[str, int] | None = None, max_retries: int = 3,
 ) -> int:
     """Transactional full MERGE INTO (operators/merge.merge_into clause
     semantics — matched update/delete, not-matched insert, not-matched-
     by-source update/delete, first-match-wins): apply the clause lattice
-    against the current snapshot and commit the result as {add: new
-    files, remove: all previous live files}, like txn_upsert. This is
-    the whole-snapshot form — by-source clauses inspect every target
-    row by definition, so there is nothing to prune; merges WITHOUT
-    by-source clauses that only touch a key band belong with
-    txn_merge_cow / txn_merge_dv.
+    to the target and commit the result as {add: new files, remove: the
+    files it replaced}, like txn_upsert.
 
-    ``app_id``/``batch_id`` make the merge EXACTLY-ONCE for streaming
-    CDC apply (foreachBatch): the commit atomically records the
-    ``txn.<app>`` watermark with the merged result, and a redelivered
-    batch no-ops — unlike an append, a REPLAYED merge is not even
-    idempotent in the best case (a matched_update re-applying
-    ``t.val + 1`` double-counts; a not_matched_insert re-inserting
-    under by-source-delete clauses flips rows), so the watermark is the
-    only correct redelivery story."""
+    Without by-source clauses every clause needs a SOURCE match, so the
+    merge prunes like txn_upsert (_merge_where): only files that may hold
+    a source key are read and rewritten, and a streaming CDC apply batch
+    costs O(touched band). By-source clauses inspect every target row,
+    so they rewrite the whole snapshot.
+
+    ``txn=(app_id, batch_id)`` makes the merge EXACTLY-ONCE for streaming
+    CDC apply (foreachBatch), the same contract as txn_append: the commit
+    atomically records the ``txn.<app>`` watermark with the merged
+    result, and a redelivered batch no-ops — unlike an append, a REPLAYED
+    merge is not even idempotent in the best case (a matched_update
+    re-applying ``t.val + 1`` double-counts; a not_matched_insert
+    re-inserting under by-source-delete clauses flips rows), so the
+    watermark is the only correct redelivery story."""
     from dbimport_spark.operators.merge import merge_into
 
-    if (app_id is None) != (batch_id is None):
-        raise ValueError("txn_merge_into: pass app_id and batch_id together")
-    _refuse_partitioned(path, "txn_merge_into")
-    for _ in range(max_retries):
-        if app_id is not None and batch_id <= last_committed_batch(path, app_id):
-            return current_version(path)  # redelivered batch: done
-        base_v = current_version(path)
-        if base_v < 0:
-            raise ValueError(f"merge target {path} has no committed version")
-        target = read_snapshot(spark, path, base_v)
-        old_files = [os.path.basename(f) for f in snapshot_files(path, base_v)]
-        merged = merge_into(target, source, keys, clauses)
-        added = _stage(spark, merged, path)
-        _validate_staged(spark, path, added)
-        props = {f"txn.{app_id}": str(batch_id)} if app_id is not None else None
-        try:
-            v = commit(
-                path, added, old_files, base_v, props=props, op="MERGE"
-            )
-            _maybe_write_change_data(spark, path, v, old_files, added, base_v)
-            return v
-        except TxnConflict:
-            # lost the race: drop our invisible staged files and re-merge
-            # against the new snapshot (the skip check re-runs first — the
-            # rival may have been the SAME app landing this batch)
-            _drop_staged(path, added)
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries merging into {path}")
-
-
-def txn_merge_into_cow(
-    spark, source: DataFrame, path: str, keys, clauses,
-    prune_key: str | None = None, max_retries: int = 3,
-    app_id: str | None = None, batch_id: int | None = None,
-) -> int:
-    """PRUNED clause MERGE — txn_merge_into's scale path: only files
-    that MAY contain a source key (zone-map / bloom candidacy, exactly
-    txn_merge_cow's pruning) are read and rewritten; the clause
-    lattice applies to that slice and non-candidates keep their
-    identity. Sound because every clause kind here needs a SOURCE match:
-    by-source clauses (not_matched_by_source_*) inspect rows with NO
-    source key and are therefore REFUSED — they belong to the
-    whole-snapshot txn_merge_into by definition. At 100 TB a streaming
-    CDC apply batch costs O(touched band), not a table rewrite.
-
-    ``app_id``/``batch_id`` give the same exactly-once redelivery
-    watermark as txn_merge_into."""
-    from dbimport_spark.operators.merge import merge_into
-
-    for c in clauses:
-        if c[0].startswith("not_matched_by_source"):
-            raise ValueError(
-                "txn_merge_into_cow: by-source clauses inspect every "
-                "target row — there is nothing to prune; use "
-                "txn_merge_into (whole-snapshot)"
-            )
-    if (app_id is None) != (batch_id is None):
-        raise ValueError("txn_merge_into_cow: pass app_id and batch_id together")
     keys = list(keys)
-    pk = prune_key or (keys[0] if len(keys) == 1 else None)
-    if pk is None:
-        raise ValueError("txn_merge_into_cow: pass prune_key for composite keys")
-    where = {pk: [r[0] for r in source.select(pk).distinct().collect()]}
-    for _ in range(max_retries):
-        if app_id is not None and batch_id <= last_committed_batch(path, app_id):
-            return current_version(path)  # redelivered batch: done
-        base_v = current_version(path)
-        if base_v < 0:
-            raise ValueError(f"merge target {path} has no committed version")
-        live, ptype, props = _fold_log3(path, base_v)
-        if ptype is not None:
-            raise ValueError(
-                "txn_merge_into_cow: partitioned tables are not supported"
-            )
-        cand = _candidates(path, live, props, where)
-        if cand:
-            target_slice = _scan_snapshot(
-                spark, path, {n: live[n] for n in cand}, None, props
-            )
-        else:
-            target_slice = read_snapshot(spark, path, base_v).limit(0)
-        merged = merge_into(target_slice, source, keys, clauses)
-        added = _stage(spark, merged, path)
-        _validate_staged(spark, path, added)
-        extra = {f"txn.{app_id}": str(batch_id)} if app_id is not None else None
-        try:
-            return commit(path, added, cand, base_v, props=extra, op="MERGE")
-        except TxnConflict:
-            _drop_staged(path, added)
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries merging into {path}")
+    by_source = any(c[0].startswith("not_matched_by_source") for c in clauses)
+    where = None if by_source else _merge_where(path, source, keys)
+
+    def build(target):
+        return merge_into(target, source, keys, clauses)
+
+    return _rewrite(
+        spark, path, "MERGE",
+        lambda live, props: (_pruned(path, live, props, where), build),
+        max_retries, validate=True, txn=txn,
+    )

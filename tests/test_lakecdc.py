@@ -792,3 +792,87 @@ def test_pruned_change_data_matches_unpruned(spark, tmp_path):
         ],
         key=lambda x: (x[0] is None, x),
     )
+
+
+def test_pruned_rewrites_write_change_data_equal_to_fallback(spark, tmp_path):
+    """A pruned delete (``where=``) and a pruned upsert (zone maps on the
+    merge key) on a cdf.enabled table write change files, and their rows
+    are exactly the reader's on-read fallback diff."""
+    import shutil
+
+    path = str(tmp_path / "t")
+    txnlog.txn_set_property(path, "cdf.enabled", "true")
+    txnlog.txn_set_property(path, "write.statsColumns", "k")
+    for m in range(3):  # k bands [0, 27], [1, 28], [2, 29] → overlap
+        _append(spark, path, m)
+    for b in range(3):  # three disjoint bands above them
+        df = spark.range(100 * (b + 1), 100 * (b + 1) + 10).select(
+            F.col("id").alias("k"), F.lit(f"b{b}").alias("tag")
+        )
+        txnlog.txn_append(spark, df, path)
+
+    def pruned(rewrite):
+        n_live = len(txnlog.snapshot_files(path))
+        v = rewrite()
+        assert 0 < txnlog.table_history(path)[0]["n_removed"] < n_live
+        d = os.path.join(path, "_change_data", f"v{v:08d}")
+        assert any(f.endswith(".parquet") for f in os.listdir(d))
+        return v
+
+    v_del = pruned(
+        lambda: txnlog.txn_delete(
+            spark, F.col("k").between(100, 104), path, where={"k": (100, 104)}
+        )
+    )
+    src = spark.createDataFrame(
+        [(201, "UP"), (202, "UP"), (999, "NEW")], "k long, tag string"
+    )
+    v_up = pruned(lambda: txnlog.txn_upsert(spark, src, path, ["k"]))
+
+    def feed(tag):
+        got = _drain_cdf(
+            spark, path, str(tmp_path / f"cp{tag}"), str(tmp_path / f"s{tag}")
+        )
+        return sorted(
+            (r._commit_version, r.k, r.tag, r._change_type)
+            for r in got.filter(F.col("_commit_version") >= v_del).collect()
+        )
+
+    from_files = feed("files")
+    for v in (v_del, v_up):
+        shutil.rmtree(os.path.join(path, "_change_data", f"v{v:08d}"))
+    assert from_files == feed("fallback")
+    assert from_files == sorted(
+        [(v_del, k, "b0", "delete") for k in range(100, 105)]
+        + [
+            (v_up, 201, "b1", "delete"), (v_up, 201, "UP", "insert"),
+            (v_up, 202, "b1", "delete"), (v_up, 202, "UP", "insert"),
+            (v_up, 999, "NEW", "insert"),
+        ]
+    )
+
+
+def test_cdf_prune_gate_fallback_matches_pruned(spark, tmp_path, monkeypatch):
+    """Past _CDF_PRUNE_BROADCAST_MAX the change-data diff skips the
+    source-key prune; its change files equal the pruned diff's."""
+
+    def change_rows(t):
+        v = txnlog.current_version(t)
+        d = os.path.join(t, "_change_data", f"v{v:08d}")
+        return sorted(
+            (r.k, r.tag, r._change_type) for r in spark.read.parquet(d).collect()
+        )
+
+    src = spark.createDataFrame(
+        [(3, "UP"), (6, "v0"), (99, "NEW")], "k long, tag string"
+    )
+    tables = {}
+    for name, bound in (("pruned", txnlog._CDF_PRUNE_BROADCAST_MAX), ("gated", 0)):
+        t = tables[name] = str(tmp_path / name)
+        txnlog.txn_set_property(t, "cdf.enabled", "true")
+        _append(spark, t, 0)
+        monkeypatch.setattr(txnlog, "_CDF_PRUNE_BROADCAST_MAX", bound)
+        txnlog.txn_upsert(spark, src, t, ["k"])
+    assert change_rows(tables["gated"]) == change_rows(tables["pruned"]) == [
+        (3, "UP", "insert"), (3, "v0", "delete"), (99, "NEW", "insert"),
+    ]

@@ -252,8 +252,8 @@ def test_partitioned_upsert_carries_untouched_files(spark, table):
     )
     before = txnlog.snapshot_partitions(table)
     # upsert touches only partition A (update k=2, insert k=5)
-    txnlog.txn_upsert_partitioned(
-        spark, _pdf(spark, [(2, "A", "A2"), (5, "A", "A5")]), table, ["k"], "p"
+    txnlog.txn_upsert(
+        spark, _pdf(spark, [(2, "A", "A2"), (5, "A", "A5")]), table, ["k", "p"]
     )
     after = txnlog.snapshot_partitions(table)
     # B and C files carry over BY NAME; every A file was replaced
@@ -346,8 +346,8 @@ def test_every_read_refuses_vacuumed_versions(spark, table):
         part,
         props={"partition.column": "p"},
     )
-    txnlog.txn_upsert_partitioned(
-        spark, _pdf(spark, [(1, "A", "a2")]), part, ["k"], "p"
+    txnlog.txn_upsert(
+        spark, _pdf(spark, [(1, "A", "a2")]), part, ["k", "p"]
     )
     txnlog.txn_append(
         spark,
@@ -389,13 +389,101 @@ def test_cdf_prune_with_tk_named_column(spark, table):
     assert got == [(2, "B", "insert"), (2, "b", "delete"), (3, "c", "insert")]
 
 
+def test_dml_surface_signatures():
+    """The DML and compaction surface is six entry points; a new variant
+    or knob shows up here as a diff."""
+    import inspect
+
+    want = {
+        "txn_delete": [
+            ("spark", None), ("pred", None), ("path", None),
+            ("where", None), ("max_retries", 3),
+        ],
+        "txn_upsert": [
+            ("spark", None), ("source", None), ("path", None), ("keys", None),
+            ("max_retries", 3),
+        ],
+        "txn_merge_into": [
+            ("spark", None), ("source", None), ("path", None), ("keys", None),
+            ("clauses", None), ("txn", None), ("max_retries", 3),
+        ],
+        "txn_delete_dv": [
+            ("spark", None), ("pred", None), ("path", None),
+            ("where", None), ("max_retries", 3),
+        ],
+        "txn_merge_dv": [
+            ("spark", None), ("source", None), ("path", None), ("keys", None),
+            ("max_retries", 3),
+        ],
+        "txn_compact": [
+            ("spark", None), ("path", None), ("target_file_bytes", 128 << 20),
+            ("min_files", 2), ("max_retries", 3),
+        ],
+    }
+    for name, params in want.items():
+        sig = inspect.signature(getattr(txnlog, name))
+        got = [
+            (p.name, None if p.default is inspect.Parameter.empty else p.default)
+            for p in sig.parameters.values()
+        ]
+        assert got == params, name
+    dml = {
+        n for n in dir(txnlog)
+        if n.startswith(("txn_delete", "txn_upsert", "txn_merge", "txn_compact"))
+    }
+    assert dml == set(want)
+
+
+def test_upsert_releases_only_the_source_it_cached(spark, table):
+    """txn_upsert persists an uncached source for its merge and releases
+    it on return; a source the caller cached stays cached."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    txnlog.txn_append(spark, _df(spark, [(1, "a"), (2, "b")]), table)
+    n0 = persistent().size()
+    src = _df(spark, [(2, "B")])
+    txnlog.txn_upsert(spark, src, table, ["k"])
+    assert not src.is_cached
+    assert persistent().size() == n0
+    mine = _df(spark, [(3, "c")]).cache()
+    mine.count()
+    try:
+        txnlog.txn_upsert(spark, mine, table, ["k"])
+        assert mine.is_cached
+        assert persistent().size() == n0 + 1
+    finally:
+        mine.unpersist()
+    now = {r.k: r.v for r in txnlog.read_snapshot(spark, table).collect()}
+    assert now == {1: "a", 2: "B", 3: "c"}
+
+
+def test_change_data_write_failure_is_logged(spark, table, monkeypatch, caplog):
+    """A failed change-data write leaves the commit in place and a
+    warning naming the table, the version and the error."""
+    import logging
+
+    txnlog.txn_set_property(table, "cdf.enabled", "true")
+    txnlog.txn_append(spark, _df(spark, [(1, "a")]), table)
+
+    def boom(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(txnlog, "_write_change_data", boom)
+    with caplog.at_level(logging.WARNING, logger="dbimport_spark.txnlog"):
+        v = txnlog.txn_upsert(spark, _df(spark, [(1, "b")]), table, ["k"])
+    assert v == txnlog.current_version(table) == 2
+    assert not os.path.isdir(os.path.join(table, "_change_data"))
+    [rec] = [r for r in caplog.records if r.name == "dbimport_spark.txnlog"]
+    assert table in rec.getMessage() and "version 2" in rec.getMessage()
+    assert "disk full" in rec.getMessage()
+
+
 def test_partitioned_upsert_into_new_partition(spark, table):
     txnlog.txn_append(
         spark, _pdf(spark, [(1, "A", "a")]), table, props={"partition.column": "p"}
     )
     # source lands entirely in a partition that doesn't exist yet
-    txnlog.txn_upsert_partitioned(
-        spark, _pdf(spark, [(9, "Z", "z")]), table, ["k"], "p"
+    txnlog.txn_upsert(
+        spark, _pdf(spark, [(9, "Z", "z")]), table, ["k", "p"]
     )
     now = {
         r["k"]: r["p"]
@@ -490,12 +578,10 @@ def test_partitioned_int_type_roundtrips(spark, table):
     assert dict(back.dtypes)["p"] == "int"
     assert {r["p"] for r in back.collect()} == {5, 7}
     # upsert keyed into the int partition matches the touched files
-    txnlog.txn_upsert_partitioned(
+    txnlog.txn_upsert(
         spark,
         spark.createDataFrame([(1, 5, "A")], "k long, p int, v string"),
-        table,
-        ["k"],
-        "p",
+        table, ["k", "p"],
     )
     now = {
         r["k"]: r["v"]
@@ -536,12 +622,10 @@ def test_partitioned_hive_escaped_and_null_values(spark, table):
     esc = txnlog.read_snapshot(spark, table, where={"p": ["a:b c"]})
     assert [r["k"] for r in esc.collect()] == [1]
     # upsert into the escaped partition replaces only its files
-    txnlog.txn_upsert_partitioned(
+    txnlog.txn_upsert(
         spark,
         spark.createDataFrame([(1, "a:b c", "X")], "k long, p string, v string"),
-        table,
-        ["k"],
-        "p",
+        table, ["k", "p"],
     )
     now = {
         r["k"]: r["v"]
@@ -1289,20 +1373,42 @@ class TestDeletionVectors:
         pr = txnlog.read_snapshot(spark, table, where={"p": ["x"]})
         assert {r["k"] for r in pr.collect()} == {6, 8}
 
-    def test_whole_rewrite_forms_refuse_partitioned_tables(self, spark, table):
-        """txn_delete / txn_upsert / txn_compact / manifest export would
-        strip the log-carried partition values — they must refuse loudly,
-        never silently convert the table."""
-        df = spark.createDataFrame([(1, "x"), (2, "y")], "k long, p string")
+    def test_rewrite_forms_keep_partition_values(self, spark, table):
+        """Every copy-on-write verb stages through the table's layout, so
+        its rewrite of a partitioned table keeps the log-carried partition
+        values (read back, and found by partition pruning). The manifest
+        export and the merge-on-read merge, which cannot carry them,
+        still refuse."""
+        schema = "k long, v string, p string"
+        df = spark.createDataFrame(
+            [(1, "a", "x"), (2, "b", "y"), (3, "c", "x")], schema
+        )
         txnlog.txn_append(spark, df, table, props={"partition.column": "p"})
-        with pytest.raises(ValueError, match="partition"):
-            txnlog.txn_delete(spark, F.col("k") == 1, table)
-        with pytest.raises(ValueError, match="partition"):
-            txnlog.txn_upsert(spark, df, table, ["k"])
-        with pytest.raises(ValueError, match="partition"):
-            txnlog.txn_compact(spark, table)
+
+        def rows(where=None):
+            snap = txnlog.read_snapshot(spark, table, where=where)
+            return sorted((r.k, r.v, r.p) for r in snap.collect())
+
+        txnlog.txn_delete(spark, F.col("k") == 1, table)
+        assert rows() == [(2, "b", "y"), (3, "c", "x")]
+        txnlog.txn_upsert(
+            spark, spark.createDataFrame([(2, "B", "y"), (4, "d", "x")], schema),
+            table, ["k"],
+        )
+        assert rows() == [(2, "B", "y"), (3, "c", "x"), (4, "d", "x")]
+        txnlog.txn_merge_into(
+            spark, spark.createDataFrame([(3, "C", "x")], schema), table, ["k"],
+            [("matched_update", None, {"v": "s.v"})],
+        )
+        assert rows({"p": ["x"]}) == [(3, "C", "x"), (4, "d", "x")]
+        txnlog.txn_append(spark, spark.createDataFrame([(5, "e", "y")], schema), table)
+        txnlog.txn_compact(spark, table, target_file_bytes=1 << 30)
+        assert rows({"p": ["y"]}) == [(2, "B", "y"), (5, "e", "y")]
+        assert set(txnlog.snapshot_partitions(table).values()) == {"x", "y"}
         with pytest.raises(ValueError, match="partition"):
             txnlog.export_symlink_manifest(table)
+        with pytest.raises(ValueError, match="partition"):
+            txnlog.txn_merge_dv(spark, df, table, ["k"])
 
     def test_checkpoint_carries_dv_references(self, spark, table):
         self._seed(spark, table)
@@ -1338,11 +1444,11 @@ class TestCopyOnWriteDML:
             # mirroring txnlog._candidates
             if st.get("__rows__") != 0 and (st.get("k") is None or st["k"][0] <= 24)
         }
-        txnlog.txn_delete_cow(
+        txnlog.txn_delete(
             spark,
             (F.col("k") <= 24) & (F.col("k") % 2 == 0),
             table,
-            zone=("k", 0, 24),
+            where={"k": (0, 24)},
         )
         after = _inodes(table)
         # every non-candidate file survives IDENTICALLY (name + inode)
@@ -1364,7 +1470,7 @@ class TestCopyOnWriteDML:
         other = str(tmp_path / "whole")
         txnlog.txn_append(spark, df, other)
         pred = (F.col("k") >= 30) & (F.col("k") < 40) & (F.col("v") == "1")
-        txnlog.txn_delete_cow(spark, pred, table, zone=("k", 30, 39))
+        txnlog.txn_delete(spark, pred, table, where={"k": (30, 39)})
         txnlog.txn_delete(spark, pred, other)
         a = sorted((r["k"], r["v"]) for r in txnlog.read_snapshot(spark, table).collect())
         b = sorted((r["k"], r["v"]) for r in txnlog.read_snapshot(spark, other).collect())
@@ -1374,8 +1480,8 @@ class TestCopyOnWriteDML:
         self._ranged(spark, table)
         v = txnlog.current_version(table)
         assert (
-            txnlog.txn_delete_cow(
-                spark, F.col("k") == -5, table, zone=("k", -10, -1)
+            txnlog.txn_delete(
+                spark, F.col("k") == -5, table, where={"k": (-10, -1)}
             )
             == v
         )
@@ -1385,11 +1491,11 @@ class TestCopyOnWriteDML:
         txnlog.txn_delete_dv(spark, F.col("k").isin(3, 60), table)
         # CoW-rewrite band 0 only: its DV must not resurrect k=3, and the
         # untouched band-2 file keeps its DV working
-        txnlog.txn_delete_cow(
+        txnlog.txn_delete(
             spark,
             (F.col("k") <= 24) & (F.col("k") % 2 == 0),
             table,
-            zone=("k", 0, 24),
+            where={"k": (0, 24)},
         )
         snap = txnlog.read_snapshot(spark, table)
         assert snap.filter("k = 3").count() == 0
@@ -1405,8 +1511,8 @@ class TestCopyOnWriteDML:
             "k long, v string",
         )
         before = _inodes(table)
-        txnlog.txn_merge_cow(spark, src, table, ["k"])
-        txnlog.txn_upsert(spark, src, other, ["k"])
+        txnlog.txn_upsert(spark, src, table, ["k"])  # zone maps on k: pruned
+        txnlog.txn_upsert(spark, src, other, ["k"])  # no metadata: whole
         a = sorted((r["k"], r["v"]) for r in txnlog.read_snapshot(spark, table).collect())
         b = sorted((r["k"], r["v"]) for r in txnlog.read_snapshot(spark, other).collect())
         assert a == b
@@ -1434,7 +1540,7 @@ class TestCopyOnWriteDML:
             )
         src = spark.createDataFrame([(0, "U"), (500, "N")], "k long, v string")
         before = _inodes(table)
-        txnlog.txn_merge_cow(spark, src, table, ["k"])
+        txnlog.txn_upsert(spark, src, table, ["k"])
         after = _inodes(table)
         # at most the files whose bloom admits key 0 were rewritten; at
         # least one of the three hash-spread files must have been pruned
@@ -1444,11 +1550,23 @@ class TestCopyOnWriteDML:
         assert snap.count() == 91
         assert {r["v"] for r in snap.filter("k IN (0, 500)").collect()} == {"U", "N"}
 
-    def test_cow_merge_composite_keys_need_prune_key(self, spark, table):
+    def test_cow_merge_composite_keys_prune_on_indexed_key(self, spark, table):
+        """A composite merge key prunes on the key columns the table keeps
+        metadata for (``k``'s zone maps), never on the others."""
         self._ranged(spark, table)
-        src = spark.createDataFrame([(1, "x", "y")], "k long, v string, w string")
-        with pytest.raises(ValueError, match="prune_key"):
-            txnlog.txn_merge_cow(spark, src, table, ["k", "v"])
+        before = _inodes(table)
+        src = spark.createDataFrame([(1, "1"), (2, "9")], "k long, v string")
+        txnlog.txn_upsert(spark, src, table, ["k", "v"])
+        after = _inodes(table)
+        band0 = {
+            n for n, st in txnlog.snapshot_stats(table, version=3).items()
+            if st.get("k") is not None and st["k"][0] <= 2
+        }
+        assert band0 and all(after.get(n) == before[n] for n in set(before) - band0)
+        assert not band0 & set(txnlog.snapshot_stats(table))
+        snap = txnlog.read_snapshot(spark, table).filter("k <= 2")
+        rows = sorted((r.k, r.v) for r in snap.collect())
+        assert rows == [(0, "0"), (1, "1"), (2, "2"), (2, "9")]
 
 
 class TestCheckConstraints:
@@ -1509,10 +1627,11 @@ class TestCheckConstraints:
         bad = spark.createDataFrame([(5000, "nope")], "k long, v string")
         with pytest.raises(txnlog.CheckViolation):
             txnlog.txn_upsert(spark, bad, table, ["k"])
+        insert = [("not_matched_insert", None, "all")]
         with pytest.raises(txnlog.CheckViolation):
-            txnlog.txn_merge_cow(spark, bad, table, ["k"])
+            txnlog.txn_merge_into(spark, bad, table, ["k"], insert)
         ok = spark.createDataFrame([(5, "upd")], "k long, v string")
-        txnlog.txn_merge_cow(spark, ok, table, ["k"])
+        txnlog.txn_upsert(spark, ok, table, ["k"])
         assert txnlog.read_snapshot(spark, table).filter("v = 'upd'").count() == 1
 
     def test_routed_append_quarantines_with_reasons(self, spark, table, tmp_path):
@@ -1570,14 +1689,14 @@ class TestCheckConstraints:
         with pytest.raises(txnlog.CheckViolation, match="p_known"):
             txnlog.txn_append(spark, bad_p, table, props={"partition.column": "p"})
         with pytest.raises(txnlog.CheckViolation):
-            txnlog.txn_upsert_partitioned(spark, bad_k, table, ["k"], "p")
+            txnlog.txn_upsert(spark, bad_k, table, ["k", "p"])
         # clean rows still land on both paths
         ok = spark.createDataFrame([(5, "y")], "k long, p string")
         txnlog.txn_append(spark, ok, table, props={"partition.column": "p"})
-        txnlog.txn_upsert_partitioned(
+        txnlog.txn_upsert(
             spark,
             spark.createDataFrame([(5, "y"), (6, "x")], "k long, p string"),
-            table, ["k"], "p",
+            table, ["k", "p"],
         )
         assert txnlog.read_snapshot(spark, table).count() == 3
         # a fresh table's FIRST commit enforces pre-declared checks on the
@@ -1766,9 +1885,10 @@ def test_symlink_manifest_roundtrip_and_dv_refusal(spark, table):
 
 
 def test_partitioned_compaction_is_per_partition(spark, table):
-    """txn_compact_partitioned merges small files WITHIN each value and
-    leaves already-compact partitions untouched (name + inode identity);
-    DVs on rewritten partitions materialize; content is invariant."""
+    """txn_compact merges a partitioned table's small files WITHIN each
+    value and leaves already-compact partitions untouched (name + inode
+    identity); DVs on rewritten partitions materialize; content is
+    invariant."""
     df = spark.createDataFrame(
         [(k, "hot" if k < 20 else "cold", k) for k in range(30)],
         "k long, p string, v long",
@@ -1792,7 +1912,7 @@ def test_partitioned_compaction_is_per_partition(spark, table):
     parts_before = txnlog.snapshot_partitions(table)
     cold_before = {n for n, p in parts_before.items() if p == "cold"}
     inodes = _inodes(table)
-    v = txnlog.txn_compact_partitioned(spark, table, target_file_bytes=1 << 30)
+    v = txnlog.txn_compact(spark, table, target_file_bytes=1 << 30)
 
     parts_after = txnlog.snapshot_partitions(table)
     # cold partition untouched (single compact file, no DV)
@@ -1808,11 +1928,11 @@ def test_partitioned_compaction_is_per_partition(spark, table):
     # partition pruning still works on the rewritten files
     pr = txnlog.read_snapshot(spark, table, where={"p": ["hot"]})
     assert pr.count() == 19
-    # unpartitioned tables transparently take the plain compactor
+    # an unpartitioned table is one group
     t2 = table + "_plain"
     txnlog.txn_append(spark, spark.range(5).selectExpr("id AS k"), t2)
     txnlog.txn_append(spark, spark.range(5, 10).selectExpr("id AS k"), t2)
-    txnlog.txn_compact_partitioned(spark, t2, target_file_bytes=1 << 30)
+    txnlog.txn_compact(spark, t2, target_file_bytes=1 << 30)
     assert len(txnlog.snapshot_files(t2)) == 1
 
 
@@ -1824,11 +1944,11 @@ def test_change_feed_on_partitioned_tables(spark, table):
         [(1, "a", "x"), (2, "b", "y")], "k long, v string, p string"
     )
     txnlog.txn_append(spark, df, table, props={"partition.column": "p"})       # v0
-    txnlog.txn_upsert_partitioned(
+    txnlog.txn_upsert(
         spark,
         spark.createDataFrame([(2, "B2", "y"), (3, "c", "x")],
                               "k long, v string, p string"),
-        table, ["k"], "p",
+        table, ["k", "p"],
     )                                                          # v1
     got = {
         (r["k"], r["_change_type"]): (r["v"], r["p"])
@@ -1915,10 +2035,10 @@ def test_restore_partitioned_table(spark, table):
         [(1, "a", "x"), (2, "b", "y")], "k long, v string, p string"
     )
     txnlog.txn_append(spark, df, table, props={"partition.column": "p"})       # v0
-    txnlog.txn_upsert_partitioned(
+    txnlog.txn_upsert(
         spark,
         spark.createDataFrame([(9, "z", "x")], "k long, v string, p string"),
-        table, ["k"], "p",
+        table, ["k", "p"],
     )                                                          # v1: x rewritten
     txnlog.txn_restore(table, 0)                               # v2
     snap = txnlog.read_snapshot(spark, table)
@@ -2169,7 +2289,7 @@ class TestDvDmlPruning:
         try:
             v = txnlog.txn_delete_dv(
                 spark, (F.col("k") <= 24) & (F.col("k") % 2 == 0), table,
-                zone=("k", 0, 24),
+                where={"k": (0, 24)},
             )
         finally:
             self._restore(table, moved)
@@ -2200,7 +2320,7 @@ class TestDvDmlPruning:
         other = str(tmp_path / "twin")
         self._ranged(spark, other)
         pred = (F.col("k") >= 30) & (F.col("k") < 40) & (F.col("v") == "1")
-        txnlog.txn_delete_dv(spark, pred, table, zone=("k", 30, 39))
+        txnlog.txn_delete_dv(spark, pred, table, where={"k": (30, 39)})
         txnlog.txn_delete_dv(spark, pred, other)
         a = sorted((r["k"], r["v"]) for r in txnlog.read_snapshot(spark, table).collect())
         b = sorted((r["k"], r["v"]) for r in txnlog.read_snapshot(spark, other).collect())
@@ -2211,7 +2331,7 @@ class TestDvDmlPruning:
         v = txnlog.current_version(table)
         assert (
             txnlog.txn_delete_dv(
-                spark, F.col("k") == -5, table, zone=("k", -10, -1)
+                spark, F.col("k") == -5, table, where={"k": (-10, -1)}
             )
             == v
         )
@@ -2561,7 +2681,7 @@ class TestColumnMapping:
         txnlog.txn_append(spark, df, table, props={"write.statsColumns": "k"})
         txnlog.txn_rename_column(spark, table, "k", "key")
         txnlog.txn_delete_dv(
-            spark, F.col("key") < 10, table, zone=("key", 0, 9)
+            spark, F.col("key") < 10, table, where={"key": (0, 9)}
         )
         snap = txnlog.read_snapshot(spark, table)
         assert snap.count() == 90
@@ -2733,13 +2853,13 @@ class TestMergeIntoTxn:
         src = spark.createDataFrame([(1, 0, "U")], "k long, v long, op string")
         delta_clauses = [("matched_update", None, {"v": "t.v + 7"})]
         txnlog.txn_merge_into(
-            spark, src, table, ["k"], delta_clauses, app_id="cdc", batch_id=0
+            spark, src, table, ["k"], delta_clauses, txn=("cdc", 0)
         )
         assert {r.v for r in txnlog.read_snapshot(spark, table)
                 .filter("k = 1").collect()} == {17}
         # redelivery of batch 0: no-op, the delta must NOT re-apply
         txnlog.txn_merge_into(
-            spark, src, table, ["k"], delta_clauses, app_id="cdc", batch_id=0
+            spark, src, table, ["k"], delta_clauses, txn=("cdc", 0)
         )
         assert {r.v for r in txnlog.read_snapshot(spark, table)
                 .filter("k = 1").collect()} == {17}
@@ -2747,10 +2867,6 @@ class TestMergeIntoTxn:
         txnlog.txn_merge_into(spark, src, table, ["k"], delta_clauses)
         assert {r.v for r in txnlog.read_snapshot(spark, table)
                 .filter("k = 1").collect()} == {24}
-        with pytest.raises(ValueError, match="together"):
-            txnlog.txn_merge_into(
-                spark, src, table, ["k"], delta_clauses, app_id="cdc"
-            )
 
 
 @pytest.mark.parametrize("kind", _APPEND_KINDS)
@@ -2772,7 +2888,7 @@ class TestStatsColumnsProperty:
         # a rewrite re-records the declared stats
         if kind == "partitioned":
             txnlog.txn_delete_dv(spark, F.col("k") == 150, table)
-            txnlog.txn_compact_partitioned(spark, table, min_files=1)
+            txnlog.txn_compact(spark, table, min_files=1)
         else:
             txnlog.txn_delete(spark, F.col("k") == 150, table)
         stats = txnlog.snapshot_stats(table)
@@ -2781,7 +2897,7 @@ class TestStatsColumnsProperty:
         assert prof["n_rows"] == 104
         assert prof["min_k"] == 0 and prof["max_k"] == 199
         # compaction keeps them too
-        txnlog.txn_compact_partitioned(spark, table, min_files=1)
+        txnlog.txn_compact(spark, table, min_files=1)
         assert all(
             st.get("k") is not None
             for st in txnlog.snapshot_stats(table).values()
@@ -3028,8 +3144,14 @@ class TestMergeIntoCow:
             ("matched_update", None, {"v": "s.v"}),
             ("not_matched_insert", "s.op <> 'D'", {"k": "s.k", "v": "s.v"}),
         ]
-        txnlog.txn_merge_into_cow(spark, src, table, ["k"], clauses)
+        # the clone without its zone maps' property merges whole-snapshot
+        txnlog.txn_set_property(other, "write.statsColumns", None)
+        txnlog.txn_merge_into(spark, src, table, ["k"], clauses)
         txnlog.txn_merge_into(spark, src, other, ["k"], clauses)
+        assert (
+            txnlog.table_history(table)[0]["n_removed"]
+            < txnlog.table_history(other)[0]["n_removed"]
+        )
         a = sorted((r.k, r.v) for r in txnlog.read_snapshot(spark, table).collect())
         b = sorted((r.k, r.v) for r in txnlog.read_snapshot(spark, other).collect())
         assert a == b and len(a) == 100  # 100 - 1 deleted + 1 inserted
@@ -3046,7 +3168,7 @@ class TestMergeIntoCow:
         assert moved
         src = spark.createDataFrame([(10, "UPD", "U")], "k long, v string, op string")
         try:
-            txnlog.txn_merge_into_cow(
+            txnlog.txn_merge_into(
                 spark,
                 src,
                 table,
@@ -3059,35 +3181,35 @@ class TestMergeIntoCow:
         rows = {r.k: r.v for r in txnlog.read_snapshot(spark, table).collect()}
         assert rows[10] == "UPD" and len(rows) == 100
 
-    def test_by_source_clauses_refused(self, spark, table):
-        self._ranged(spark, table, bands=1)
+    def test_by_source_clauses_rewrite_whole_snapshot(self, spark, table):
+        """By-source clauses inspect rows no source key matches, so the
+        merge cannot prune: every live file is replaced."""
+        self._ranged(spark, table)
+        n_live = len(txnlog.snapshot_files(table))
         src = spark.createDataFrame([(1, "x", "U")], "k long, v string, op string")
-        with pytest.raises(ValueError, match="by-source"):
-            txnlog.txn_merge_into_cow(
-                spark, src, table, ["k"],
-                [("not_matched_by_source_delete", "t.k > 5")],
-            )
+        txnlog.txn_merge_into(
+            spark, src, table, ["k"],
+            [
+                ("matched_update", None, {"v": "s.v"}),
+                ("not_matched_by_source_delete", "t.k > 5"),
+            ],
+        )
+        assert txnlog.table_history(table)[0]["n_removed"] == n_live
+        rows = {r.k: r.v for r in txnlog.read_snapshot(spark, table).collect()}
+        assert rows == {0: "0", 1: "x", 2: "2", 3: "3", 4: "4", 5: "5"}
 
     def test_idempotent_watermark_shared_with_whole_snapshot_form(self, spark, table):
         self._ranged(spark, table, bands=1)
         src = spark.createDataFrame([(1, "A", "U")], "k long, v string, op string")
         clauses = [("matched_update", None, {"v": "s.v"})]
-        txnlog.txn_merge_into_cow(
-            spark,
-            src,
-            table,
-            ["k"],
-            clauses,
-            app_id="cdc",
-            batch_id=0,
-        )
+        txnlog.txn_merge_into(spark, src, table, ["k"], clauses, txn=("cdc", 0))
         v = txnlog.current_version(table)
-        # redelivery through EITHER form no-ops on the shared watermark
-        txnlog.txn_merge_into_cow(
-            spark, src, table, ["k"], clauses, app_id="cdc", batch_id=0
-        )
+        # redelivery no-ops on the watermark, pruned or whole-snapshot
+        txnlog.txn_merge_into(spark, src, table, ["k"], clauses, txn=("cdc", 0))
         txnlog.txn_merge_into(
-            spark, src, table, ["k"], clauses, app_id="cdc", batch_id=0
+            spark, src, table, ["k"],
+            clauses + [("not_matched_by_source_delete", None)],
+            txn=("cdc", 0),
         )
         assert txnlog.current_version(table) == v
 
@@ -3259,7 +3381,7 @@ def test_feature_interplay_kitchen_sink(spark, table):
     }
     txnlog.txn_delete_dv(
         spark, (F.col("amount") % 30 == 0) & (F.col("k") < 100), table,
-        zone=("k", 0, 99),
+        where={"k": (0, 99)},
     )
     after = {
         r.k: r._row_id

@@ -124,7 +124,7 @@ class LogProtocol(RuleBasedStateMachine):
     @rule(data=st.data())
     def cow_delete_one_file(self, data):
         """Rewrite ONE live file without a random subset of its visible
-        leaves — the txn_delete_cow shape (candidates = that file)."""
+        leaves — the shape of a pruned txn_delete (candidates = that file)."""
         live, _ = txnlog._fold_log(
             self.table, txnlog.current_version(self.table)
         )
